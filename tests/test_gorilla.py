@@ -6,11 +6,14 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from timeseriesflattener_spark.functions.gorilla import (
+    _decode_blobs,
+    _encode_group_frame,
     decode_chunks,
     decode_series,
     encode_chunks,
@@ -20,6 +23,8 @@ from timeseriesflattener_spark.sources.transcripts import (
     derive_channels,
     synthesize_transcripts,
 )
+
+from . import gorilla_reference as ref
 
 
 def _roundtrip(ts, vals):
@@ -48,6 +53,125 @@ def test_constant_series_compresses_well():
     vals = np.full(n, 42.0)
     blob = encode_series(ts, vals)
     assert len(blob) < n * 16 / 50  # >50x on constant+regular
+
+
+# ---------------------------------------------- differential vs reference
+#
+# The library has one batch codec; tests/gorilla_reference.py keeps the
+# per-chunk codec it replaced. Every chunk length that crosses a
+# 128-value block boundary is here, with series that hit width 0, width
+# 64, repeated timestamps, pre-epoch timestamps and special floats.
+
+_DIFF_NS = [1, 2, 3, 4, 5, 8, 64, 128, 129, 130, 131, 200, 256, 257, 258, 370, 1000, 4096]
+_DIFF_KINDS = ["random", "dense", "constant", "special", "pre_epoch", "zero_xor_runs"]
+_PRUNING = [(True, True), (True, False), (False, True), (False, False)]
+
+
+def _diff_series(n: int, kind: str) -> tuple[np.ndarray, np.ndarray]:
+    rng = np.random.default_rng(n * 31 + _DIFF_KINDS.index(kind))
+    if kind == "random":  # full-range dod and xor: widths up to 64
+        ts = np.sort(rng.integers(-(2**61), 2**61, n))
+        vals = rng.standard_normal(n) * 10.0 ** rng.integers(-300, 300, n)
+    elif kind == "dense":  # regular cadence with jitter, rounded values
+        ts = 1_700_000_000_000_000 + np.arange(n) * 60_000_000 + rng.integers(0, 1000, n)
+        vals = np.round(rng.standard_normal(n), 1)
+    elif kind == "constant":  # dod == 0 and xor == 0: every width is 0
+        ts = np.arange(n) * 1_000_000
+        vals = np.full(n, 42.0)
+    elif kind == "special":  # repeated timestamps, NaN / ±inf / ±0.0
+        ts = np.cumsum(rng.integers(0, 3, n))
+        vals = rng.choice([np.nan, np.inf, -np.inf, -0.0, 0.0, 1.0], n)
+    elif kind == "pre_epoch":  # negative µs, irregular gaps
+        ts = -2_000_000_000_000_000 + np.cumsum(rng.integers(1, 10**9, n))
+        vals = rng.standard_normal(n)
+    else:  # long runs of one value: whole blocks of zero XOR
+        ts = np.arange(n) * 5_000_000
+        vals = np.repeat(rng.standard_normal(n // 150 + 1), 150)[:n]
+    return ts.astype(np.int64), np.asarray(vals, dtype=np.float64)
+
+
+_DIFF_CASES = [(n, kind, *_diff_series(n, kind)) for n in _DIFF_NS for kind in _DIFF_KINDS]
+
+
+def _bits(a: np.ndarray) -> np.ndarray:
+    return np.ascontiguousarray(a, dtype=np.float64).view(np.uint64)
+
+
+def test_encode_matches_reference():
+    """Byte-identical chunks from the batch encoder (one frame holding
+    every case) and from encode_series."""
+    pdf = pd.concat(
+        [
+            pd.DataFrame({"conv_id": f"c{i:04d}", "chunk_start": 0, "__ts_micros": ts, "__value": v})
+            for i, (_, _, ts, v) in enumerate(_DIFF_CASES)
+        ],
+        ignore_index=True,
+    )
+    out = _encode_group_frame(pdf)
+    assert list(out["n_points"]) == [n for n, *_ in _DIFF_CASES]
+    for blob, (n, kind, ts, v) in zip(out["chunk"], _DIFF_CASES):
+        want = ref.encode_series(ts, v)
+        assert bytes(blob) == want, (n, kind)
+        assert encode_series(ts, v) == want, (n, kind)
+
+
+@pytest.mark.parametrize("need_ts,need_values", _PRUNING)
+def test_decode_matches_reference(need_ts, need_values):
+    """Bit-identical decodes from the batch decoder (one call over every
+    case) and from decode_series, under all four pruning combinations."""
+    blobs = [ref.encode_series(ts, v) for _, _, ts, v in _DIFF_CASES]
+    want = [ref.decode_series(b, need_ts, need_values) for b in blobs]
+    ns, ts_all, val_all = _decode_blobs(blobs, need_ts, need_values)
+    assert list(ns) == [n for n, *_ in _DIFF_CASES]
+    if need_ts:
+        assert np.array_equal(ts_all, np.concatenate([t for t, _ in want]))
+    else:
+        assert ts_all is None
+    if need_values:
+        assert np.array_equal(_bits(val_all), _bits(np.concatenate([v for _, v in want])))
+    else:
+        assert val_all is None
+    for blob, (t_ref, v_ref), (n, kind, *_) in zip(blobs, want, _DIFF_CASES):
+        t, v = decode_series(blob, need_ts, need_values)
+        assert t.dtype == np.int64 and np.array_equal(t, t_ref), (n, kind)
+        assert v.dtype == np.float64 and np.array_equal(_bits(v), _bits(v_ref)), (n, kind)
+
+
+def test_format_golden_chunk():
+    """A 5-point pre-epoch chunk with -0.0 and NaN, as the GORB v1
+    encoder has always written it."""
+    golden = bytes.fromhex(
+        "474f5242010500000000a028e2ebffffff000000000000f83f00879303000000"
+        "000300000001001b0b0000000000000000000b9386fe00040000000100402000"
+        "00000000000000000000bff8000000000000fff80000000000003ffa00000000"
+        "0000"
+    )
+    ts = np.array(
+        [-86_400_000_000, -86_340_000_000, -86_280_000_000, -86_219_999_999, -86_100_000_000]
+    )
+    vals = np.array([1.5, 1.5, -0.0, math.nan, 2.25])
+    assert encode_series(ts, vals) == golden
+    t, v = decode_series(golden)
+    assert np.array_equal(t, ts) and np.array_equal(_bits(v), _bits(vals))
+
+
+@pytest.mark.parametrize("n", [1, 2, 5, 300])
+def test_corrupt_chunks_rejected(n):
+    """A blob cut short, padded, or whose stream header disagrees with
+    its point count raises ValueError — it never decodes to wrong
+    values."""
+    ts = np.arange(n, dtype=np.int64) * 1_000_003
+    blob = encode_series(ts, np.sin(np.arange(n)))
+    bad = [blob[:-1], blob[:-3], blob + b"\x00", blob + b"\x00\x00\x00", blob[:4]]
+    if n >= 2:  # same length, ts stream count field off by one
+        count = int.from_bytes(blob[33:37], "little") + 1
+        bad.append(blob[:33] + count.to_bytes(4, "little") + blob[37:])
+    for b in bad:
+        with pytest.raises(ValueError):
+            decode_series(b)
+        for need_ts, need_values in _PRUNING:
+            with pytest.raises(ValueError):
+                _decode_blobs([blob, b], need_ts, need_values)
 
 
 @settings(max_examples=200, deadline=None)
@@ -134,12 +258,19 @@ def test_decode_column_pruning(spark, tmp_path):
 
     t0 = dt.datetime(2024, 1, 1)
     rows = [("c", i, t0 + dt.timedelta(hours=i), float(i) * 1.5) for i in range(30)]
+    # one 400-point chunk: four 128-value blocks per stream
+    rows += [
+        ("long", i, t0 + dt.timedelta(minutes=3 * i, microseconds=i % 7), math.sin(i) * 100)
+        for i in range(400)
+    ]
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int, ts timestamp, value double")
     chunks = encode_chunks(df, "value", tier="1d")
     chunks.write.parquet(str(tmp_path / "c"))
     chunks = spark.read.parquet(str(tmp_path / "c"))
+    assert 400 in {r["n_points"] for r in chunks.select("n_points").collect()}
 
     full = decode_chunks(chunks).collect()
+    assert sorted(map(tuple, full)) == sorted(map(tuple, df.drop("turn_idx").collect()))
     vals_only = decode_chunks(chunks, columns=["conv_id", "value"]).collect()
     ts_only = decode_chunks(chunks, columns=["conv_id", "ts"]).collect()
     assert sorted(r["value"] for r in vals_only) == sorted(r["value"] for r in full)

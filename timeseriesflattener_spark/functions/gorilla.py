@@ -1,11 +1,8 @@
 """Gorilla-style time-series chunk compression as Arrow-vectorized UDFs.
 
-Per the north rule: delta-of-delta timestamps + XOR float values stored
-as one ``binary`` chunk column per (conv_id, bucket) partition, with
-encode/decode running as pandas/Arrow batch UDFs — **no per-point
-Python**. Inside a chunk every per-point operation is a numpy kernel
-(diff/cumsum for timestamps, ``bitwise_xor.accumulate`` for the XOR
-prefix scan, ``packbits/unpackbits`` for the bitstream).
+Delta-of-delta timestamps + XOR float values, stored as one ``binary``
+chunk column per (conv_id, bucket), with encode and decode running
+inside ``mapInPandas`` — **no per-point Python**.
 
 Codec layout (``GORB`` v1): Facebook Gorilla's per-value variable-length
 control codes (Pelkonen et al., VLDB 2015) make *decoding* inherently
@@ -24,15 +21,30 @@ Chunk binary format (little-endian):
     n       u32 points
     first_ts i64 micros
     first_val u64 (raw IEEE bits; NaN-safe)
-    [ts stream]   first_delta i64, then block-packed zigzag(dod[2:])
+    -- only when n >= 2:
+    first_delta i64
+    [ts stream]   block-packed zigzag(dod) of the n-2 delta-of-deltas
     [val stream]  block-packed xor(v[i], v[i-1]) for i >= 1
     each stream:  u32 count, u16 n_blocks, widths u8[n_blocks],
-                  u32 payload_len, payload
+                  u32 payload_len, payload (each block's bits padded
+                  to a byte boundary)
+
+There is one codec path. Chunks with the same *layout* — point count
+and per-block widths — have the same byte layout, so a batch of chunks
+is grouped by layout and each group encodes or decodes as 2-D numpy
+kernels: one row per chunk, one ``_pack_rows``/``_unpack_rows`` call
+per 128-value block. Tier chunks are tiny (median 2 points at sf1.0),
+so per-chunk numpy calls would dominate; the only per-chunk Python left
+is reading the layout key and one ``bytes`` slice. ``encode_series`` /
+``decode_series`` are one-chunk calls into the same kernels. The
+decoder rejects any blob whose length or stream headers disagree with
+its layout.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import functools
 import struct
 from typing import Iterator
 
@@ -47,39 +59,11 @@ from ..plans.rollup import bucket_expr
 MAGIC = b"GORB"
 VERSION = 1
 BLOCK = 128
+_TAG = MAGIC + bytes([VERSION])
+_HEAD = 25  # magic, version, n, first_ts, first_val
+_STREAMS = 33  # _HEAD + first_delta: offset of the ts stream header
 
 # ---------------------------------------------------------------- bits
-
-
-def _bit_width(vals: np.ndarray) -> int:
-    """Bits needed for the widest value in a uint64 array."""
-    if len(vals) == 0:
-        return 0
-    m = int(vals.max())
-    return m.bit_length()
-
-
-def _pack_bits(vals: np.ndarray, width: int) -> bytes:
-    """Concatenate the low ``width`` bits of each uint64, MSB-first."""
-    if width == 0 or len(vals) == 0:
-        return b""
-    be = vals.astype(">u8").reshape(-1, 1).view(np.uint8)
-    bits = np.unpackbits(be, axis=1)[:, 64 - width:]
-    return np.packbits(bits.ravel()).tobytes()
-
-
-def _unpack_bits(data: bytes, n: int, width: int) -> np.ndarray:
-    if width == 0:
-        return np.zeros(n, dtype=np.uint64)
-    bits = np.unpackbits(np.frombuffer(data, dtype=np.uint8), count=n * width).reshape(n, width)
-    # left-pad each row to 64 bits and repack to big-endian uint64 — a
-    # CONSTANT number of numpy dispatches. (The old per-bit shift-or
-    # loop was up to 64 dispatches; on the tiny 2-3-point chunks a
-    # (conv, day) tier produces it cost ~180us per chunk and was 80% of
-    # the whole decode wall — measured r6, tools/gorilla_split.json.)
-    padded = np.zeros((n, 64), dtype=np.uint8)
-    padded[:, 64 - width:] = bits
-    return np.packbits(padded, axis=1).view(">u8").ravel().astype(np.uint64)
 
 
 def _zigzag(v: np.ndarray) -> np.ndarray:
@@ -92,159 +76,24 @@ def _unzigzag(u: np.ndarray) -> np.ndarray:
     return ((u >> np.uint64(1)) ^ (-(u & np.uint64(1))).astype(np.uint64)).astype(np.int64)
 
 
-# ------------------------------------------------------------- streams
-
-
-def _encode_stream(vals: np.ndarray) -> bytes:
-    """Block-packed uint64 stream."""
-    n = len(vals)
-    n_blocks = (n + BLOCK - 1) // BLOCK
-    widths = np.zeros(n_blocks, dtype=np.uint8)
-    payloads: list[bytes] = []
-    for b in range(n_blocks):  # per-block loop (n/128), kernels inside
-        blk = vals[b * BLOCK : (b + 1) * BLOCK]
-        w = _bit_width(blk)
-        widths[b] = w
-        payloads.append(_pack_bits(blk, w))
-    payload = b"".join(payloads)
-    return (
-        struct.pack("<IH", n, n_blocks)
-        + widths.tobytes()
-        + struct.pack("<I", len(payload))
-        + payload
-    )
-
-
-def _decode_stream(buf: bytes, offset: int) -> tuple[np.ndarray, int]:
-    n, n_blocks = struct.unpack_from("<IH", buf, offset)
-    offset += 6
-    widths = np.frombuffer(buf, dtype=np.uint8, count=n_blocks, offset=offset)
-    offset += n_blocks
-    (payload_len,) = struct.unpack_from("<I", buf, offset)
-    offset += 4
-    out = np.zeros(n, dtype=np.uint64)
-    pos = offset
-    for b in range(n_blocks):
-        w = int(widths[b])
-        cnt = min(BLOCK, n - b * BLOCK)
-        nbytes = (cnt * w + 7) // 8
-        out[b * BLOCK : b * BLOCK + cnt] = _unpack_bits(buf[pos : pos + nbytes], cnt, w)
-        pos += nbytes
-    assert pos - offset == payload_len
-    return out, pos
-
-
-# -------------------------------------------------------------- codec
-
-
-def encode_series(ts_micros: np.ndarray, values: np.ndarray) -> bytes:
-    """Encode one chunk. ``ts_micros`` must be sorted non-decreasing."""
-    n = len(ts_micros)
-    if n == 0:
-        return struct.pack("<4sBIqQ", MAGIC, VERSION, 0, 0, 0)
-    ts = ts_micros.astype(np.int64)
-    vals = np.ascontiguousarray(values, dtype=np.float64).view(np.uint64)
-    head = struct.pack("<4sBIqQ", MAGIC, VERSION, n, int(ts[0]), int(vals[0]))
-    if n == 1:
-        return head
-    deltas = np.diff(ts)
-    dod = np.diff(deltas) if n > 2 else np.zeros(0, dtype=np.int64)
-    ts_stream = struct.pack("<q", int(deltas[0])) + _encode_stream(_zigzag(dod))
-    xor = vals[1:] ^ vals[:-1]
-    val_stream = _encode_stream(xor)
-    return head + ts_stream + val_stream
-
-
-def _skip_stream(buf: bytes, offset: int) -> int:
-    """Advance past one block-packed stream WITHOUT unpacking it — the
-    header carries n_blocks and payload_len, so skipping is O(1)."""
-    _n, n_blocks = struct.unpack_from("<IH", buf, offset)
-    offset += 6 + n_blocks
-    (payload_len,) = struct.unpack_from("<I", buf, offset)
-    return offset + 4 + payload_len
-
-
-def decode_series(
-    buf: bytes, need_ts: bool = True, need_values: bool = True
-) -> tuple[np.ndarray, np.ndarray]:
-    """Decode a chunk. ``need_ts``/``need_values`` enable column-pruned
-    decoding: an unneeded stream is SKIPPED via its header (O(1)), not
-    unpacked — the codec-level counterpart of parquet column pruning
-    (a value-only read never pays the delta-of-delta cumsums; a
-    timestamp-only read never pays the XOR prefix scan). A skipped
-    side returns an empty array."""
-    magic, version, n, first_ts, first_val = struct.unpack_from("<4sBIqQ", buf, 0)
-    if magic != MAGIC or version != VERSION:
-        raise ValueError("not a GORB v1 chunk")
-    empty_ts = np.zeros(0, dtype=np.int64)
-    empty_vals = np.zeros(0, dtype=np.float64)
-    if n == 0:
-        return empty_ts, empty_vals
-    offset = struct.calcsize("<4sBIqQ")
-    if n == 1:
-        return (
-            np.array([first_ts], dtype=np.int64) if need_ts else empty_ts,
-            np.array([first_val], dtype=np.uint64).view(np.float64)
-            if need_values
-            else empty_vals,
-        )
-    (first_delta,) = struct.unpack_from("<q", buf, offset)
-    offset += 8
-    if need_ts:
-        dod_z, offset = _decode_stream(buf, offset)
-        dod = _unzigzag(dod_z)
-        deltas = (
-            np.concatenate(([first_delta], first_delta + np.cumsum(dod)))
-            if n > 2
-            else np.array([first_delta], dtype=np.int64)
-        )
-        ts = (first_ts + np.concatenate(([0], np.cumsum(deltas)))).astype(np.int64)
-    else:
-        offset = _skip_stream(buf, offset)
-        ts = empty_ts
-    if need_values:
-        xor, _ = _decode_stream(buf, offset)
-        val_bits = np.concatenate(([np.uint64(first_val)], xor.astype(np.uint64)))
-        vals = np.bitwise_xor.accumulate(val_bits).view(np.float64)
-    else:
-        vals = empty_vals
-    return ts, vals
-
-
-# ----------------------------------------- vectorized batch codec (r8)
-#
-# Tier chunks are TINY (a (conv, day) bucket holds a handful of points:
-# measured median 2 at sf1.0), so per-chunk Python — ~15 numpy dispatches
-# plus struct.pack per chunk in encode_series / decode_series — dominated
-# the wall (~4.5us x 400k chunks per pass). The vectorized paths below
-# group chunks by (n, stream widths): within a group every chunk has an
-# IDENTICAL byte layout, so whole groups encode/decode as 2-D numpy
-# kernels and the only per-chunk Python left is one bytes() slice.
-# Byte output is bit-identical to encode_series (asserted in tests);
-# chunks longer than _VEC_MAX_N (multi-block streams) take the legacy
-# per-chunk path unchanged.
-
-_VEC_MAX_N = BLOCK + 1  # dod (n-2) and xor (n-1) both fit one block
-
-
-def _bit_widths_rows(mat: np.ndarray) -> np.ndarray:
-    """Per-row bit width of the max value of a (m, L) uint64 matrix —
-    exact (no float log2): unpack the row maxima to bits and locate the
-    highest set bit."""
-    m = mat.shape[0]
-    if mat.shape[1] == 0:
-        return np.zeros(m, dtype=np.uint8)
-    mx = mat.max(axis=1)
+def _block_widths(mat: np.ndarray) -> np.ndarray:
+    """(m, L) uint64 -> (m, ceil(L/128)) uint8: bits needed by the
+    widest value of each 128-value block of each row — exact (no float
+    log2): unpack the block maxima to bits and locate the highest set
+    bit."""
+    m, L = mat.shape
+    if L == 0:
+        return np.zeros((m, 0), dtype=np.uint8)
+    mx = np.maximum.reduceat(mat, np.arange(0, L, BLOCK), axis=1)
     bits = np.unpackbits(mx.astype(">u8").reshape(-1, 1).view(np.uint8), axis=1)
-    any_set = bits.any(axis=1)
     first = bits.argmax(axis=1)  # index of highest set bit (0 = bit 63)
-    return np.where(any_set, 64 - first, 0).astype(np.uint8)
+    return np.where(bits.any(axis=1), 64 - first, 0).astype(np.uint8).reshape(mx.shape)
 
 
 def _pack_rows(mat: np.ndarray, width: int) -> np.ndarray:
-    """(m, L) uint64 -> (m, ceil(L*width/8)) uint8; per row identical to
-    ``_pack_bits(row, width)`` (MSB-first low ``width`` bits, zero-padded
-    to the byte boundary)."""
+    """(m, L) uint64 -> (m, ceil(L*width/8)) uint8: per row, the low
+    ``width`` bits of each value MSB-first, zero-padded to the byte
+    boundary."""
     m, L = mat.shape
     if width == 0 or L == 0:
         return np.zeros((m, 0), dtype=np.uint8)
@@ -254,8 +103,9 @@ def _pack_rows(mat: np.ndarray, width: int) -> np.ndarray:
 
 
 def _unpack_rows(pay: np.ndarray, L: int, width: int) -> np.ndarray:
-    """(m, nbytes) uint8 payload -> (m, L) uint64; per row identical to
-    ``_unpack_bits(row_bytes, L, width)``."""
+    """(m, nbytes) uint8 payload -> (m, L) uint64; inverse of
+    ``_pack_rows``. Left-pads each value to 64 bits and repacks as
+    big-endian uint64 — a constant number of numpy calls per block."""
     m = pay.shape[0]
     if width == 0 or L == 0:
         return np.zeros((m, L), dtype=np.uint64)
@@ -265,10 +115,12 @@ def _unpack_rows(pay: np.ndarray, L: int, width: int) -> np.ndarray:
     return np.packbits(padded.reshape(m, L * 64), axis=1).view(">u8").reshape(m, L).astype(np.uint64)
 
 
+# -------------------------------------------------------------- layout
+
 _HEAD_DTYPE = np.dtype(
     {"names": ["magic", "ver", "n", "first_ts", "first_val"],
      "formats": ["S4", "u1", "<u4", "<i8", "<u8"],
-     "offsets": [0, 4, 5, 9, 17], "itemsize": 25}
+     "offsets": [0, 4, 5, 9, 17], "itemsize": _HEAD}
 )
 
 
@@ -281,161 +133,172 @@ def _head_rows(n: int, first_ts: np.ndarray, first_val: np.ndarray) -> np.ndarra
     head["n"] = n
     head["first_ts"] = first_ts
     head["first_val"] = first_val
-    return head.view(np.uint8).reshape(m, 25)
+    return head.view(np.uint8).reshape(m, _HEAD)
 
 
-def _const_rows(m: int, payload: bytes) -> np.ndarray:
-    return np.broadcast_to(np.frombuffer(payload, dtype=np.uint8), (m, len(payload)))
+@functools.lru_cache(maxsize=4096)
+def _chunk_layout(n: int, wt: bytes, wv: bytes) -> tuple[int, tuple]:
+    """Layout of an ``n``-point chunk whose ts and value streams have the
+    per-block widths ``wt`` and ``wv``: its byte size, and per stream
+    ``(header offset, header as uint8 array, blocks)`` with each block as
+    ``(first value, value count, width, payload start, payload end)``.
+    Raises ValueError for widths no GORB v1 encoder writes. Cached: a
+    worker sees the same few layouts in every batch."""
+    if n < 2:
+        return _HEAD, ()
+    at, streams = _STREAMS, []
+    for count, widths in ((n - 2, wt), (n - 1, wv)):
+        if len(widths) != -(-count // BLOCK) or max(widths, default=0) > 64:
+            raise ValueError("corrupt GORB chunk: bad block widths")
+        pay = at + 10 + len(widths)
+        blocks = []
+        for lo, w in zip(range(0, count, BLOCK), widths):
+            cnt = min(BLOCK, count - lo)
+            blocks.append((lo, cnt, w, pay, pay + ((cnt * w + 7) >> 3)))
+            pay = blocks[-1][4]
+        hdr = (
+            struct.pack("<IH", count, len(widths))
+            + bytes(widths)
+            + struct.pack("<I", pay - (at + 10 + len(widths)))
+        )
+        streams.append((at, np.frombuffer(hdr, np.uint8), tuple(blocks)))
+        at = pay
+    return at, tuple(streams)
 
 
-def _i64_rows(vals: np.ndarray) -> np.ndarray:
-    return vals.astype("<i8").reshape(-1, 1).view(np.uint8)
+# ------------------------------------------------------------- kernels
+
+
+def _encode_rows(ts_mat: np.ndarray, val_mat: np.ndarray) -> list:
+    """Encode m chunks of n points each, given as (m, n) int64 µs and
+    float64 matrices, into m GORB v1 blobs. Rows are grouped by
+    per-block widths, and each group is packed as 2-D matrices."""
+    m, n = ts_mat.shape
+    vm = np.ascontiguousarray(val_mat, dtype=np.float64).view(np.uint64)
+    if n:
+        heads = _head_rows(n, ts_mat[:, 0], vm[:, 0])
+    else:
+        heads = _head_rows(0, np.zeros(m, np.int64), np.zeros(m, np.uint64))
+    if n < 2:
+        return [row.tobytes() for row in heads]
+    deltas = np.diff(ts_mat, axis=1)
+    streams = (_zigzag(np.diff(deltas, axis=1)), vm[:, 1:] ^ vm[:, :-1])
+    widths = np.hstack([_block_widths(s) for s in streams])
+    nt = -(-(n - 2) // BLOCK)
+    # group rows by their width bytes (a 1-D unique over a void view is
+    # ~10x cheaper than np.unique(axis=0))
+    _, first, inv = np.unique(
+        widths.view(f"V{widths.shape[1]}").ravel(), return_index=True, return_inverse=True
+    )
+    out: list = [None] * m
+    for g, key in enumerate(widths[first]):
+        sel = np.flatnonzero(inv == g)
+        _, layout = _chunk_layout(n, key[:nt].tobytes(), key[nt:].tobytes())
+        parts = [heads[sel], deltas[sel, :1].astype("<i8").view(np.uint8)]
+        for s, (_, hdr, blocks) in zip(streams, layout):
+            parts.append(np.broadcast_to(hdr, (len(sel), len(hdr))))
+            parts += [_pack_rows(s[sel, lo : lo + cnt], w) for lo, cnt, w, _, _ in blocks]
+        for j, row in zip(sel, np.concatenate(parts, axis=1)):
+            out[j] = row.tobytes()
+    return out
+
+
+def _decode_rows(
+    mat: np.ndarray, n: int, layout: tuple, need_ts: bool, need_values: bool
+) -> tuple["np.ndarray | None", "np.ndarray | None"]:
+    """Decode the rows of the (m, size) uint8 matrix ``mat`` — m chunks
+    of n points sharing one layout — into (m, n) ts µs and value
+    matrices. A side that is not needed is not unpacked and may come
+    back None. Raises ValueError if a row's stream headers disagree
+    with the layout."""
+
+    def unpack(blocks: tuple) -> np.ndarray:
+        return np.concatenate(
+            [np.zeros((len(mat), 0), np.uint64)]
+            + [_unpack_rows(np.ascontiguousarray(mat[:, a:b]), cnt, w) for _, cnt, w, a, b in blocks],
+            axis=1,
+        )
+
+    # (m, 3) first_ts, first_val bits, first_delta (the last only if n >= 2)
+    head = np.ascontiguousarray(mat[:, 9:_STREAMS]).view("<i8")
+    if n < 2:
+        return head[:, :n], head[:, 1:2].view(np.float64)[:, :n]
+    for at, hdr, _ in layout:
+        if (mat[:, at : at + len(hdr)] != hdr).any():
+            raise ValueError("corrupt GORB chunk: stream header disagrees with its layout")
+    ts = vals = None
+    if need_ts:
+        # deltas = cumsum(first_delta, dod...); ts = cumsum(first_ts, deltas...)
+        deltas = np.cumsum(np.concatenate([head[:, 2:], _unzigzag(unpack(layout[0][2]))], axis=1), axis=1)
+        ts = np.cumsum(np.concatenate([head[:, :1], deltas], axis=1), axis=1)
+    if need_values:
+        bits = np.concatenate([head[:, 1:2].view(np.uint64), unpack(layout[1][2])], axis=1)
+        vals = np.bitwise_xor.accumulate(bits, axis=1).view(np.float64)
+    return ts, vals
 
 
 def _decode_blobs(
     blobs: list, need_ts: bool, need_values: bool
 ) -> tuple[np.ndarray, "np.ndarray | None", "np.ndarray | None"]:
     """Decode a batch of chunk blobs, preserving blob order. Returns
-    (points-per-blob, ts µs concat | None, values concat | None).
-    Per-blob results are bit-identical to ``decode_series``; blobs whose
-    layout the vectorized path does not cover (n > _VEC_MAX_N, or a
-    foreign multi-block layout) fall back to it."""
+    (points per blob, ts µs concatenated | None, values concatenated |
+    None). Raises ValueError for a blob that is not a GORB v1 chunk or
+    is not exactly as long as its header declares."""
     m = len(blobs)
     ns = np.empty(m, dtype=np.int64)
-    for i, b in enumerate(blobs):
-        if b[:4] != MAGIC or b[4] != VERSION:
-            raise ValueError("not a GORB v1 chunk")
-        ns[i] = int.from_bytes(b[5:9], "little")
-    offs = np.concatenate(([0], np.cumsum(ns)))
-    total = int(offs[-1])
-    ts_all = np.zeros(total, dtype=np.int64) if need_ts else None
-    val_all = np.zeros(total, dtype=np.float64) if need_values else None
-
-    idx1 = np.flatnonzero(ns == 1)
-    if len(idx1):
-        heads = np.frombuffer(
-            b"".join(blobs[i][:25] for i in idx1), dtype=_HEAD_DTYPE
-        )
-        if need_ts:
-            ts_all[offs[idx1]] = heads["first_ts"]
-        if need_values:
-            val_all[offs[idx1]] = np.ascontiguousarray(
-                heads["first_val"], dtype=np.uint64
-            ).view(np.float64)
-
+    sizes = np.empty(m, dtype=np.int64)
     groups: dict[tuple, list[int]] = {}
-    legacy: list[int] = []
-    for i in np.flatnonzero(ns >= 2):
-        b, n = blobs[i], int(ns[i])
-        if n > _VEC_MAX_N:
-            legacy.append(i)
-            continue
-        if n > 2:
-            wt = b[39]
-            ts_pay = ((n - 2) * wt + 7) >> 3
-            voff = 44 + ts_pay
-        else:
-            wt = 0
-            voff = 43
-        wv = b[voff + 6]
-        val_pay = ((n - 1) * wv + 7) >> 3
-        if len(b) != voff + 11 + val_pay:
-            legacy.append(i)  # foreign layout (e.g. multi-block widths)
-            continue
+    for i, b in enumerate(blobs):
+        if b[:5] != _TAG:
+            raise ValueError("not a GORB v1 chunk")
+        n = int.from_bytes(b[5:9], "little")
+        wt = wv = b""
+        if n >= 2:
+            nt, nv = -(-(n - 2) // BLOCK), -(-(n - 1) // BLOCK)
+            wt = b[39 : 39 + nt]
+            # the value stream starts after the ts payload length the
+            # blob declares; _decode_rows checks it against the layout
+            at = 43 + nt + int.from_bytes(b[39 + nt : 43 + nt], "little")
+            wv = b[at + 6 : at + 6 + nv]
+        ns[i], sizes[i] = n, len(b)
         groups.setdefault((n, wt, wv), []).append(i)
-
-    for (n, wt, wv), lst in groups.items():
-        m2 = len(lst)
-        ts_paylen = ((n - 2) * wt + 7) >> 3 if n > 2 else 0
-        voff = 44 + ts_paylen if n > 2 else 43
-        val_paylen = ((n - 1) * wv + 7) >> 3
-        L = voff + 11 + val_paylen
-        mat = np.frombuffer(b"".join(blobs[i] for i in lst), dtype=np.uint8).reshape(
-            m2, L
-        )
-        pos = offs[np.asarray(lst)]
-        gather = pos[:, None] + np.arange(n)[None, :]
+    # check every length before sizing the output by the claimed n
+    layouts = [(_chunk_layout(*key), key[0], np.asarray(lst)) for key, lst in groups.items()]
+    if any((sizes[idx] != size).any() for (size, _), _, idx in layouts):
+        raise ValueError("corrupt GORB chunk: length disagrees with its header")
+    offs = np.concatenate(([0], np.cumsum(ns)))
+    ts_all = np.zeros(offs[-1], dtype=np.int64) if need_ts else None
+    val_all = np.zeros(offs[-1], dtype=np.float64) if need_values else None
+    for (size, layout), n, idx in layouts:
+        mat = np.frombuffer(b"".join(blobs[i] for i in idx), dtype=np.uint8).reshape(len(idx), size)
+        ts, vals = _decode_rows(mat, n, layout, need_ts, need_values)
+        gather = offs[idx][:, None] + np.arange(n)[None, :]
         if need_ts:
-            first_ts = mat[:, 9:17].copy().view("<i8").ravel()
-            first_delta = mat[:, 25:33].copy().view("<i8").ravel()
-            if n > 2:
-                zz = _unpack_rows(np.ascontiguousarray(mat[:, 44 : 44 + ts_paylen]), n - 2, int(wt))
-                dod = _unzigzag(zz.reshape(-1)).reshape(zz.shape)
-                deltas = np.hstack(
-                    [first_delta[:, None], first_delta[:, None] + np.cumsum(dod, axis=1)]
-                )
-            else:
-                deltas = first_delta[:, None]
-            ts_mat = first_ts[:, None] + np.hstack(
-                [np.zeros((m2, 1), dtype=np.int64), np.cumsum(deltas, axis=1)]
-            )
-            ts_all[gather] = ts_mat
+            ts_all[gather] = ts
         if need_values:
-            first_val = mat[:, 17:25].copy().view("<u8").ravel()
-            xor = _unpack_rows(
-                np.ascontiguousarray(mat[:, voff + 11 : voff + 11 + val_paylen]),
-                n - 1,
-                int(wv),
-            )
-            bits = np.hstack([first_val[:, None], xor]).astype(np.uint64)
-            val_all[gather] = np.bitwise_xor.accumulate(bits, axis=1).view(np.float64)
-
-    for i in legacy:
-        ts, vals = decode_series(bytes(blobs[i]), need_ts=need_ts, need_values=need_values)
-        lo = offs[i]
-        if need_ts:
-            ts_all[lo : lo + len(ts)] = ts
-        if need_values:
-            val_all[lo : lo + len(vals)] = vals
+            val_all[gather] = vals
     return ns, ts_all, val_all
 
 
-def _encode_vectorized(
-    n: int, ts_mat: np.ndarray, val_mat: np.ndarray, out: list, idx: np.ndarray
-) -> None:
-    """Encode all chunks of length ``n`` (2 <= n <= _VEC_MAX_N) given as
-    (m, n) matrices; writes bytes into ``out`` at positions ``idx``."""
-    vm = np.ascontiguousarray(val_mat, dtype=np.float64).view(np.uint64)
-    heads = _head_rows(n, ts_mat[:, 0], vm[:, 0])
-    deltas = np.diff(ts_mat, axis=1)
-    first_delta = deltas[:, 0]
-    dod = np.diff(deltas, axis=1) if n > 2 else np.zeros((len(ts_mat), 0), np.int64)
-    zz = _zigzag(dod.reshape(-1)).reshape(dod.shape) if n > 2 else dod.astype(np.uint64)
-    xor = vm[:, 1:] ^ vm[:, :-1]
-    w_ts = _bit_widths_rows(zz)
-    w_val = _bit_widths_rows(xor)
-    key = w_ts.astype(np.int32) * 65 + w_val
-    for k in np.unique(key):
-        sel = np.flatnonzero(key == k)
-        wt, wv = int(k) // 65, int(k) % 65
-        m = len(sel)
-        ts_pay = _pack_rows(zz[sel], wt) if n > 2 else np.zeros((m, 0), np.uint8)
-        val_pay = _pack_rows(xor[sel], wv)
-        if n > 2:
-            ts_hdr = (
-                struct.pack("<IH", n - 2, 1)
-                + bytes([wt])
-                + struct.pack("<I", ts_pay.shape[1])
-            )
-        else:
-            ts_hdr = struct.pack("<IH", 0, 0) + struct.pack("<I", 0)
-        val_hdr = (
-            struct.pack("<IH", n - 1, 1)
-            + bytes([wv])
-            + struct.pack("<I", val_pay.shape[1])
-        )
-        full = np.hstack(
-            [
-                heads[sel],
-                _i64_rows(first_delta[sel]),
-                _const_rows(m, ts_hdr),
-                ts_pay,
-                _const_rows(m, val_hdr),
-                val_pay,
-            ]
-        )
-        for j, row in zip(sel, full):
-            out[idx[j]] = row.tobytes()
+def encode_series(ts_micros: np.ndarray, values: np.ndarray) -> bytes:
+    """Encode one chunk. ``ts_micros`` must be sorted non-decreasing."""
+    ts = np.asarray(ts_micros, dtype=np.int64).reshape(1, -1)
+    return _encode_rows(ts, np.asarray(values, dtype=np.float64).reshape(1, -1))[0]
+
+
+def decode_series(
+    buf: bytes, need_ts: bool = True, need_values: bool = True
+) -> tuple[np.ndarray, np.ndarray]:
+    """Decode one chunk. ``need_ts``/``need_values`` enable column-pruned
+    decoding: an unneeded stream is not unpacked — the codec-level
+    counterpart of parquet column pruning (a value-only read never pays
+    the delta-of-delta cumsums; a timestamp-only read never pays the
+    XOR prefix scan). A skipped side returns an empty array."""
+    _, ts, vals = _decode_blobs([bytes(buf)], need_ts, need_values)
+    return (
+        ts if need_ts else np.zeros(0, dtype=np.int64),
+        vals if need_values else np.zeros(0, dtype=np.float64),
+    )
 
 
 # ------------------------------------------------------------ spark API
@@ -448,10 +311,8 @@ CHUNK_SCHEMA = (
 def _encode_group_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     """Encode every (conv_id, chunk_start) group in an already-sorted
     pandas frame. Grouping via numpy boundary detection (no pandas
-    groupby-apply per-group machinery); chunks are encoded in
-    (n, widths)-grouped numpy batches (see the vectorized codec above),
-    falling back to per-chunk ``encode_series`` for n > _VEC_MAX_N.
-    Output rows and bytes are identical to the per-chunk path."""
+    groupby-apply per-group machinery); chunks of equal length are
+    encoded together by ``_encode_rows``."""
     if pdf.empty:
         return pd.DataFrame(
             {"conv_id": [], "chunk_start": [], "n_points": [], "raw_bytes": [], "chunk": []}
@@ -468,22 +329,9 @@ def _encode_group_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     chunks: list = [None] * n_chunks
     for n in np.unique(lens):
         idx = np.flatnonzero(lens == n)
-        n = int(n)
-        if n == 1:
-            heads = _head_rows(
-                1,
-                ts[starts[idx]],
-                np.ascontiguousarray(vals[starts[idx]]).view(np.uint64),
-            )
-            for j, row in zip(idx, heads):
-                chunks[j] = row.tobytes()
-        elif n <= _VEC_MAX_N:
-            gather = starts[idx][:, None] + np.arange(n)[None, :]
-            _encode_vectorized(n, ts[gather], vals[gather], chunks, idx)
-        else:
-            for j in idx:
-                lo, hi = starts[j], starts[j] + n
-                chunks[j] = encode_series(ts[lo:hi], vals[lo:hi])
+        gather = starts[idx][:, None] + np.arange(n)[None, :]
+        for j, blob in zip(idx, _encode_rows(ts[gather], vals[gather])):
+            chunks[j] = blob
     return pd.DataFrame(
         {
             "conv_id": conv[starts],
@@ -564,8 +412,11 @@ def decode_chunks(
     tier: str | None = None,
     columns: "list[str] | None" = None,
 ) -> DataFrame:
-    """Chunk rows -> (conv_id, ts, value) points. ``mapInPandas``; the
-    loop is per *chunk* (thousands of points each), numpy per point.
+    """Chunk rows -> (conv_id, ts, value) points. ``mapInPandas``; each
+    Arrow batch of chunks decodes in one ``_decode_blobs`` call (numpy
+    kernels per same-layout chunk group, no per-point Python). A blob
+    that is not a well-formed GORB v1 chunk fails the task with
+    ValueError.
 
     ``time_range=(lo, hi)`` (datetimes, half-open ``[lo, hi)``) prunes
     BEFORE decoding: with ``tier`` given, chunk pruning is exact on
@@ -594,8 +445,6 @@ def decode_chunks(
     out_schema = ", ".join(f"{c} {type_of[c]}" for c in columns)
     lo_us = hi_us = None
     if time_range is not None:
-        from .timeutils import micros  # local import avoids cycle at module load
-
         lo, hi = time_range
 
         def _to_us(b) -> int:
@@ -622,10 +471,6 @@ def decode_chunks(
             chunks = chunks.filter(F.col("chunk_start") < F.lit(hi_us))
 
     def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # batch-vectorized decode (r8): chunks grouped by (n, widths)
-        # decode as 2-D numpy kernels in _decode_blobs — the per-chunk
-        # Python loop (~4.5us x chunk count per pass) is gone; row
-        # order and values are identical to the per-chunk path.
         for pdf in batches:
             blobs = [bytes(b) for b in pdf["chunk"]]
             sizes, ts_arr, val_arr = _decode_blobs(blobs, need_ts, want_vals)
