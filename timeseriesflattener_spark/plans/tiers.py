@@ -13,7 +13,12 @@ North-rule requirements covered here (BASELINE.json):
   concurrent writers or partial failures.
 - **per-partition lineage + metrics**: the ledger row records the
   source (raw vs finer tier), input/output row counts, wall seconds
-  and attempt number — queryable as a table.
+  and attempt number — queryable as a table. Every parquet publish goes
+  through one step (``TierStore._publish_unit``): the row counts come
+  from the parquet footers of the files just written, not from a Spark
+  read-back, and the ledger decisions (``completed_units``, a merge's
+  replay set) read the event files with pyarrow — no Spark job runs
+  to publish or to decide what to skip.
 - **retention**: fine tiers age out first (drop whole day partitions),
   coarse tiers persist — ``apply_retention``.
 
@@ -50,6 +55,9 @@ import uuid as uuidlib
 from dataclasses import dataclass, field
 from typing import Callable, Sequence
 
+import pyarrow as pa
+import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
@@ -60,10 +68,36 @@ LEDGER_SCHEMA = (
     "tier string, day date, state string, source string, input_rows long, "
     "output_rows long, wall_s double, attempt int, job_id string, finished_at timestamp"
 )
+#: the same columns as written to each ledger event file
+LEDGER_ARROW_SCHEMA = pa.schema(
+    [
+        ("tier", pa.string()),
+        ("day", pa.date32()),
+        ("state", pa.string()),
+        ("source", pa.string()),
+        ("input_rows", pa.int64()),
+        ("output_rows", pa.int64()),
+        ("wall_s", pa.float64()),
+        ("attempt", pa.int32()),
+        ("job_id", pa.string()),
+        ("finished_at", pa.timestamp("us")),
+    ]
+)
 
 
 def _day_dir(root: str, tier: str, day: dt.date) -> str:
     return os.path.join(root, "partials", f"tier={tier}", f"day={day.isoformat()}")
+
+
+def _parquet_rows(path: str) -> int:
+    """Rows in the parquet directory ``path``, summed from its files'
+    footers (no Spark job). Skips ``_``/``.``-prefixed names — job
+    markers, ``_SUCCESS``, checksum files — as Spark's reader does."""
+    return sum(
+        pq.read_metadata(os.path.join(path, f)).num_rows
+        for f in os.listdir(path)
+        if not f.startswith(("_", "."))
+    )
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -167,53 +201,92 @@ class TierStore:
 
     # ---------------- ledger ----------------
 
+    def _ledger_files(self) -> list[str]:
+        if not os.path.isdir(self.ledger_dir):
+            return []
+        return [
+            os.path.join(self.ledger_dir, f)
+            for f in os.listdir(self.ledger_dir)
+            if f.startswith("event-") and f.endswith(".parquet")
+        ]
+
+    def _ledger_table(self, columns: list[str]) -> pa.Table:
+        """``columns`` of every ledger event, read with pyarrow."""
+        return pads.dataset(
+            self._ledger_files(), schema=LEDGER_ARROW_SCHEMA, format="parquet"
+        ).to_table(columns=columns)
+
     def read_ledger(self) -> DataFrame:
         """The lineage/metrics table. Empty frame if nothing ran yet."""
-        if not os.path.isdir(self.ledger_dir) or not os.listdir(self.ledger_dir):
+        if not self._ledger_files():
             return self.spark.createDataFrame([], LEDGER_SCHEMA)
         return self.spark.read.parquet(self.ledger_dir)
 
     def completed_units(self) -> set[tuple[str, dt.date]]:
-        ledger = self.read_ledger()
-        if ledger.isEmpty():
-            return set()
-        done = (
-            ledger.groupBy("tier", "day")
-            .agg(F.max(F.struct("finished_at", "state")).alias("last"))
-            .select("tier", "day", F.col("last.state").alias("state"))
-            .filter(F.col("state") == "done")
-            .collect()
-        )
-        return {(r["tier"], r["day"]) for r in done}
+        """Units whose latest event by ``(finished_at, state)`` is done."""
+        ledger = self._ledger_table(["tier", "day", "finished_at", "state"])
+        last: dict[tuple[str, dt.date], tuple[dt.datetime, str]] = {}
+        for tier, day, at, state in zip(*(c.to_pylist() for c in ledger.columns)):
+            last[(tier, day)] = max(last.get((tier, day), (at, state)), (at, state))
+        return {unit for unit, (_, state) in last.items() if state == "done"}
 
     def _append_ledger(self, row: dict) -> None:
         """Append one ledger event. Written with pyarrow directly — a
         Spark job per tiny ledger row costs ~0.3s x units (measured 28s
-        of pure overhead on a 93-unit run)."""
-        import uuid as _uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
+        of pure overhead on a 93-unit run) — and read back the same way
+        for the store's own decisions (``_ledger_table``). Its row counts
+        come from parquet footers (``_parquet_rows``), never from a
+        Spark scan. The event is written under a ``.``-prefixed name and
+        renamed into place, so a torn write leaves a file that neither
+        Spark nor ``_ledger_files`` reads."""
         os.makedirs(self.ledger_dir, exist_ok=True)
-        table = pa.table(
+        name = f"event-{uuidlib.uuid4().hex}.parquet"
+        tmp = os.path.join(self.ledger_dir, f".{name}.tmp")
+        pq.write_table(pa.Table.from_pylist([row], schema=LEDGER_ARROW_SCHEMA), tmp)
+        os.replace(tmp, os.path.join(self.ledger_dir, name))
+
+    def _ledger_done(
+        self, tier: str, day: dt.date, source: str, job_id: str,
+        input_rows: int, output_rows: int, wall_s: float,
+    ) -> None:
+        self._append_ledger(
             {
-                "tier": [row["tier"]],
-                "day": pa.array([row["day"]], type=pa.date32()),
-                "state": [row["state"]],
-                "source": [row["source"]],
-                "input_rows": pa.array([row["input_rows"]], type=pa.int64()),
-                "output_rows": pa.array([row["output_rows"]], type=pa.int64()),
-                "wall_s": pa.array([row["wall_s"]], type=pa.float64()),
-                "attempt": pa.array([row["attempt"]], type=pa.int32()),
-                "job_id": [row["job_id"]],
-                "finished_at": pa.array(
-                    [row["finished_at"]], type=pa.timestamp("us")
-                ),
+                "tier": tier,
+                "day": day,
+                "state": "done",
+                "source": source,
+                "input_rows": input_rows,
+                "output_rows": output_rows,
+                "wall_s": wall_s,
+                "attempt": 1,
+                "job_id": job_id,
+                "finished_at": dt.datetime.now(),
             }
         )
-        pq.write_table(
-            table, os.path.join(self.ledger_dir, f"event-{_uuid.uuid4().hex}.parquet")
+
+    def _publish_unit(
+        self, staged: str, tier: str, day: dt.date, source: str, job_id: str,
+        wall_s: float, input_rows: int | None = None, job_marker: bool = False,
+    ) -> None:
+        """Publish the parquet directory ``staged`` as the (tier, day)
+        partition: count its rows from the footers, optionally drop a
+        ``_job-{job_id}`` marker inside it, swap it in with ``os.replace``
+        and append the ledger event. The marker is published atomically
+        with the data, so a crash between the swap and the ledger append
+        still shows that this job produced the unit. ``input_rows``
+        defaults to the published count."""
+        rows = _parquet_rows(staged)
+        if job_marker:
+            with open(os.path.join(staged, f"_job-{job_id}"), "w") as fh:
+                fh.write(source)
+        out_dir = _day_dir(self.root, tier, day)
+        os.makedirs(os.path.dirname(out_dir), exist_ok=True)
+        if os.path.isdir(out_dir):
+            shutil.rmtree(out_dir)
+        os.replace(staged, out_dir)
+        self._ledger_done(
+            tier, day, source, job_id,
+            rows if input_rows is None else input_rows, rows, wall_s,
         )
 
     # ---------------- materialisation ----------------
@@ -321,19 +394,8 @@ class TierStore:
                 .collect()
             }
             for day in days:
-                self._append_ledger(
-                    {
-                        "tier": tier,
-                        "day": day,
-                        "state": "done",
-                        "source": source + ":bulk",
-                        "input_rows": -1,
-                        "output_rows": counts.get(day, 0),
-                        "wall_s": wall / len(days),
-                        "attempt": 1,
-                        "job_id": job_id,
-                        "finished_at": dt.datetime.now(),
-                    }
+                self._ledger_done(
+                    tier, day, source + ":bulk", job_id, -1, counts.get(day, 0), wall / len(days)
                 )
             return
 
@@ -352,33 +414,15 @@ class TierStore:
         # per-day publish + ledger (identical layout to the unit path)
         for day in days:
             src = os.path.join(staging, f"day={day.isoformat()}")
-            out_dir = _day_dir(self.root, tier, day)
-            os.makedirs(os.path.dirname(out_dir), exist_ok=True)
-            if os.path.isdir(out_dir):
-                shutil.rmtree(out_dir)
-            if os.path.isdir(src):
-                os.replace(src, out_dir)
-            else:
+            if not os.path.isdir(src):
                 # day with no rows: write a schema-bearing empty parquet,
                 # not a bare directory — read_tier_day / a later unit-mode
                 # resume would otherwise crash on 'Unable to infer schema'
                 partials.drop("day").limit(0).write.option(
                     "compression", self._codec(tier)
-                ).mode("overwrite").parquet(out_dir)
-            output_rows = self.spark.read.parquet(out_dir).count()
-            self._append_ledger(
-                {
-                    "tier": tier,
-                    "day": day,
-                    "state": "done",
-                    "source": source + ":bulk",
-                    "input_rows": -1,
-                    "output_rows": output_rows,
-                    "wall_s": wall / len(days),
-                    "attempt": 1,
-                    "job_id": job_id,
-                    "finished_at": dt.datetime.now(),
-                }
+                ).mode("overwrite").parquet(src)
+            self._publish_unit(
+                src, tier, day, source + ":bulk", job_id, wall / len(days), input_rows=-1
             )
         shutil.rmtree(staging, ignore_errors=True)
 
@@ -386,7 +430,6 @@ class TierStore:
         self, raw: DataFrame, tier: str, finer: str | None, day: dt.date, job_id: str
     ) -> None:
         t0 = time.time()
-        attempt = 1  # a retry loop would bump this; kept explicit for lineage
         day_start = dt.datetime.combine(day, dt.time.min)
         day_end = day_start + dt.timedelta(days=1)
 
@@ -419,43 +462,30 @@ class TierStore:
                 unit_input, self.value_cols, to_tier=tier, entity_col=self.entity_col
             )
 
-        # input rows: parquet metadata count for tier sources (cheap);
+        # input rows: the finer tier's row count (footers on parquet);
         # for raw, a separate full-scan count per unit measured ~50% of
-        # the whole job — record the bucket-row total instead (exact for
-        # the finer tier, and lineage only needs relative magnitudes)
+        # the whole job, so it is opt-in (lineage only needs relative
+        # magnitudes)
         if finer is None:
             input_rows = -1 if not self.track_raw_input_rows else unit_input.count()
-        else:
+        elif self.format == "iceberg":
             input_rows = unit_input.count()
+        else:
+            input_rows = _parquet_rows(_day_dir(self.root, finer, day))
         if self.format == "iceberg":
             # a snapshot commit IS the atomic publish
             self._iceberg_publish(partials, tier, [day])
             output_rows = self._iceberg_read_day(tier, day).count()
-        else:
-            out_dir = _day_dir(self.root, tier, day)
-            tmp_dir = out_dir + f".tmp-{job_id}"
-            partials.write.option("compression", self._codec(tier)).mode(
-                "overwrite"
-            ).parquet(tmp_dir)
-            output_rows = self.spark.read.parquet(tmp_dir).count()
-            # partition-atomic publish (what an Iceberg commit gives us for real)
-            if os.path.isdir(out_dir):
-                shutil.rmtree(out_dir)
-            os.replace(tmp_dir, out_dir)
-
-        self._append_ledger(
-            {
-                "tier": tier,
-                "day": day,
-                "state": "done",
-                "source": source,
-                "input_rows": input_rows,
-                "output_rows": output_rows,
-                "wall_s": time.time() - t0,
-                "attempt": attempt,
-                "job_id": job_id,
-                "finished_at": dt.datetime.now(),
-            }
+            self._ledger_done(
+                tier, day, source, job_id, input_rows, output_rows, time.time() - t0
+            )
+            return
+        tmp_dir = _day_dir(self.root, tier, day) + f".tmp-{job_id}"
+        partials.write.option("compression", self._codec(tier)).mode(
+            "overwrite"
+        ).parquet(tmp_dir)
+        self._publish_unit(
+            tmp_dir, tier, day, source, job_id, time.time() - t0, input_rows=input_rows
         )
 
     # ---------------- reads ----------------
@@ -502,38 +532,26 @@ class TierStore:
         out_dir = _day_dir(self.root, tier, day)
         before = len([f for f in os.listdir(out_dir) if f.endswith(".parquet")])
         t0 = time.time()
-        df = self.spark.read.parquet(out_dir)
-        rows_before = df.count()
+        rows_before = _parquet_rows(out_dir)
         tmp = out_dir + f".compact-{uuidlib.uuid4().hex[:8]}"
         (
-            df.coalesce(target_files)
+            self.spark.read.parquet(out_dir)
+            .coalesce(target_files)
             .write.option("compression", self._codec(tier))
             .mode("overwrite")
             .parquet(tmp)
         )
-        rows_after = self.spark.read.parquet(tmp).count()
+        rows_after = _parquet_rows(tmp)
         if rows_after != rows_before:
             shutil.rmtree(tmp, ignore_errors=True)
             raise RuntimeError(
                 f"compaction row mismatch {rows_before} -> {rows_after} for {tier}/{day}"
             )
-        shutil.rmtree(out_dir)
-        os.replace(tmp, out_dir)
-        after = len([f for f in os.listdir(out_dir) if f.endswith(".parquet")])
-        self._append_ledger(
-            {
-                "tier": tier,
-                "day": day,
-                "state": "done",
-                "source": "compact",
-                "input_rows": rows_before,
-                "output_rows": rows_after,
-                "wall_s": time.time() - t0,
-                "attempt": 1,
-                "job_id": f"compact-{uuidlib.uuid4().hex[:8]}",
-                "finished_at": dt.datetime.now(),
-            }
+        self._publish_unit(
+            tmp, tier, day, "compact", f"compact-{uuidlib.uuid4().hex[:8]}",
+            time.time() - t0, input_rows=rows_before,
         )
+        after = len([f for f in os.listdir(out_dir) if f.endswith(".parquet")])
         return before, after
 
     def _iceberg_compact_day(
@@ -561,19 +579,9 @@ class TierStore:
             raise RuntimeError(
                 f"compaction row mismatch {rows_before} -> {rows_after} for {tier}/{day}"
             )
-        self._append_ledger(
-            {
-                "tier": tier,
-                "day": day,
-                "state": "done",
-                "source": "compact",
-                "input_rows": rows_before,
-                "output_rows": rows_after,
-                "wall_s": time.time() - t0,
-                "attempt": 1,
-                "job_id": f"compact-{uuidlib.uuid4().hex[:8]}",
-                "finished_at": dt.datetime.now(),
-            }
+        self._ledger_done(
+            tier, day, "compact", f"compact-{uuidlib.uuid4().hex[:8]}",
+            rows_before, rows_after, time.time() - t0,
         )
         return before, n_files()
 

@@ -73,16 +73,12 @@ def merge_batch(
 
     already: set[tuple[str, dt.date]] = set()
     if batch_id is not None:
-        ledger = store.read_ledger()
-        if not ledger.isEmpty():
-            already = {
-                (r["tier"], r["day"])
-                for r in ledger.filter(
-                    (F.col("job_id") == job_id) & (F.col("state") == "done")
-                )
-                .select("tier", "day")
-                .collect()
-            }
+        ledger = store._ledger_table(["tier", "day", "state", "job_id"])
+        already = {
+            (tier, day)
+            for tier, day, state, job in zip(*(c.to_pylist() for c in ledger.columns))
+            if job == job_id and state == "done"
+        }
         # the job marker travels INSIDE the published data directory
         # (written before the atomic os.replace), so a crash in the
         # window between publish and ledger append still leaves proof —
@@ -129,11 +125,12 @@ def merge_batch(
         # coarser tiers rebuild from the stored 1m partials of the day —
         # a deterministic overwrite, so re-running them on replay is safe
         # (and necessary if the crash hit between 1m and 1h publishes)
+        fine = spark.read.parquet(_day_dir(store.root, "1m", day))
         for tier in store.tiers:
             if tier == "1m":
                 continue
             rolled = R.rollup(
-                spark.read.parquet(_day_dir(store.root, "1m", day)),
+                fine,
                 store.value_cols,
                 to_tier=tier,
                 entity_col=store.entity_col,
@@ -146,37 +143,13 @@ def _publish(
     store: TierStore, df: DataFrame, tier: str, day: dt.date, source: str,
     job_id: str = "stream",
 ) -> None:
-    import shutil
     import time
     import uuid as uuidlib
 
     t0 = time.time()
-    out_dir = _day_dir(store.root, tier, day)
-    tmp = out_dir + f".tmp-{uuidlib.uuid4().hex[:8]}"
+    tmp = _day_dir(store.root, tier, day) + f".tmp-{uuidlib.uuid4().hex[:8]}"
     df.write.option("compression", store._codec(tier)).mode("overwrite").parquet(tmp)
-    rows = store.spark.read.parquet(tmp).count()
-    # job marker inside the data dir, atomically published with it:
-    # 'this job already produced this unit' survives a crash before the
-    # ledger append (parquet readers ignore _-prefixed files)
-    with open(os.path.join(tmp, f"_job-{job_id}"), "w") as fh:
-        fh.write(source)
-    if os.path.isdir(out_dir):
-        shutil.rmtree(out_dir)
-    os.replace(tmp, out_dir)
-    store._append_ledger(
-        {
-            "tier": tier,
-            "day": day,
-            "state": "done",
-            "source": source,
-            "input_rows": rows,
-            "output_rows": rows,
-            "wall_s": time.time() - t0,
-            "attempt": 1,
-            "job_id": job_id,
-            "finished_at": dt.datetime.now(),
-        }
-    )
+    store._publish_unit(tmp, tier, day, source, job_id, time.time() - t0, job_marker=True)
 
 
 def stream_into_store(
