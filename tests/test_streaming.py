@@ -4,10 +4,13 @@ end-to-end smoke with availableNow."""
 
 from __future__ import annotations
 
+import datetime as dt
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
-from timeseriesflattener_spark.plans.tiers import TierStore
+from timeseriesflattener_spark.plans.tiers import TierStore, _day_dir
 from timeseriesflattener_spark.sources.transcripts import (
     TRANSCRIPT_SCHEMA,
     derive_channels,
@@ -80,6 +83,44 @@ def _count_sums(store, tier):
         )
         for r in store.read_points(tier).collect()
     }
+
+
+def _stored_partials(store, days):
+    """Every stored partial row per published (tier, day) partition."""
+    return {
+        (tier, day): sorted((tuple(r) for r in store.read_tier_day(tier, day).collect()), key=repr)
+        for tier in ("1m", "1h", "1d")
+        for day in days
+        if os.path.isdir(_day_dir(store.root, tier, day))
+    }
+
+
+def test_late_batch_after_retention_merges_into_surviving_tier(spark, channels, tmp_path):
+    """A late batch for a day whose 1m partition retention already
+    removed combines into that day's 1h partials: 1h/1d equal a fresh
+    build over all rows, 1m stays absent, and a replay changes nothing."""
+    late = channels.filter(F.col("turn_idx") % 4 == 3)
+    store = TierStore(spark, str(tmp_path / "retained"), VALUE_COLS)
+    store.materialize(channels.filter(F.col("turn_idx") % 4 != 3), bulk=True)
+    days = store._raw_days(channels)
+    old = days[0]
+    removed = store.apply_retention({"1m": 0}, now=old + dt.timedelta(days=1))
+    assert removed == [("1m", f"day={old.isoformat()}")]
+
+    assert old in merge_batch(store, late, batch_id=5)
+    got = _stored_partials(store, days)
+    assert ("1m", old) not in got
+    fresh = TierStore(spark, str(tmp_path / "fresh"), VALUE_COLS)
+    fresh.materialize(channels, bulk=True)
+    want = _stored_partials(fresh, days)
+    del want[("1m", old)]
+    assert got == want
+    merged = {(r["tier"], r["day"]): r["source"] for r in store.read_ledger().collect()
+              if r["source"].startswith("merge")}
+    assert merged[("1h", old)] == "merge" and merged[("1d", old)] == "merge:1h"
+
+    merge_batch(store, late, batch_id=5)  # at-least-once replay
+    assert _stored_partials(store, days) == got
 
 
 def test_merge_batch_replay_is_idempotent(spark, channels, tmp_path):

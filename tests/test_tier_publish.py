@@ -52,7 +52,7 @@ def published(spark, channels, tmp_path_factory):
     def spy(self, row):
         published_rows = spark.read.parquet(_day_dir(self.root, row["tier"], row["day"])).count()
         finer_rows = None
-        if row["source"].startswith("tier:") and not row["source"].endswith(":bulk"):
+        if row["source"].startswith("tier:"):
             finer = row["source"].split(":")[1]
             finer_rows = spark.read.parquet(_day_dir(self.root, finer, row["day"])).count()
         seen.append((dict(row), published_rows, finer_rows))

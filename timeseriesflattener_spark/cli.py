@@ -42,7 +42,8 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--salt", type=int, default=None, help="salt partitions for hot conversations")
     p.add_argument(
         "--per-unit", action="store_true",
-        help="one Spark job per (tier, day) instead of one per tier (default bulk; 2.5x faster)",
+        help="one Spark job per (tier, day) through the same kernel, instead of one per tier "
+        "(default bulk; 2.5x faster)",
     )
 
     p = sub.add_parser("retention", help="expire aged fine-tier partitions")

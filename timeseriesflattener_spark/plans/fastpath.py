@@ -57,8 +57,7 @@ def flatten_aligned(
             )
         ),
     )
-    primitive = R._is_primitive_schema(partials, value_cols)
-    combine = [e for vc in value_cols for e in R._combine_exprs(vc, primitive)]
+    combine = [e for vc in value_cols for e in R._combine_exprs(vc)]
     windows = (
         contributed.groupBy(entity_col, "__window_end")
         .agg(*combine)

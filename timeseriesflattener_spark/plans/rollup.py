@@ -6,7 +6,7 @@ North-rule core (BASELINE.json): continuous aggregates materialised at
 are **rolled up from the 1m partials — never recomputed from raw**
 (SURVEY.md §7.0). That only works for algebraic aggregators, so the
 partial-state schema per value column ``c`` is the classic moment/
-extreme set:
+extreme set (``PARTIAL_SUFFIXES``, in storage order):
 
     {c}__n      count of non-null values
     {c}__sum    Σy
@@ -16,10 +16,16 @@ extreme set:
     {c}__sx     Σx, {c}__sxx  Σx², {c}__sxy  Σxy
                 (x = whole days since epoch, truncated — the v2 slope
                  x-axis, reference ``aggregators.py:205-207``)
-    {c}__earliest / {c}__latest
-                struct<ts_micros, ord, value> min/max — argmin/argmax
-                composed across tiers by struct ordering; ``ord`` is the
-                stable tiebreaker (turn_idx on transcripts)
+    {c}__earliest_ts / {c}__earliest_v
+                min event micros of a non-null value, and that value
+    {c}__latest_ts / {c}__latest_v
+                max event micros of a non-null value, and that value
+
+earliest/latest are ``min_by``/``max_by`` on the timestamp, composed
+across tiers the same way, so the whole aggregation stays in
+whole-stage-codegen HashAggregate. They are exact only when timestamps
+are unique per (entity, bucket) — transcripts guarantee it (strictly
+increasing ts per conv_id); on a tie the chosen value is unspecified.
 
 Every reference aggregator except ``unique_count`` finalises exactly
 from this state (mean=Σy/n, var=(Σy²-Σy²/n)/(n-1), slope=sample
@@ -52,7 +58,11 @@ TIER_ORDER: list[str] = ["1m", "1h", "1d"]
 
 MICROS_PER_DAY = 86_400_000_000
 
-_STAT_SUFFIXES = ["n", "sum", "min", "max", "sumsq", "sx", "sxx", "sxy", "earliest", "latest"]
+#: stored partial-state columns per value column c, as f"{c}__{suffix}"
+PARTIAL_SUFFIXES: tuple[str, ...] = (
+    "n", "sum", "min", "max", "sumsq", "sx", "sxx", "sxy",
+    "earliest_ts", "earliest_v", "latest_ts", "latest_v",
+)
 
 
 def tier_micros(tier: str) -> int:
@@ -67,8 +77,9 @@ _FLOOR_VARIANT = "pmod"
 
 
 def set_floor_variant(variant: str) -> None:
-    """Bench-harness seam for the pmod-vs-cast A/B
-    (tools/ab_bucket_floor.py -> bench.py --one-leg). "cast" is the
+    """Bench-harness seam for the pmod-vs-cast A/B: bench.py passes its
+    ``TSF_BUCKET_FLOOR`` variable here; the measured A/B is recorded in
+    BENCH.md §2a. "cast" is the
     pre-r3 truncating formulation, kept ONLY to keep the measured
     comparison reproducible — it mis-buckets pre-epoch timestamps, so
     selecting it warns loudly and must never reach a real job."""
@@ -107,14 +118,13 @@ def _pcol(value_col: str, suffix: str) -> str:
     return f"{value_col}__{suffix}"
 
 
-def _partial_exprs(
-    value_col: str, ts: Column, order: Column | None, argminmax: str = "struct"
-) -> list[Column]:
+def _partial_exprs(value_col: str, ts: Column) -> list[Column]:
     y = F.col(value_col).cast("double")
     # v2 slope x-axis: whole days since epoch, truncated toward zero
     x = (micros(ts) / F.lit(MICROS_PER_DAY)).cast("long").cast("double")
     x = F.when(y.isNotNull(), x)
-    base = [
+    tsm = F.when(y.isNotNull(), micros(ts))
+    return [
         F.count(y).alias(_pcol(value_col, "n")),
         F.sum(y).alias(_pcol(value_col, "sum")),
         F.min(y).alias(_pcol(value_col, "min")),
@@ -123,35 +133,16 @@ def _partial_exprs(
         F.sum(x).alias(_pcol(value_col, "sx")),
         F.sum(x * x).alias(_pcol(value_col, "sxx")),
         F.sum(x * y).alias(_pcol(value_col, "sxy")),
-    ]
-    if argminmax == "primitive":
-        # all-primitive argmin/argmax: min_by/max_by keep the whole
-        # aggregation in whole-stage-codegen HashAggregate. Exact when
-        # timestamps are unique per (entity, bucket) — guaranteed for
-        # transcripts (strictly increasing ts per conv_id); the struct
-        # mode resolves ties by the order column but forces
-        # SortAggregate (~3x slower on the partial pass, measured).
-        tsm = F.when(y.isNotNull(), micros(ts))
-        return base + [
-            F.min(tsm).alias(_pcol(value_col, "earliest_ts")),
-            F.min_by(y, tsm).alias(_pcol(value_col, "earliest_v")),
-            F.max(tsm).alias(_pcol(value_col, "latest_ts")),
-            F.max_by(y, tsm).alias(_pcol(value_col, "latest_v")),
-        ]
-    arg_fields = [micros(ts).alias("ts_micros")]
-    if order is not None:
-        arg_fields.append(order.cast("long").alias("ord"))
-    arg_fields.append(y.alias("value"))
-    arg = F.when(y.isNotNull(), F.struct(*arg_fields))
-    return base + [
-        F.min(arg).alias(_pcol(value_col, "earliest")),
-        F.max(arg).alias(_pcol(value_col, "latest")),
+        F.min(tsm).alias(_pcol(value_col, "earliest_ts")),
+        F.min_by(y, tsm).alias(_pcol(value_col, "earliest_v")),
+        F.max(tsm).alias(_pcol(value_col, "latest_ts")),
+        F.max_by(y, tsm).alias(_pcol(value_col, "latest_v")),
     ]
 
 
-def _combine_exprs(value_col: str, primitive: bool = False) -> list[Column]:
+def _combine_exprs(value_col: str) -> list[Column]:
     c = lambda s: F.col(_pcol(value_col, s))  # noqa: E731
-    base = [
+    return [
         F.sum(c("n")).alias(_pcol(value_col, "n")),
         F.sum(c("sum")).alias(_pcol(value_col, "sum")),
         F.min(c("min")).alias(_pcol(value_col, "min")),
@@ -160,22 +151,11 @@ def _combine_exprs(value_col: str, primitive: bool = False) -> list[Column]:
         F.sum(c("sx")).alias(_pcol(value_col, "sx")),
         F.sum(c("sxx")).alias(_pcol(value_col, "sxx")),
         F.sum(c("sxy")).alias(_pcol(value_col, "sxy")),
+        F.min(c("earliest_ts")).alias(_pcol(value_col, "earliest_ts")),
+        F.min_by(c("earliest_v"), c("earliest_ts")).alias(_pcol(value_col, "earliest_v")),
+        F.max(c("latest_ts")).alias(_pcol(value_col, "latest_ts")),
+        F.max_by(c("latest_v"), c("latest_ts")).alias(_pcol(value_col, "latest_v")),
     ]
-    if primitive:
-        return base + [
-            F.min(c("earliest_ts")).alias(_pcol(value_col, "earliest_ts")),
-            F.min_by(c("earliest_v"), c("earliest_ts")).alias(_pcol(value_col, "earliest_v")),
-            F.max(c("latest_ts")).alias(_pcol(value_col, "latest_ts")),
-            F.max_by(c("latest_v"), c("latest_ts")).alias(_pcol(value_col, "latest_v")),
-        ]
-    return base + [
-        F.min(c("earliest")).alias(_pcol(value_col, "earliest")),
-        F.max(c("latest")).alias(_pcol(value_col, "latest")),
-    ]
-
-
-def _is_primitive_schema(partials: DataFrame, value_cols) -> bool:
-    return _pcol(list(value_cols)[0], "earliest_ts") in partials.columns
 
 
 def partial_aggregate(
@@ -186,31 +166,25 @@ def partial_aggregate(
     order_col: str | None = "turn_idx",
     tier: str = "1m",
     salt_partitions: int | None = None,
-    argminmax: str = "primitive",
 ) -> DataFrame:
     """Raw events -> one partial-state row per (entity, bucket).
 
-    ``argminmax='primitive'`` (default) keeps earliest/latest as
-    min_by/max_by on the timestamp — whole-stage-codegen HashAggregate,
-    exact when timestamps are unique per entity (transcripts are);
-    ``'struct'`` resolves timestamp ties by the order column at the cost
-    of SortAggregate execution."""
+    ``order_col`` (or the timestamp when None) only seeds the
+    deterministic salt of ``salt_partitions``; it does not enter the
+    partial state."""
     ts = F.col(ts_col)
-    order = F.col(order_col) if order_col else None
-    primitive = argminmax == "primitive"
     bucketed = df.withColumn("bucket_start", bucket_expr(ts, tier))
+    exprs = [e for vc in value_cols for e in _partial_exprs(vc, ts)]
 
     if salt_partitions and salt_partitions > 1:
-        salt_src = order if order is not None else micros(ts)
+        salt_src = F.col(order_col) if order_col else micros(ts)
         bucketed = bucketed.withColumn(
             "__salt", F.pmod(F.hash(salt_src), F.lit(salt_partitions))
         )
-        exprs = [e for vc in value_cols for e in _partial_exprs(vc, ts, order, argminmax)]
         stage1 = bucketed.groupBy(entity_col, "bucket_start", "__salt").agg(*exprs)
-        combine = [e for vc in value_cols for e in _combine_exprs(vc, primitive)]
+        combine = [e for vc in value_cols for e in _combine_exprs(vc)]
         return stage1.groupBy(entity_col, "bucket_start").agg(*combine)
 
-    exprs = [e for vc in value_cols for e in _partial_exprs(vc, ts, order, argminmax)]
     return bucketed.groupBy(entity_col, "bucket_start").agg(*exprs)
 
 
@@ -223,8 +197,7 @@ def rollup(
     """Re-bucket finer-tier partials into a coarser tier by combining —
     never touches raw data. Exact for every stat in the partial schema."""
     coarser = floor_to_width(F.col("bucket_start"), tier_micros(to_tier))
-    primitive = _is_primitive_schema(partials, value_cols)
-    combine = [e for vc in value_cols for e in _combine_exprs(vc, primitive)]
+    combine = [e for vc in value_cols for e in _combine_exprs(vc)]
     return (
         partials.withColumn("bucket_start", coarser)
         .groupBy(entity_col, "bucket_start")
@@ -245,7 +218,6 @@ def finalize(
     {c}_has_values`` — numerically equal to running the reference
     aggregators over the bucket's raw rows (see tests).
     """
-    primitive = _is_primitive_schema(partials, value_cols)
     out: list[Column] = [F.col(entity_col), F.col("bucket_start")]
     if include_bucket_ts:
         out.append(F.timestamp_micros(F.col("bucket_start")).alias("bucket_ts"))
@@ -263,16 +235,8 @@ def finalize(
             F.when(n > 0, s / n).alias(f"{vc}_mean"),
             F.when(n > 1, (sumsq - s * s / n) / (n - F.lit(1))).alias(f"{vc}_var"),
             F.when((n > 1) & (var_x != 0), (sxy - sx * s / n) / var_x).alias(f"{vc}_slope"),
-            (
-                F.col(_pcol(vc, "earliest_v"))
-                if primitive
-                else F.col(_pcol(vc, "earliest")).getField("value")
-            ).alias(f"{vc}_earliest"),
-            (
-                F.col(_pcol(vc, "latest_v"))
-                if primitive
-                else F.col(_pcol(vc, "latest")).getField("value")
-            ).alias(f"{vc}_latest"),
+            F.col(_pcol(vc, "earliest_v")).alias(f"{vc}_earliest"),
+            F.col(_pcol(vc, "latest_v")).alias(f"{vc}_latest"),
             (n > 0).alias(f"{vc}_has_values"),
         ]
     return partials.select(*out)

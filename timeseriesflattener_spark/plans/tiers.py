@@ -118,6 +118,8 @@ class TierStore:
     value_cols: Sequence[str]
     entity_col: str = "conv_id"
     ts_col: str = "ts"
+    #: only seeds the deterministic salt of ``salt_partitions``
+    #: (``partial_aggregate``); it does not enter the partial state
     order_col: str | None = "turn_idx"
     tiers: Sequence[str] = field(default_factory=lambda: list(R.TIER_ORDER))
     salt_partitions: int | None = None
@@ -127,9 +129,6 @@ class TierStore:
     tier_codec: dict = field(
         default_factory=lambda: {"1m": "lz4", "1h": "zstd", "1d": "zstd"}
     )
-    #: record exact raw input row counts in the ledger (costs one extra
-    #: scan per (1m, day) unit — measured ~50% of total job time)
-    track_raw_input_rows: bool = False
     #: test seam — called before each unit is computed; raising aborts the job
     on_unit_start: Callable[[str, dt.date], None] | None = None
     #: "parquet" (default, partition-per-directory) or "iceberg"
@@ -305,11 +304,14 @@ class TierStore:
         (default: every day present in ``raw``). Resumable: units already
         marked done in the ledger are skipped. Returns run metrics.
 
-        ``bulk=True`` computes all missing days of a tier in ONE Spark
-        job (partitioned write + per-day publish) instead of a job per
-        (tier, day) — the production shape at 100 TB where per-job fixed
-        costs (planning, scheduling, scan setup) would otherwise
-        multiply by the day count. Ledger granularity, resume semantics
+        One kernel (``_materialize_days``) builds every (tier, day)
+        partition; ``bulk`` only sets how many days one Spark job covers.
+        ``bulk=True`` runs it once per tier over all missing days — the
+        production shape at 100 TB, where per-job fixed costs (planning,
+        scheduling, scan setup) would otherwise multiply by the day count;
+        its ledger sources carry a ``:bulk`` suffix. ``bulk=False`` runs it
+        once per day, one job per (tier, day), calling ``on_unit_start``
+        just before each day. Output, ledger granularity, resume semantics
         and the on-disk layout are identical.
         """
         job_id = uuidlib.uuid4().hex[:12]
@@ -323,37 +325,36 @@ class TierStore:
             skipped.extend((tier, day) for day in days if (tier, day) in done)
             if not todo:
                 continue
-            if bulk:
+            for job_days in [todo] if bulk else [[day] for day in todo]:
                 if self.on_unit_start is not None:
-                    for day in todo:
+                    for day in job_days:
                         self.on_unit_start(tier, day)
-                self._materialize_tier_bulk(raw, tier, finer, todo, job_id)
-                computed.extend((tier, day) for day in todo)
-            else:
-                for day in todo:
-                    # callback immediately before each unit computes (the
-                    # kill/resume test seam relies on this interleaving)
-                    if self.on_unit_start is not None:
-                        self.on_unit_start(tier, day)
-                    self._materialize_unit(raw, tier, finer, day, job_id)
-                    computed.append((tier, day))
+                self._materialize_days(raw, tier, finer, job_days, job_id, bulk)
+                computed.extend((tier, day) for day in job_days)
         return {"job_id": job_id, "computed": computed, "skipped": skipped}
 
-    def _materialize_tier_bulk(
-        self, raw: DataFrame, tier: str, finer: str | None, days: list[dt.date], job_id: str
+    def _materialize_days(
+        self, raw: DataFrame, tier: str, finer: str | None, days: list[dt.date],
+        job_id: str, bulk: bool,
     ) -> None:
-        """All missing days of one tier in a single partitioned-write job."""
+        """``days`` of one tier in a single partitioned-write job, then a
+        per-day publish. ``input_rows`` is -1 for a raw source and the
+        finer day's row count for a finer-tier source."""
         t0 = time.time()
         day_set = {d.isoformat() for d in days}
         if finer is None:
             source = "raw"
             base = raw
             if "ts_day" in raw.columns:
+                # day-partitioned source: prune to the days' partitions
                 base = base.filter(F.col("ts_day").isin(sorted(day_set)))
             else:
                 base = base.filter(
                     F.to_date(F.col(self.ts_col)).isin([F.lit(d) for d in days])
                 )
+            # no repartition of raw by entity: the map-side combiner
+            # already shrinks what the groupBy exchange carries, and a
+            # repartition would shuffle the full raw rows (measured slower)
             partials = R.partial_aggregate(
                 base.drop("ts_day") if "ts_day" in raw.columns else base,
                 self.value_cols,
@@ -380,22 +381,19 @@ class TierStore:
                 to_tier=tier,
                 entity_col=self.entity_col,
             )
+        if bulk:
+            source += ":bulk"
 
         if self.format == "iceberg":
-            # one snapshot commit covers every missing day of the tier
+            # one snapshot commit covers every day of the job
             self._iceberg_publish(partials, tier, days)
             wall = time.time() - t0
-            counts = {
-                r["day"]: r["n"]
-                for r in self.spark.table(self._tier_table(tier))
-                .filter(F.col("day").isin([F.lit(d) for d in days]))
-                .groupBy("day")
-                .agg(F.count("*").alias("n"))
-                .collect()
-            }
+            counts = self._iceberg_day_counts(tier, days)
+            inputs = self._iceberg_day_counts(finer, days) if finer else {}
             for day in days:
                 self._ledger_done(
-                    tier, day, source + ":bulk", job_id, -1, counts.get(day, 0), wall / len(days)
+                    tier, day, source, job_id,
+                    inputs.get(day, 0) if finer else -1, counts.get(day, 0), wall / len(days),
                 )
             return
 
@@ -411,82 +409,30 @@ class TierStore:
             .parquet(staging)
         )
         wall = time.time() - t0
-        # per-day publish + ledger (identical layout to the unit path)
         for day in days:
             src = os.path.join(staging, f"day={day.isoformat()}")
             if not os.path.isdir(src):
                 # day with no rows: write a schema-bearing empty parquet,
-                # not a bare directory — read_tier_day / a later unit-mode
-                # resume would otherwise crash on 'Unable to infer schema'
+                # not a bare directory — read_tier_day / a later rollup
+                # from this day would otherwise crash on 'Unable to infer schema'
                 partials.drop("day").limit(0).write.option(
                     "compression", self._codec(tier)
                 ).mode("overwrite").parquet(src)
+            input_rows = _parquet_rows(_day_dir(self.root, finer, day)) if finer else -1
             self._publish_unit(
-                src, tier, day, source + ":bulk", job_id, wall / len(days), input_rows=-1
+                src, tier, day, source, job_id, wall / len(days), input_rows=input_rows
             )
         shutil.rmtree(staging, ignore_errors=True)
 
-    def _materialize_unit(
-        self, raw: DataFrame, tier: str, finer: str | None, day: dt.date, job_id: str
-    ) -> None:
-        t0 = time.time()
-        day_start = dt.datetime.combine(day, dt.time.min)
-        day_end = day_start + dt.timedelta(days=1)
-
-        if finer is None:
-            source = "raw"
-            ts = F.col(self.ts_col)
-            unit_input = raw.filter((ts >= F.lit(day_start)) & (ts < F.lit(day_end)))
-            if "ts_day" in raw.columns:
-                # day-partitioned source: prune to the unit's partition
-                # (the ts range filter alone cannot prune a ts_day layout)
-                unit_input = unit_input.filter(F.col("ts_day") == F.lit(day))
-            # NOTE: do NOT pre-repartition raw by entity here — the map-side
-            # combiner already reduces what the groupBy exchange carries;
-            # an explicit repartition would shuffle the full raw rows
-            # (measured slower), and each tier materialises via parquet so
-            # exchange reuse across tiers never applies.
-            partials = R.partial_aggregate(
-                unit_input.drop("ts_day") if "ts_day" in raw.columns else unit_input,
-                self.value_cols,
-                entity_col=self.entity_col,
-                ts_col=self.ts_col,
-                order_col=self.order_col,
-                tier=tier,
-                salt_partitions=self.salt_partitions,
-            )
-        else:
-            source = f"tier:{finer}"
-            unit_input = self.read_tier_day(finer, day)
-            partials = R.rollup(
-                unit_input, self.value_cols, to_tier=tier, entity_col=self.entity_col
-            )
-
-        # input rows: the finer tier's row count (footers on parquet);
-        # for raw, a separate full-scan count per unit measured ~50% of
-        # the whole job, so it is opt-in (lineage only needs relative
-        # magnitudes)
-        if finer is None:
-            input_rows = -1 if not self.track_raw_input_rows else unit_input.count()
-        elif self.format == "iceberg":
-            input_rows = unit_input.count()
-        else:
-            input_rows = _parquet_rows(_day_dir(self.root, finer, day))
-        if self.format == "iceberg":
-            # a snapshot commit IS the atomic publish
-            self._iceberg_publish(partials, tier, [day])
-            output_rows = self._iceberg_read_day(tier, day).count()
-            self._ledger_done(
-                tier, day, source, job_id, input_rows, output_rows, time.time() - t0
-            )
-            return
-        tmp_dir = _day_dir(self.root, tier, day) + f".tmp-{job_id}"
-        partials.write.option("compression", self._codec(tier)).mode(
-            "overwrite"
-        ).parquet(tmp_dir)
-        self._publish_unit(
-            tmp_dir, tier, day, source, job_id, time.time() - t0, input_rows=input_rows
-        )
+    def _iceberg_day_counts(self, tier: str, days: Sequence[dt.date]) -> dict[dt.date, int]:
+        return {
+            r["day"]: r["n"]
+            for r in self.spark.table(self._tier_table(tier))
+            .filter(F.col("day").isin([F.lit(d) for d in days]))
+            .groupBy("day")
+            .agg(F.count("*").alias("n"))
+            .collect()
+        }
 
     # ---------------- reads ----------------
 

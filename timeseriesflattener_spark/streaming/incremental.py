@@ -5,12 +5,14 @@ The reference has no streaming at all (SURVEY.md §2.6) — its closest
 analog is ``step_size`` chunking. Here incrementality falls out of the
 algebra: partial states combine, so
 
-    new 1m partials(batch)  ∪  existing 1m partials(day)
-        --combine-->  updated 1m partials(day)
-        --rollup-->   updated 1h/1d partials(day)
+    new 1m partials(batch)  ∪  existing base partials(day)
+        --combine-->  updated base partials(day)
+        --rollup-->   updated coarser partials(day)
 
-Each merge touches only the (tier, day) units the batch lands in; the
-ledger records them like any other materialisation (source="merge").
+The base is the finest tier still holding the day (1m unless retention
+dropped it). Each merge touches only the (tier, day) units the batch
+lands in; the ledger records them like any other materialisation
+(source="merge").
 
 Two entry points:
 
@@ -20,7 +22,7 @@ Two entry points:
   Streaming wrapper: ``readStream`` on a parquet directory ->
   ``foreachBatch(merge_batch)`` with a checkpointLocation. foreachBatch
   is only AT-LEAST-ONCE: a micro-batch can replay after a crash between
-  a publish and the streaming checkpoint commit. The 1m combine step is
+  a publish and the streaming checkpoint commit. The base combine step is
   not naturally idempotent (replaying it would double-count sums), so
   ``merge_batch`` ledgers every publish under ``job_id =
   "stream-{batch_id}"`` and skips (tier, day) units already ledgered
@@ -43,20 +45,22 @@ from ..plans import rollup as R
 from ..plans.tiers import TierStore, _day_dir
 
 
-def _affected_days(batch: DataFrame, ts_col: str) -> list[dt.date]:
-    rows = batch.select(F.to_date(ts_col).alias("d")).distinct().collect()
-    return sorted(r["d"] for r in rows)
-
-
 def merge_batch(
     store: TierStore, batch: DataFrame, batch_id: int | str | None = None
 ) -> list[dt.date]:
     """Merge a batch of raw rows into every tier. Returns affected days.
 
+    Each day merges into its base tier: the finest tier of ``store.tiers``
+    that still holds the day, or 1m for a new day. Retention may already
+    have dropped a day's finer partitions; the batch's 1m partials are
+    then combined into the base tier's existing partials, the coarser
+    tiers are rolled up from the result, and the dropped finer tiers stay
+    absent.
+
     ``batch_id`` makes the merge idempotent under foreachBatch's
     at-least-once replay: units already ledgered under this batch's
     job_id are skipped, so re-running the same batch never combines the
-    same rows into the 1m partials twice. Pass None only for ad-hoc
+    same rows into the base tier twice. Pass None only for ad-hoc
     batches that will not be replayed.
     """
     if getattr(store, "format", "parquet") != "parquet":
@@ -65,11 +69,17 @@ def merge_batch(
             "Iceberg store run batch materialize() per micro-batch window "
             "(the MERGE-INTO streaming path needs a live catalog to build on)"
         )
-    days = _affected_days(batch, store.ts_col)
+    days = store._raw_days(batch)
     if not days:
         return []
     spark = store.spark
     job_id = f"stream-{batch_id}" if batch_id is not None else "stream"
+    bases = {
+        day: next(
+            (t for t in store.tiers if os.path.isdir(_day_dir(store.root, t, day))), "1m"
+        )
+        for day in days
+    }
 
     already: set[tuple[str, dt.date]] = set()
     if batch_id is not None:
@@ -82,17 +92,18 @@ def merge_batch(
         # the job marker travels INSIDE the published data directory
         # (written before the atomic os.replace), so a crash in the
         # window between publish and ledger append still leaves proof —
-        # without it, a replay would re-combine already-published 1m
+        # without it, a replay would re-combine already-published base
         # partials and double-count
-        for day in days:
-            if ("1m", day) not in already and os.path.isfile(
-                os.path.join(_day_dir(store.root, "1m", day), f"_job-{job_id}")
+        for day, base in bases.items():
+            if (base, day) not in already and os.path.isfile(
+                os.path.join(_day_dir(store.root, base, day), f"_job-{job_id}")
             ):
-                already.add(("1m", day))
+                already.add((base, day))
 
-    for day in days:
-        if ("1m", day) in already:
-            pass  # replayed batch: 1m already combined — never re-combine
+    for day, base in bases.items():
+        base_dir = _day_dir(store.root, base, day)
+        if (base, day) in already:
+            pass  # replayed batch: base already combined — never re-combine
         else:
             day_start = dt.datetime.combine(day, dt.time.min)
             day_end = day_start + dt.timedelta(days=1)
@@ -108,26 +119,26 @@ def merge_batch(
                 tier="1m",
                 salt_partitions=store.salt_partitions,
             )
-            base_dir = _day_dir(store.root, "1m", day)
             if os.path.isdir(base_dir):
                 existing = spark.read.parquet(base_dir)
-                # combine = rollup to the same tier (same bucket width)
+                # combine = rollup into the base tier (for 1m: same width)
                 merged = R.rollup(
                     existing.unionByName(new_1m),
                     store.value_cols,
-                    to_tier="1m",
+                    to_tier=base,
                     entity_col=store.entity_col,
                 )
             else:
                 merged = new_1m
-            _publish(store, merged, "1m", day, source="merge", job_id=job_id)
+            _publish(store, merged, base, day, source="merge", job_id=job_id)
 
-        # coarser tiers rebuild from the stored 1m partials of the day —
+        # coarser tiers rebuild from the stored base partials of the day —
         # a deterministic overwrite, so re-running them on replay is safe
-        # (and necessary if the crash hit between 1m and 1h publishes)
-        fine = spark.read.parquet(_day_dir(store.root, "1m", day))
+        # (and necessary if the crash hit between the base and a coarser
+        # publish)
+        fine = spark.read.parquet(base_dir)
         for tier in store.tiers:
-            if tier == "1m":
+            if R.TIER_SECONDS[tier] <= R.TIER_SECONDS[base]:
                 continue
             rolled = R.rollup(
                 fine,
@@ -135,7 +146,7 @@ def merge_batch(
                 to_tier=tier,
                 entity_col=store.entity_col,
             )
-            _publish(store, rolled, tier, day, source="merge:1m", job_id=job_id)
+            _publish(store, rolled, tier, day, source=f"merge:{base}", job_id=job_id)
     return days
 
 

@@ -39,9 +39,8 @@ def windowed_partials(
 
     Default output: ``bucket_start`` (epoch micros of the window start)
     + ``{col}_{count,sum,min,max}``. ``full_stats=True`` emits the FULL
-    ``plans.rollup`` partial-state schema instead (``{c}__n/__sum/__min/
-    __max/__sumsq/__sx/__sxx/__sxy/__earliest_ts/__earliest_v/
-    __latest_ts/__latest_v``, primitive argmin/argmax) — the streaming
+    ``plans.rollup`` partial-state schema instead (``{c}__{suffix}`` for
+    each of ``plans.rollup.PARTIAL_SUFFIXES``) — the streaming
     sink then feeds ``plans.rollup.finalize``/``rollup`` directly, so
     every reference aggregator (mean/var/slope/earliest/latest/...) is
     available over watermark-finalised windows, and stream output can be
@@ -49,7 +48,7 @@ def windowed_partials(
     output mode a row emits exactly once, when the watermark passes its
     window end.
     """
-    from ..plans.rollup import _partial_exprs
+    from ..plans.rollup import PARTIAL_SUFFIXES, _partial_exprs
 
     width = TIER_WINDOW[tier]
     watermarked = stream_df.withWatermark(ts_col, watermark)
@@ -57,19 +56,8 @@ def windowed_partials(
         F.col(entity_col), F.window(F.col(ts_col), width).alias("__w")
     )
     if full_stats:
-        exprs = [
-            e
-            for vc in value_cols
-            for e in _partial_exprs(vc, F.col(ts_col), None, argminmax="primitive")
-        ]
-        out_cols = [
-            c for vc in value_cols for c in (
-                f"{vc}__n", f"{vc}__sum", f"{vc}__min", f"{vc}__max",
-                f"{vc}__sumsq", f"{vc}__sx", f"{vc}__sxx", f"{vc}__sxy",
-                f"{vc}__earliest_ts", f"{vc}__earliest_v",
-                f"{vc}__latest_ts", f"{vc}__latest_v",
-            )
-        ]
+        exprs = [e for vc in value_cols for e in _partial_exprs(vc, F.col(ts_col))]
+        out_cols = [f"{vc}__{s}" for vc in value_cols for s in PARTIAL_SUFFIXES]
         return grouped.agg(*exprs).select(
             entity_col,
             F.unix_micros(F.col("__w.start")).alias("bucket_start"),
