@@ -1,19 +1,23 @@
 """Tier publishing without read-back jobs: ledger row counts come from
 parquet footers and ledger decisions are read with pyarrow, so they must
 equal what a Spark read of the published data and of the ledger says;
-ledger appends are atomic; the compaction row guard still holds."""
+ledger appends are atomic; the compaction row guard still holds. A merge
+writes once per tier, and reads of the store's partials take their
+schema from a footer instead of a Spark inference job."""
 
 from __future__ import annotations
 
 import datetime as dt
 import os
+import uuid
 
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import DataFrameReader, DataFrameWriter
 from pyspark.sql import functions as F
 from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
-from timeseriesflattener_spark.plans.tiers import TierStore, _day_dir
+from timeseriesflattener_spark.plans.tiers import TierStore, _day_dir, _parquet_rows
 from timeseriesflattener_spark.sources.transcripts import derive_channels, synthesize_transcripts
 from timeseriesflattener_spark.streaming.incremental import merge_batch
 
@@ -193,3 +197,82 @@ def test_compaction_that_drops_rows_raises_and_changes_nothing(
     assert store.read_ledger().count() == events_before
     assert "compact" not in {r["source"] for r in store.read_ledger().collect()}
     assert not [d for d in os.listdir(os.path.dirname(ddir)) if ".compact-" in d]
+
+
+def _jobs_started(spark, fn):
+    """(fn's result, ids of the Spark jobs it started), from the status
+    tracker of a job group set around the call."""
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_merge_writes_once_per_tier_and_store_reads_start_no_job(
+    spark, channels, tmp_path, monkeypatch
+):
+    store = TierStore(spark, str(tmp_path / "jobs"), VALUE_COLS)
+    store.materialize(channels.filter(F.col("turn_idx") % 2 == 0), bulk=True)
+    days = store._raw_days(channels)
+    assert len(days) == 2
+
+    writes: list[str] = []
+    reads: list[tuple[tuple, list[int]]] = []
+    real_write, real_read = DataFrameWriter.parquet, DataFrameReader.parquet
+
+    def spy_write(self, path, *args, **kwargs):
+        writes.append(path)
+        return real_write(self, path, *args, **kwargs)
+
+    def spy_read(self, *paths, **kwargs):
+        df, jobs = _jobs_started(spark, lambda: real_read(self, *paths, **kwargs))
+        reads.append((paths, jobs))
+        return df
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy_write)
+    monkeypatch.setattr(DataFrameReader, "parquet", spy_read)
+    # both days already hold 1m partials, so both have base 1m
+    assert merge_batch(store, channels.filter(F.col("turn_idx") % 2 == 1), batch_id=0) == days
+    monkeypatch.undo()
+
+    assert len(writes) == 3, writes
+    base_dirs = {_day_dir(store.root, "1m", d) for d in days}
+    assert [set(paths) for paths, _ in reads] == [base_dirs, base_dirs]
+    assert [jobs for _, jobs in reads] == [[], []]
+    for read in (lambda: store.read_tier("1h"), lambda: store.read_tier_day("1d", days[0])):
+        df, jobs = _jobs_started(spark, read)
+        assert jobs == [], jobs
+        assert df.columns[:2] == ["conv_id", "bucket_start"]
+
+
+def test_footer_schema_equals_spark_inferred_schema(spark, channels, tmp_path):
+    store = TierStore(spark, str(tmp_path / "schema"), VALUE_COLS)
+    days = store._raw_days(channels)
+    ghost = max(days) + dt.timedelta(days=1)
+    store.materialize(channels, days=days + [ghost], bulk=True)
+
+    def fields(schema):
+        return [(f.name, f.dataType, f.nullable) for f in schema.fields]
+
+    for tier in ("1m", "1h", "1d"):
+        assert _parquet_rows(_day_dir(store.root, tier, ghost)) == 0
+        for day in days + [ghost]:
+            inferred = spark.read.parquet(_day_dir(store.root, tier, day)).schema
+            got = store.read_tier_day(tier, day).schema
+            assert fields(got) == fields(inferred) and got == inferred, (tier, day)
+        whole = store.read_tier(tier)
+        assert whole.schema == spark.read.parquet(_day_dir(store.root, tier, days[0])).schema
+        assert whole.count() == sum(_parquet_rows(_day_dir(store.root, tier, d)) for d in days)
+
+    store.apply_retention({"1m": 0}, now=ghost + dt.timedelta(days=1))
+    with pytest.raises(FileNotFoundError, match="tier '1m' has no day partitions"):
+        store.read_tier("1m")
+    with pytest.raises(FileNotFoundError, match="tier '1w' has no day partitions"):
+        store.read_tier("1w")
+

@@ -18,7 +18,9 @@ North-rule requirements covered here (BASELINE.json):
   from the parquet footers of the files just written, not from a Spark
   read-back, and the ledger decisions (``completed_units``, a merge's
   replay set) read the event files with pyarrow — no Spark job runs
-  to publish or to decide what to skip.
+  to publish or to decide what to skip. Reads of the store's own
+  partials (``TierStore._read_partials``) take their schema from one
+  parquet footer, so Spark runs no schema-inference job either.
 - **retention**: fine tiers age out first (drop whole day partitions),
   coarse tiers persist — ``apply_retention``.
 
@@ -61,6 +63,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from . import rollup as R
 
@@ -89,15 +92,17 @@ def _day_dir(root: str, tier: str, day: dt.date) -> str:
     return os.path.join(root, "partials", f"tier={tier}", f"day={day.isoformat()}")
 
 
+def _data_files(path: str) -> list[str]:
+    """The parquet data files of the directory ``path``. Skips
+    ``_``/``.``-prefixed names — job markers, ``_SUCCESS``, checksum
+    files — as Spark's reader does."""
+    return [os.path.join(path, f) for f in sorted(os.listdir(path)) if not f.startswith(("_", "."))]
+
+
 def _parquet_rows(path: str) -> int:
     """Rows in the parquet directory ``path``, summed from its files'
-    footers (no Spark job). Skips ``_``/``.``-prefixed names — job
-    markers, ``_SUCCESS``, checksum files — as Spark's reader does."""
-    return sum(
-        pq.read_metadata(os.path.join(path, f)).num_rows
-        for f in os.listdir(path)
-        if not f.startswith(("_", "."))
-    )
+    footers (no Spark job)."""
+    return sum(pq.read_metadata(f).num_rows for f in _data_files(path))
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -337,9 +342,10 @@ class TierStore:
         self, raw: DataFrame, tier: str, finer: str | None, days: list[dt.date],
         job_id: str, bulk: bool,
     ) -> None:
-        """``days`` of one tier in a single partitioned-write job, then a
-        per-day publish. ``input_rows`` is -1 for a raw source and the
-        finer day's row count for a finer-tier source."""
+        """``days`` of one tier through ``_write_days``: one
+        partitioned-write job, then a per-day publish. ``input_rows`` is
+        -1 for a raw source and the finer day's row count for a
+        finer-tier source."""
         t0 = time.time()
         day_set = {d.isoformat() for d in days}
         if finer is None:
@@ -373,8 +379,7 @@ class TierStore:
                     .drop("day")
                 )
             else:
-                paths = [_day_dir(self.root, finer, d) for d in days]
-                finer_df = self.spark.read.parquet(*paths)
+                finer_df = self._read_partials([_day_dir(self.root, finer, d) for d in days])
             partials = R.rollup(
                 finer_df,
                 self.value_cols,
@@ -397,32 +402,52 @@ class TierStore:
                 )
             return
 
+        input_rows = {
+            day: _parquet_rows(_day_dir(self.root, finer, day)) if finer else -1 for day in days
+        }
+        self._write_days(partials, tier, days, source, job_id, input_rows=input_rows)
+
+    def _write_days(
+        self, partials: DataFrame, tier: str, days: list[dt.date], source: str,
+        job_id: str, input_rows: dict[dt.date, int] | None = None,
+        job_marker: bool = False,
+    ) -> None:
+        """Write ``partials`` of one tier as its ``days`` partitions in a
+        single ``partitionBy("day")`` job, then publish each day with
+        ``_publish_unit``. ``input_rows`` maps a day to its ledger
+        ``input_rows`` (default: the published count). The staging
+        directory is removed even when a publish fails; days already
+        published stay published."""
+        t0 = time.time()
         staging = os.path.join(self.root, f"_staging-{tier}-{job_id}")
-        (
-            partials.withColumn(
-                "day", F.to_date(F.timestamp_micros(F.col("bucket_start")))
+        try:
+            (
+                partials.withColumn(
+                    "day", F.to_date(F.timestamp_micros(F.col("bucket_start")))
+                )
+                .repartition("day")
+                .write.partitionBy("day")
+                .option("compression", self._codec(tier))
+                .mode("overwrite")
+                .parquet(staging)
             )
-            .repartition("day")
-            .write.partitionBy("day")
-            .option("compression", self._codec(tier))
-            .mode("overwrite")
-            .parquet(staging)
-        )
-        wall = time.time() - t0
-        for day in days:
-            src = os.path.join(staging, f"day={day.isoformat()}")
-            if not os.path.isdir(src):
-                # day with no rows: write a schema-bearing empty parquet,
-                # not a bare directory — read_tier_day / a later rollup
-                # from this day would otherwise crash on 'Unable to infer schema'
-                partials.drop("day").limit(0).write.option(
-                    "compression", self._codec(tier)
-                ).mode("overwrite").parquet(src)
-            input_rows = _parquet_rows(_day_dir(self.root, finer, day)) if finer else -1
-            self._publish_unit(
-                src, tier, day, source, job_id, wall / len(days), input_rows=input_rows
-            )
-        shutil.rmtree(staging, ignore_errors=True)
+            wall = time.time() - t0
+            for day in days:
+                src = os.path.join(staging, f"day={day.isoformat()}")
+                if not os.path.isdir(src):
+                    # day with no rows: write a schema-bearing empty parquet,
+                    # not a bare directory — read_tier_day / a later rollup
+                    # from this day would otherwise crash on 'Unable to infer schema'
+                    partials.limit(0).write.option(
+                        "compression", self._codec(tier)
+                    ).mode("overwrite").parquet(src)
+                self._publish_unit(
+                    src, tier, day, source, job_id, wall / len(days),
+                    input_rows=None if input_rows is None else input_rows[day],
+                    job_marker=job_marker,
+                )
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
 
     def _iceberg_day_counts(self, tier: str, days: Sequence[dt.date]) -> dict[dt.date, int]:
         return {
@@ -436,18 +461,33 @@ class TierStore:
 
     # ---------------- reads ----------------
 
+    def _read_partials(self, paths: Sequence[str]) -> DataFrame:
+        """The store's own partial directories ``paths`` as one frame.
+        The schema comes from the first data file's footer, so Spark
+        runs no schema-inference job: every partition is written by
+        ``_write_days`` from the same partial schema, and Spark reads a
+        given schema back as nullable, as its own inference would."""
+        if not paths:
+            raise FileNotFoundError("no partial directory to read")
+        files = _data_files(paths[0])
+        if not files:
+            raise FileNotFoundError(f"no parquet data file in {paths[0]} to take the partial schema from")
+        schema = from_arrow_schema(pq.read_schema(files[0]))
+        return self.spark.read.schema(schema).parquet(*paths)
+
     def read_tier_day(self, tier: str, day: dt.date) -> DataFrame:
         if self.format == "iceberg":
             return self._iceberg_read_day(tier, day)
-        return self.spark.read.parquet(_day_dir(self.root, tier, day))
+        return self._read_partials([_day_dir(self.root, tier, day)])
 
     def read_tier(self, tier: str) -> DataFrame:
         if self.format == "iceberg":
             return self.spark.table(self._tier_table(tier)).drop("day")
         base = os.path.join(self.root, "partials", f"tier={tier}")
-        days = sorted(d for d in os.listdir(base) if d.startswith("day="))
-        paths = [os.path.join(base, d) for d in days]
-        return self.spark.read.parquet(*paths)
+        days = sorted(d for d in os.listdir(base) if d.startswith("day=")) if os.path.isdir(base) else []
+        if not days:
+            raise FileNotFoundError(f"tier {tier!r} has no day partitions under {base}")
+        return self._read_partials([os.path.join(base, d) for d in days])
 
     def read_points(self, tier: str) -> DataFrame:
         """Finalised rolled-up points for a tier."""
@@ -481,7 +521,7 @@ class TierStore:
         rows_before = _parquet_rows(out_dir)
         tmp = out_dir + f".compact-{uuidlib.uuid4().hex[:8]}"
         (
-            self.spark.read.parquet(out_dir)
+            self._read_partials([out_dir])
             .coalesce(target_files)
             .write.option("compression", self._codec(tier))
             .mode("overwrite")

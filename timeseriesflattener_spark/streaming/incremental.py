@@ -11,8 +11,10 @@ algebra: partial states combine, so
 
 The base is the finest tier still holding the day (1m unless retention
 dropped it). Each merge touches only the (tier, day) units the batch
-lands in; the ledger records them like any other materialisation
-(source="merge").
+lands in, and runs one Spark write job per tier over all of them — the
+same day-partitioned write-and-publish step (``TierStore._write_days``)
+that ``materialize`` uses — not one per (tier, day). The ledger records
+the units like any other materialisation (source="merge").
 
 Two entry points:
 
@@ -55,7 +57,9 @@ def merge_batch(
     have dropped a day's finer partitions; the batch's 1m partials are
     then combined into the base tier's existing partials, the coarser
     tiers are rolled up from the result, and the dropped finer tiers stay
-    absent.
+    absent. The days are grouped by base tier, and each group runs one
+    combine job for the base tier and one rollup job per coarser tier,
+    each writing all of the group's days at once.
 
     ``batch_id`` makes the merge idempotent under foreachBatch's
     at-least-once replay: units already ledgered under this batch's
@@ -72,7 +76,6 @@ def merge_batch(
     days = store._raw_days(batch)
     if not days:
         return []
-    spark = store.spark
     job_id = f"stream-{batch_id}" if batch_id is not None else "stream"
     bases = {
         day: next(
@@ -100,18 +103,16 @@ def merge_batch(
             ):
                 already.add((base, day))
 
+    by_base: dict[str, list[dt.date]] = {}
     for day, base in bases.items():
-        base_dir = _day_dir(store.root, base, day)
-        if (base, day) in already:
-            pass  # replayed batch: base already combined — never re-combine
-        else:
-            day_start = dt.datetime.combine(day, dt.time.min)
-            day_end = day_start + dt.timedelta(days=1)
-            ts = F.col(store.ts_col)
-            day_rows = batch.filter((ts >= F.lit(day_start)) & (ts < F.lit(day_end)))
-
+        by_base.setdefault(base, []).append(day)
+    for base, base_days in by_base.items():
+        # a replayed batch never re-combines a day whose base it already
+        # combined
+        todo = [day for day in base_days if (base, day) not in already]
+        if todo:
             new_1m = R.partial_aggregate(
-                day_rows,
+                batch.filter(F.to_date(F.col(store.ts_col)).isin([F.lit(d) for d in todo])),
                 store.value_cols,
                 entity_col=store.entity_col,
                 ts_col=store.ts_col,
@@ -119,48 +120,32 @@ def merge_batch(
                 tier="1m",
                 salt_partitions=store.salt_partitions,
             )
-            if os.path.isdir(base_dir):
-                existing = spark.read.parquet(base_dir)
-                # combine = rollup into the base tier (for 1m: same width)
+            stored = [p for p in (_day_dir(store.root, base, d) for d in todo) if os.path.isdir(p)]
+            if stored:
+                # combine = rollup into the base tier (for 1m: same width);
+                # a new day's rows pass through as single-row groups
                 merged = R.rollup(
-                    existing.unionByName(new_1m),
+                    store._read_partials(stored).unionByName(new_1m),
                     store.value_cols,
                     to_tier=base,
                     entity_col=store.entity_col,
                 )
             else:
                 merged = new_1m
-            _publish(store, merged, base, day, source="merge", job_id=job_id)
+            store._write_days(merged, base, todo, "merge", job_id, job_marker=True)
 
-        # coarser tiers rebuild from the stored base partials of the day —
+        # coarser tiers rebuild from the stored base partials of the days —
         # a deterministic overwrite, so re-running them on replay is safe
         # (and necessary if the crash hit between the base and a coarser
         # publish)
-        fine = spark.read.parquet(base_dir)
-        for tier in store.tiers:
-            if R.TIER_SECONDS[tier] <= R.TIER_SECONDS[base]:
-                continue
-            rolled = R.rollup(
-                fine,
-                store.value_cols,
-                to_tier=tier,
-                entity_col=store.entity_col,
-            )
-            _publish(store, rolled, tier, day, source=f"merge:{base}", job_id=job_id)
+        coarser = [t for t in store.tiers if R.TIER_SECONDS[t] > R.TIER_SECONDS[base]]
+        if not coarser:
+            continue
+        fine = store._read_partials([_day_dir(store.root, base, day) for day in base_days])
+        for tier in coarser:
+            rolled = R.rollup(fine, store.value_cols, to_tier=tier, entity_col=store.entity_col)
+            store._write_days(rolled, tier, base_days, f"merge:{base}", job_id, job_marker=True)
     return days
-
-
-def _publish(
-    store: TierStore, df: DataFrame, tier: str, day: dt.date, source: str,
-    job_id: str = "stream",
-) -> None:
-    import time
-    import uuid as uuidlib
-
-    t0 = time.time()
-    tmp = _day_dir(store.root, tier, day) + f".tmp-{uuidlib.uuid4().hex[:8]}"
-    df.write.option("compression", store._codec(tier)).mode("overwrite").parquet(tmp)
-    store._publish_unit(tmp, tier, day, source, job_id, time.time() - t0, job_marker=True)
 
 
 def stream_into_store(
@@ -195,13 +180,24 @@ def stream_into_store(
 
 # ------------------------------------------------- snapshot-diff ingest
 
+def _visible(name: str) -> bool:
+    """Spark's rule for the names its file reader lists: a ``.``-prefixed
+    name is hidden, and a ``_``-prefixed one is metadata unless it is a
+    ``key=value`` partition directory."""
+    return not (name.startswith(".") or (name.startswith("_") and "=" not in name))
+
+
 def list_data_files(input_dir: str) -> list[str]:
     """All parquet data files under ``input_dir`` (recursing into
-    day-partition subdirectories), sorted for deterministic batch ids."""
+    day-partition subdirectories), sorted for deterministic batch ids.
+    Directories and files are filtered by Spark's own rule
+    (``_visible``), so a writer's in-progress ``_temporary`` attempt
+    files and ``.``-prefixed staging files are never ingested."""
     found: list[str] = []
-    for root, _dirs, files in os.walk(input_dir):
+    for root, dirs, files in os.walk(input_dir):
+        dirs[:] = [d for d in dirs if _visible(d)]
         for f in files:
-            if f.endswith(".parquet") and not f.startswith("_"):
+            if f.endswith(".parquet") and _visible(f):
                 found.append(os.path.join(root, f))
     return sorted(found)
 
