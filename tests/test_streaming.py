@@ -274,6 +274,42 @@ def test_publish_crash_before_ledger_append_replays_as_noop(
         assert _count_sums(store, tier) == _count_sums(once, tier), tier
 
 
+def test_compaction_between_crash_and_replay_keeps_the_replay_a_noop(
+    spark, channels, tmp_path
+):
+    """A merge crashes after its base day's swap and before that day's
+    ledger append, so the ``_job-*`` marker inside the day directory is
+    the only proof the batch was combined. Compacting that day must carry
+    the marker over: the replay then equals a clean merge on every tier
+    instead of combining the batch a second time."""
+    even = channels.filter(F.col("turn_idx") % 2 == 0)
+    odd = channels.filter(F.col("turn_idx") % 2 == 1)
+    store = TierStore(spark, str(tmp_path / "compacted"), VALUE_COLS)
+    store.materialize(even, bulk=True)
+    days = store._raw_days(odd)
+
+    real_append = TierStore._append_ledger
+    crashed = []
+
+    def exploding_append(self, row):
+        if row["source"] == "merge" and not crashed:
+            crashed.append(row["day"])
+            raise RuntimeError("crash before the base day's ledger append")
+        return real_append(self, row)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(TierStore, "_append_ledger", exploding_append)
+        with pytest.raises(RuntimeError, match="base day"):
+            merge_batch(store, odd, batch_id=11)
+    store.compact_day("1m", crashed[0])
+    merge_batch(store, odd, batch_id=11)
+
+    clean = TierStore(spark, str(tmp_path / "clean"), VALUE_COLS)
+    clean.materialize(even, bulk=True)
+    merge_batch(clean, odd, batch_id=11)
+    assert _stored_partials(store, days) == _stored_partials(clean, days)
+
+
 def test_crash_between_day_publishes_of_one_base_job(spark, channels, tmp_path):
     """A merge's base job writes every touched day at once and then
     publishes them one by one. A crash on the second day's ledger append

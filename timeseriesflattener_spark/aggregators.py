@@ -1,13 +1,14 @@
-"""Aggregator registry: named factories producing Spark ``Column``
-aggregate expressions over *masked* inputs.
+"""Aggregator registry: named renderers of ONE Spark SQL aggregate
+expression over *masked* inputs.
 
 Parity target: reference ``aggregators.py`` (registry at 22-61, catalog
 at 75-211) and v1 ``v1/aggregation_fns.py``. Each aggregator receives
-the window-masked value column (``F.when(within_window, value)``), the
-masked event timestamp, and an optional stable order column, and
-returns ONE aggregate expression — so N specs x M lookperiods x K
-aggregators fuse into a single ``groupBy().agg(*exprs)`` (one shuffle),
-where the reference loops spec-at-a-time (``main.py:109-134``).
+SQL text for the window-masked value (``CASE WHEN <within> THEN value
+END``), the masked event timestamp, and an optional stable order column,
+and returns the text of ONE aggregate expression — so N specs x M
+lookperiods x K aggregators fuse into a single ``SELECT … GROUP BY
+uuid`` (one shuffle, one parse), where the reference loops
+spec-at-a-time (``main.py:109-134``).
 
 Null/NaN contract (reference parity traps, SURVEY.md §7.3):
 
@@ -30,13 +31,11 @@ from __future__ import annotations
 from abc import ABC, abstractmethod
 from typing import Sequence
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from .functions.timeutils import micros
+from .functions.sqltext import micros
 
 
 class Aggregator(ABC):
-    """A named factory for one Spark aggregate expression."""
+    """A named renderer of one Spark SQL aggregate expression."""
 
     name: str
     output_type: type  # float | int | bool — used for fallback validation
@@ -48,8 +47,9 @@ class Aggregator(ABC):
     needs_full_history: bool = False
 
     @abstractmethod
-    def expr(self, value: Column, ts: Column, order: Column | None) -> Column:
-        """Aggregate expression over the masked value/timestamp columns."""
+    def sql(self, value: str, ts: str, order: str | None) -> str:
+        """SQL text of the aggregate over the masked value/timestamp
+        operands (see :func:`register_aggregator` for the contract)."""
 
     def new_col_name(self, previous_col_name: str) -> str:
         return f"{previous_col_name}_{self.name}"
@@ -61,8 +61,8 @@ class MinAggregator(Aggregator):
     name = "min"
     output_type = float
 
-    def expr(self, value: Column, ts: Column, order: Column | None) -> Column:
-        return F.min(value)
+    def sql(self, value: str, ts: str, order: str | None) -> str:
+        return f"min({value})"
 
 
 class MaxAggregator(Aggregator):
@@ -71,8 +71,8 @@ class MaxAggregator(Aggregator):
     name = "max"
     output_type = float
 
-    def expr(self, value: Column, ts: Column, order: Column | None) -> Column:
-        return F.max(value)
+    def sql(self, value: str, ts: str, order: str | None) -> str:
+        return f"max({value})"
 
 
 class MeanAggregator(Aggregator):
@@ -81,8 +81,8 @@ class MeanAggregator(Aggregator):
     name = "mean"
     output_type = float
 
-    def expr(self, value: Column, ts: Column, order: Column | None) -> Column:
-        return F.avg(value)
+    def sql(self, value: str, ts: str, order: str | None) -> str:
+        return f"avg({value})"
 
 
 class CountAggregator(Aggregator):
@@ -95,8 +95,8 @@ class CountAggregator(Aggregator):
     output_type = int
     never_null = True
 
-    def expr(self, value: Column, ts: Column, order: Column | None) -> Column:
-        return F.count(value)
+    def sql(self, value: str, ts: str, order: str | None) -> str:
+        return f"count({value})"
 
 
 class UniqueCountAggregator(Aggregator):
@@ -118,8 +118,8 @@ class UniqueCountAggregator(Aggregator):
     output_type = int
     never_null = True
 
-    def expr(self, value: Column, ts: Column, order: Column | None) -> Column:
-        return F.count_distinct(value)
+    def sql(self, value: str, ts: str, order: str | None) -> str:
+        return f"count(DISTINCT {value})"
 
 
 class UniqueCountNullsAggregator(Aggregator):
@@ -137,10 +137,10 @@ class UniqueCountNullsAggregator(Aggregator):
     # the null bucket comes from rows the range-pushed join would prune
     needs_full_history = True
 
-    def expr(self, value: Column, ts: Column, order: Column | None) -> Column:
-        has_null = F.max(F.when(value.isNull(), 1).otherwise(0))
+    def sql(self, value: str, ts: str, order: str | None) -> str:
         # count(*) == 0 can't happen: the left join always yields >= 1 row
-        return F.count_distinct(value) + F.coalesce(has_null, F.lit(1))
+        has_null = f"max(CASE WHEN {value} IS NULL THEN 1 ELSE 0 END)"
+        return f"count(DISTINCT {value}) + coalesce({has_null}, 1)"
 
 
 class SumAggregator(Aggregator):
@@ -149,8 +149,8 @@ class SumAggregator(Aggregator):
     name = "sum"
     output_type = float
 
-    def expr(self, value: Column, ts: Column, order: Column | None) -> Column:
-        return F.sum(value)
+    def sql(self, value: str, ts: str, order: str | None) -> str:
+        return f"sum({value})"
 
 
 class VarianceAggregator(Aggregator):
@@ -159,8 +159,8 @@ class VarianceAggregator(Aggregator):
     name = "var"
     output_type = float
 
-    def expr(self, value: Column, ts: Column, order: Column | None) -> Column:
-        return F.var_samp(value)
+    def sql(self, value: str, ts: str, order: str | None) -> str:
+        return f"var_samp({value})"
 
 
 class HasValuesAggregator(Aggregator):
@@ -171,19 +171,19 @@ class HasValuesAggregator(Aggregator):
     output_type = bool
     never_null = True
 
-    def expr(self, value: Column, ts: Column, order: Column | None) -> Column:
-        return F.count(value) > F.lit(0)
+    def sql(self, value: str, ts: str, order: str | None) -> str:
+        return f"count({value}) > 0"
 
 
-def _ordered_struct(value: Column, ts: Column, order: Column | None) -> Column:
-    """Struct whose natural ordering is (ts, order?, value), null when the
-    value is null — so struct-min/max picks the earliest/latest non-null
-    value deterministically without a sort or a window function."""
-    fields = [ts.alias("ts")]
-    if order is not None:
-        fields.append(order.alias("ord"))
-    fields.append(value.alias("value"))
-    return F.when(value.isNotNull() & ts.isNotNull(), F.struct(*fields))
+def _ordered_extreme(fn: str, value: str, ts: str, order: str) -> str:
+    """``fn`` (min/max) over a struct whose natural ordering is
+    (ts, order, value), null when the value is null — so it picks the
+    earliest/latest non-null value deterministically without a sort or
+    a window function."""
+    return (
+        f"{fn}(CASE WHEN {value} IS NOT NULL AND {ts} IS NOT NULL THEN "
+        f"named_struct('ts', {ts}, 'ord', {order}, 'value', {value}) END).`value`"
+    )
 
 
 class EarliestAggregator(Aggregator):
@@ -199,10 +199,10 @@ class EarliestAggregator(Aggregator):
     name = "earliest"
     output_type = float
 
-    def expr(self, value: Column, ts: Column, order: Column | None) -> Column:
+    def sql(self, value: str, ts: str, order: str | None) -> str:
         if order is None:
-            return F.min_by(value, F.when(value.isNotNull(), ts))
-        return F.min(_ordered_struct(value, ts, order)).getField("value")
+            return f"min_by({value}, CASE WHEN {value} IS NOT NULL THEN {ts} END)"
+        return _ordered_extreme("min", value, ts, order)
 
 
 class LatestAggregator(Aggregator):
@@ -218,10 +218,10 @@ class LatestAggregator(Aggregator):
     name = "latest"
     output_type = float
 
-    def expr(self, value: Column, ts: Column, order: Column | None) -> Column:
+    def sql(self, value: str, ts: str, order: str | None) -> str:
         if order is None:
-            return F.max_by(value, F.when(value.isNotNull(), ts))
-        return F.max(_ordered_struct(value, ts, order)).getField("value")
+            return f"max_by({value}, CASE WHEN {value} IS NOT NULL THEN {ts} END)"
+        return _ordered_extreme("max", value, ts, order)
 
 
 class SlopeAggregator(Aggregator):
@@ -245,15 +245,14 @@ class SlopeAggregator(Aggregator):
     name = "slope"
     output_type = float
 
-    def expr(self, value: Column, ts: Column, order: Column | None) -> Column:
-        # truncate-toward-zero division matches polars' total_days()
-        x = (micros(ts) / F.lit(86_400_000_000)).cast("long").cast("double")
-        y = value.cast("double")
+    def sql(self, value: str, ts: str, order: str | None) -> str:
+        # truncate-toward-zero division matches polars' total_days();
         # regr_slope does pairwise deletion: rows where either side is
         # null (out-of-window) are ignored, like polars corr over the
         # masked frame.
-        x = F.when(y.isNotNull(), x)
-        return F.regr_slope(y, x)
+        y = f"CAST({value} AS DOUBLE)"
+        x = f"CAST(CAST({micros(ts)} / 86400000000 AS BIGINT) AS DOUBLE)"
+        return f"regr_slope({y}, CASE WHEN {y} IS NOT NULL THEN {x} END)"
 
 
 _REGISTRY: dict[str, Aggregator] = {}
@@ -262,7 +261,17 @@ _REGISTRY: dict[str, Aggregator] = {}
 def register_aggregator(name: str, aggregator: Aggregator) -> None:
     """Extension point — the reference's 'any pl.Expr factory' UDAF
     surface (``aggregators.py:64-69``) maps to registering a named
-    Column-expression factory here."""
+    SQL-text renderer here.
+
+    Contract of ``aggregator.sql(value, ts, order)``: each argument is
+    Spark SQL text that can be used as an operand — the window-masked
+    value (null outside the window), the masked event timestamp, and
+    the quoted order column or ``None``. It returns the text of ONE
+    aggregate expression without an alias, e.g. ``max({value}) -
+    min({value})``; the flattener wraps it as ``coalesce(<text>,
+    <fallback>) AS <feature name>`` unless ``never_null`` is set.
+    Identifiers inside the text must be backtick-quoted
+    (``functions.sqltext.ident``)."""
     _REGISTRY[name] = aggregator
 
 

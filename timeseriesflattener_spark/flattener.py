@@ -14,9 +14,9 @@ Differences from the reference (deliberate):
   no extra exchange after the first.
 - ``step_size`` (``processors/temporal.py:244-285``) exists in the
   reference to bound *memory*; Spark already streams partitions, so the
-  chunked path here is for output parity + the checkpoint/resume story
-  (see ``plans/checkpoint.py``), implemented with the same chunk
-  pre-filter semantics (``processors/temporal.py:174-215``).
+  chunked path here is for output parity: the vertical union of
+  per-chunk plans, with the same chunk pre-filter semantics
+  (``processors/temporal.py:174-215``).
 """
 
 from __future__ import annotations
@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .frames import PredictionTimeFrame, ValueFrame
+from .functions import sqltext
+from .functions.sqltext import ident
 from .operators.static import process_static_spec, static_feature_name
 from .operators.temporal import (
     feature_col_name,
@@ -285,13 +287,14 @@ class Flattener:
             )
         else:
             out = self._aggregate_stepped(specs, step_size)
-        # spec-order column contract regardless of fusion grouping
-        # (backtick-quoted: feature names may contain dots, e.g. fallback_-1.0)
+        # spec-order column contract regardless of fusion grouping, as
+        # one parsed select (quoted: feature names may contain dots,
+        # e.g. fallback_-1.0)
         ordered = [
             *pred.df.columns,
             *[name for spec in specs for name in _spec_feature_names(spec)],
         ]
-        out = out.select(*[F.col(f"`{c}`") for c in ordered])
+        out = sqltext.run(out, sqltext.select([ident(c) for c in ordered]))
 
         return AggregatedFrame(
             df=out,

@@ -12,13 +12,15 @@ eagerly per (spec x lookperiod). Spark-first redesign:
   window — out-of-range history is dropped inside the join, not after.
 - all (lookperiod x aggregator x value-column) combinations become
   conditional aggregate expressions in a single
-  ``groupBy(prediction_time_uuid).agg(*exprs)`` — one shuffle, with
-  map-side partial aggregation, instead of the reference's per-spec
-  loop + multiprocessing Pool (``main.py:109-134``).
+  ``SELECT uuid, … GROUP BY uuid`` — one shuffle, with map-side partial
+  aggregation, instead of the reference's per-spec loop +
+  multiprocessing Pool (``main.py:109-134``). The expressions are
+  rendered as SQL text and parsed once (``functions.sqltext``): built
+  through the Column API, each aggregate cost ~40 py4j round trips.
 - the "mask, don't filter" trick (``processors/temporal.py:57-64``)
-  becomes ``F.when(within, col)`` *inside* each aggregate; pred times
-  with no in-window rows survive via the left join's null row and get
-  the fallback.
+  becomes ``CASE WHEN <within> THEN col END`` *inside* each aggregate;
+  pred times with no in-window rows survive via the left join's null
+  row and get the fallback.
 
 Column-name contract (part of the output equality surface, reference
 ``processors/temporal.py:85-97,122-131``):
@@ -29,8 +31,11 @@ from __future__ import annotations
 
 from typing import TYPE_CHECKING, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions import sqltext
+from ..functions.sqltext import ident
 from ..functions.timeutils import micros
 
 from ..frames import PredictionTimeFrame
@@ -54,9 +59,9 @@ def feature_col_name(
 
 
 def _within(
-    lookperiod: LookPeriod, td: Column, boundary: str = "v2", direction: str = "behind"
-) -> Column:
-    """Window membership predicate.
+    lookperiod: LookPeriod, td: str, boundary: str = "v2", direction: str = "behind"
+) -> str:
+    """Window membership predicate (SQL text over the timedelta ``td``).
 
     ``boundary="v2"``: both ends inclusive (``processors/temporal.py:75-77``).
     ``boundary="v1"``: the endpoint nearest the prediction instant is
@@ -68,43 +73,43 @@ def _within(
     comparison is equivalent because the conversion is strictly monotonic
     and the period bounds are exact microseconds.
     """
-    lo, hi = F.lit(lookperiod.first_micros), F.lit(lookperiod.last_micros)
+    lo, hi = sqltext.lit(lookperiod.first_micros), sqltext.lit(lookperiod.last_micros)
     if boundary == "v1":
         if direction == "behind":
-            return (td >= lo) & (td < hi)
-        return (td > lo) & (td <= hi)
-    return (td >= lo) & (td <= hi)
+            return f"({td} >= {lo} AND {td} < {hi})"
+        return f"({td} > {lo} AND {td} <= {hi})"
+    return f"({td} >= {lo} AND {td} <= {hi})"
 
 
-def build_agg_exprs(spec: TemporalSpec, td: Column) -> list[Column]:
-    """One aggregate expression per (lookperiod x aggregator x value col),
-    in the reference's column order: lookperiod outer
-    (``process_temporal_spec`` concat order), then aggregator, then
+def build_agg_exprs(spec: TemporalSpec, td: str) -> list[str]:
+    """One ``<aggregate> AS <feature name>`` SQL text per (lookperiod x
+    aggregator x value col), in the reference's column order: lookperiod
+    outer (``process_temporal_spec`` concat order), then aggregator, then
     value column (``processors/temporal.py:112-116``)."""
     vf = spec.value_frame
-    ts = F.col(vf.value_timestamp_col_name)
-    order = F.col(vf.order_col_name) if vf.order_col_name else None
+    ts = ident(vf.value_timestamp_col_name)
+    order = ident(vf.order_col_name) if vf.order_col_name else None
     boundary = getattr(spec, "boundary", "v2")
     direction = getattr(spec, "direction", "behind")
-    exprs: list[Column] = []
+    exprs: list[str] = []
     for lookperiod in spec.normalised_lookperiod:
         cond = _within(lookperiod, td, boundary, direction)
-        masked_ts = F.when(cond, ts)
+        masked_ts = f"CASE WHEN {cond} THEN {ts} END"
+        masked = {c: f"CASE WHEN {cond} THEN {ident(c)} END" for c in vf.value_col_names}
         for aggregator in spec.aggregators:
             for value_col in vf.value_col_names:
-                masked_v = F.when(cond, F.col(value_col))
-                raw = aggregator.expr(masked_v, masked_ts, order)
+                raw = aggregator.sql(masked[value_col], masked_ts, order)
                 if not aggregator.never_null and spec.fallback is not None:
                     fb = spec.fallback
                     # bool fallback into a numeric aggregate casts to 0/1
                     # (polars fill_null semantics)
                     if isinstance(fb, bool) and aggregator.output_type is not bool:
                         fb = int(fb)
-                    raw = F.coalesce(raw, F.lit(fb))
+                    raw = f"coalesce({raw}, {sqltext.lit(fb)})"
                 name = feature_col_name(
                     spec.column_prefix, value_col, lookperiod, aggregator, spec.fallback
                 )
-                exprs.append(raw.alias(name))
+                exprs.append(f"{raw} AS {ident(name)}")
     return exprs
 
 
@@ -155,9 +160,9 @@ def process_temporal_specs_fused(
     vf = specs[0].value_frame
 
     pred_df = pred.df.select(
-        F.col(pred.prediction_time_uuid_col_name),
-        F.col(pred.entity_id_col_name),
-        micros(F.col(pred.timestamp_col_name)).alias("__pred_micros"),
+        F.col(ident(pred.prediction_time_uuid_col_name)),
+        F.col(ident(pred.entity_id_col_name)),
+        micros(F.col(ident(pred.timestamp_col_name))).alias("__pred_micros"),
     )
     value_cols = [vf.value_timestamp_col_name]
     for s in specs:
@@ -167,13 +172,13 @@ def process_temporal_specs_fused(
     if vf.order_col_name:
         value_cols.append(vf.order_col_name)
     value_df = vf.df.select(
-        F.col(vf.entity_id_col_name).alias("__value_entity_id"),
-        micros(F.col(vf.value_timestamp_col_name)).alias("__value_micros"),
-        *[F.col(c) for c in value_cols],
+        F.col(ident(vf.entity_id_col_name)).alias("__value_entity_id"),
+        micros(F.col(ident(vf.value_timestamp_col_name))).alias("__value_micros"),
+        *[F.col(ident(c)) for c in value_cols],
     )
 
     td = F.col("__value_micros") - F.col("__pred_micros")
-    join_cond = pred_df[pred.entity_id_col_name] == value_df["__value_entity_id"]
+    join_cond = pred_df[ident(pred.entity_id_col_name)] == value_df["__value_entity_id"]
     if push_range_into_join:
         ranges = [max_lookdistance(s) for s in specs]
         lo, hi = min(r[0] for r in ranges), max(r[1] for r in ranges)
@@ -181,5 +186,6 @@ def process_temporal_specs_fused(
 
     joined = pred_df.join(value_df, on=join_cond, how="left").withColumn(TIMEDELTA_COL, td)
 
-    exprs = [e for s in specs for e in build_agg_exprs(s, F.col(TIMEDELTA_COL))]
-    return joined.groupBy(pred.prediction_time_uuid_col_name).agg(*exprs)
+    uuid = ident(pred.prediction_time_uuid_col_name)
+    exprs = [e for s in specs for e in build_agg_exprs(s, ident(TIMEDELTA_COL))]
+    return sqltext.run(joined, sqltext.select([uuid, *exprs], group_by=[uuid]))

@@ -57,7 +57,7 @@ def flatten_aligned(
             )
         ),
     )
-    combine = [e for vc in value_cols for e in R._combine_exprs(vc)]
+    combine = [F.expr(e) for vc in value_cols for e in R._combine_exprs(vc)]
     windows = (
         contributed.groupBy(entity_col, "__window_end")
         .agg(*combine)

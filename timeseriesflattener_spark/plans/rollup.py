@@ -33,6 +33,11 @@ covar/var ratio, bool=n>0). ``unique_count`` does NOT compose across
 buckets; ``exact_unique_count`` computes it per-tier from raw
 (documented limitation, SURVEY.md §7.3 rollup-correctness trap).
 
+Every partial, combine and finalize aggregation is rendered as SQL text
+and built with one ``spark.sql`` parse (``functions.sqltext``); the
+streaming window sink and the rolling fast path take the same texts
+through ``F.expr``.
+
 Skew: Spark's hash aggregate already does map-side partial aggregation,
 which collapses each (conv_id, bucket) group to one row per map
 partition before the shuffle — so a single hot conversation costs the
@@ -50,6 +55,9 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..functions import sqltext
+from ..functions.sqltext import ident
 from ..functions.timeutils import micros
 
 TIER_SECONDS: dict[str, int] = {"1m": 60, "1h": 3600, "1d": 86400}
@@ -69,7 +77,8 @@ def tier_micros(tier: str) -> int:
     return TIER_SECONDS[tier] * 1_000_000
 
 
-#: bucket-floor formulation; "pmod" is the only correct one. Mutated
+#: bucket-floor formulation of both ``floor_to_width`` (Column) and
+#: ``floor_sql`` (text); "pmod" is the only correct one. Mutated
 #: ONLY via set_floor_variant (the A/B bench harness) — the library
 #: itself never reads the ambient environment, so a leaked shell var
 #: can no longer silently switch a production job's bucketing.
@@ -109,6 +118,13 @@ def floor_to_width(col: Column, width: int) -> Column:
     return col - F.pmod(col, F.lit(width))
 
 
+def floor_sql(col: str, width: int) -> str:
+    """SQL-text twin of :func:`floor_to_width`."""
+    if _FLOOR_VARIANT == "cast":
+        return f"(CAST({col} / {width} AS BIGINT) * {width})"
+    return f"({col} - pmod({col}, {width}))"
+
+
 def bucket_expr(ts_col: Column, tier: str) -> Column:
     """Floor the event time to its bucket start (micros since epoch)."""
     return floor_to_width(micros(ts_col), tier_micros(tier))
@@ -118,44 +134,32 @@ def _pcol(value_col: str, suffix: str) -> str:
     return f"{value_col}__{suffix}"
 
 
-def _partial_exprs(value_col: str, ts: Column) -> list[Column]:
-    y = F.col(value_col).cast("double")
+def _partial_exprs(value_col: str, ts: str) -> list[str]:
+    """``<aggregate> AS <partial column>`` texts of one value column over
+    raw rows; ``ts`` is the SQL text of the event timestamp."""
+    y = f"CAST({ident(value_col)} AS DOUBLE)"
+    m = sqltext.micros(ts)
     # v2 slope x-axis: whole days since epoch, truncated toward zero
-    x = (micros(ts) / F.lit(MICROS_PER_DAY)).cast("long").cast("double")
-    x = F.when(y.isNotNull(), x)
-    tsm = F.when(y.isNotNull(), micros(ts))
-    return [
-        F.count(y).alias(_pcol(value_col, "n")),
-        F.sum(y).alias(_pcol(value_col, "sum")),
-        F.min(y).alias(_pcol(value_col, "min")),
-        F.max(y).alias(_pcol(value_col, "max")),
-        F.sum(y * y).alias(_pcol(value_col, "sumsq")),
-        F.sum(x).alias(_pcol(value_col, "sx")),
-        F.sum(x * x).alias(_pcol(value_col, "sxx")),
-        F.sum(x * y).alias(_pcol(value_col, "sxy")),
-        F.min(tsm).alias(_pcol(value_col, "earliest_ts")),
-        F.min_by(y, tsm).alias(_pcol(value_col, "earliest_v")),
-        F.max(tsm).alias(_pcol(value_col, "latest_ts")),
-        F.max_by(y, tsm).alias(_pcol(value_col, "latest_v")),
-    ]
+    x = f"CASE WHEN {y} IS NOT NULL THEN CAST(CAST({m} / {MICROS_PER_DAY} AS BIGINT) AS DOUBLE) END"
+    tsm = f"CASE WHEN {y} IS NOT NULL THEN {m} END"
+    aggs = (
+        f"count({y})", f"sum({y})", f"min({y})", f"max({y})", f"sum({y} * {y})",
+        f"sum({x})", f"sum({x} * {x})", f"sum({x} * {y})",
+        f"min({tsm})", f"min_by({y}, {tsm})", f"max({tsm})", f"max_by({y}, {tsm})",
+    )
+    return [f"{a} AS {ident(_pcol(value_col, k))}" for a, k in zip(aggs, PARTIAL_SUFFIXES)]
 
 
-def _combine_exprs(value_col: str) -> list[Column]:
-    c = lambda s: F.col(_pcol(value_col, s))  # noqa: E731
-    return [
-        F.sum(c("n")).alias(_pcol(value_col, "n")),
-        F.sum(c("sum")).alias(_pcol(value_col, "sum")),
-        F.min(c("min")).alias(_pcol(value_col, "min")),
-        F.max(c("max")).alias(_pcol(value_col, "max")),
-        F.sum(c("sumsq")).alias(_pcol(value_col, "sumsq")),
-        F.sum(c("sx")).alias(_pcol(value_col, "sx")),
-        F.sum(c("sxx")).alias(_pcol(value_col, "sxx")),
-        F.sum(c("sxy")).alias(_pcol(value_col, "sxy")),
-        F.min(c("earliest_ts")).alias(_pcol(value_col, "earliest_ts")),
-        F.min_by(c("earliest_v"), c("earliest_ts")).alias(_pcol(value_col, "earliest_v")),
-        F.max(c("latest_ts")).alias(_pcol(value_col, "latest_ts")),
-        F.max_by(c("latest_v"), c("latest_ts")).alias(_pcol(value_col, "latest_v")),
-    ]
+def _combine_exprs(value_col: str) -> list[str]:
+    """``<aggregate> AS <partial column>`` texts combining partial rows."""
+    c = {k: ident(_pcol(value_col, k)) for k in PARTIAL_SUFFIXES}
+    aggs = (
+        f"sum({c['n']})", f"sum({c['sum']})", f"min({c['min']})", f"max({c['max']})",
+        f"sum({c['sumsq']})", f"sum({c['sx']})", f"sum({c['sxx']})", f"sum({c['sxy']})",
+        f"min({c['earliest_ts']})", f"min_by({c['earliest_v']}, {c['earliest_ts']})",
+        f"max({c['latest_ts']})", f"max_by({c['latest_v']}, {c['latest_ts']})",
+    )
+    return [f"{a} AS {c[k]}" for a, k in zip(aggs, PARTIAL_SUFFIXES)]
 
 
 def partial_aggregate(
@@ -172,20 +176,25 @@ def partial_aggregate(
     ``order_col`` (or the timestamp when None) only seeds the
     deterministic salt of ``salt_partitions``; it does not enter the
     partial state."""
-    ts = F.col(ts_col)
-    bucketed = df.withColumn("bucket_start", bucket_expr(ts, tier))
+    ent, ts = ident(entity_col), ident(ts_col)
+    keys = [ent, "bucket_start"]
     exprs = [e for vc in value_cols for e in _partial_exprs(vc, ts)]
+    bucketed = [
+        ent,
+        f"{floor_sql(sqltext.micros(ts), tier_micros(tier))} AS bucket_start",
+        *[ident(c) for c in dict.fromkeys([ts_col, *value_cols]) if c != entity_col],
+    ]
 
     if salt_partitions and salt_partitions > 1:
-        salt_src = F.col(order_col) if order_col else micros(ts)
-        bucketed = bucketed.withColumn(
-            "__salt", F.pmod(F.hash(salt_src), F.lit(salt_partitions))
+        salt_src = ident(order_col) if order_col else sqltext.micros(ts)
+        bucketed.append(f"pmod(hash({salt_src}), {salt_partitions}) AS __salt")
+        stage1 = sqltext.select(
+            [*keys, "__salt", *exprs], f"({sqltext.select(bucketed)})", [*keys, "__salt"]
         )
-        stage1 = bucketed.groupBy(entity_col, "bucket_start", "__salt").agg(*exprs)
         combine = [e for vc in value_cols for e in _combine_exprs(vc)]
-        return stage1.groupBy(entity_col, "bucket_start").agg(*combine)
+        return sqltext.run(df, sqltext.select([*keys, *combine], f"({stage1})", keys))
 
-    return bucketed.groupBy(entity_col, "bucket_start").agg(*exprs)
+    return sqltext.run(df, sqltext.select([*keys, *exprs], f"({sqltext.select(bucketed)})", keys))
 
 
 def rollup(
@@ -195,13 +204,21 @@ def rollup(
     entity_col: str = "conv_id",
 ) -> DataFrame:
     """Re-bucket finer-tier partials into a coarser tier by combining —
-    never touches raw data. Exact for every stat in the partial schema."""
-    coarser = floor_to_width(F.col("bucket_start"), tier_micros(to_tier))
+    never touches raw data. Exact for every stat in the partial schema.
+
+    The coarser bucket is computed in a subquery that projects only the
+    entity, the bucket and the partial columns: grouping by the alias
+    ``bucket_start`` in one SELECT would bind the *input* column."""
+    ent = ident(entity_col)
+    coarser = [
+        ent,
+        f"{floor_sql('bucket_start', tier_micros(to_tier))} AS bucket_start",
+        *[ident(_pcol(vc, k)) for vc in value_cols for k in PARTIAL_SUFFIXES],
+    ]
     combine = [e for vc in value_cols for e in _combine_exprs(vc)]
-    return (
-        partials.withColumn("bucket_start", coarser)
-        .groupBy(entity_col, "bucket_start")
-        .agg(*combine)
+    keys = [ent, "bucket_start"]
+    return sqltext.run(
+        partials, sqltext.select([*keys, *combine], f"({sqltext.select(coarser)})", keys)
     )
 
 
@@ -218,28 +235,30 @@ def finalize(
     {c}_has_values`` — numerically equal to running the reference
     aggregators over the bucket's raw rows (see tests).
     """
-    out: list[Column] = [F.col(entity_col), F.col("bucket_start")]
+    out = [ident(entity_col), "bucket_start"]
     if include_bucket_ts:
-        out.append(F.timestamp_micros(F.col("bucket_start")).alias("bucket_ts"))
+        out.append("timestamp_micros(bucket_start) AS bucket_ts")
     for vc in value_cols:
-        n = F.col(_pcol(vc, "n"))
-        s = F.col(_pcol(vc, "sum"))
-        sumsq = F.col(_pcol(vc, "sumsq"))
-        sx, sxx, sxy = (F.col(_pcol(vc, k)) for k in ("sx", "sxx", "sxy"))
-        var_x = sxx - sx * sx / n
-        out += [
-            n.alias(f"{vc}_count"),
-            s.alias(f"{vc}_sum"),
-            F.col(_pcol(vc, "min")).alias(f"{vc}_min"),
-            F.col(_pcol(vc, "max")).alias(f"{vc}_max"),
-            F.when(n > 0, s / n).alias(f"{vc}_mean"),
-            F.when(n > 1, (sumsq - s * s / n) / (n - F.lit(1))).alias(f"{vc}_var"),
-            F.when((n > 1) & (var_x != 0), (sxy - sx * s / n) / var_x).alias(f"{vc}_slope"),
-            F.col(_pcol(vc, "earliest_v")).alias(f"{vc}_earliest"),
-            F.col(_pcol(vc, "latest_v")).alias(f"{vc}_latest"),
-            (n > 0).alias(f"{vc}_has_values"),
-        ]
-    return partials.select(*out)
+        p = {k: ident(_pcol(vc, k)) for k in PARTIAL_SUFFIXES}
+        n, s, sx = p["n"], p["sum"], p["sx"]
+        var_x = f"({p['sxx']} - {sx} * {sx} / {n})"
+        outputs = {
+            "count": n,
+            "sum": s,
+            "min": p["min"],
+            "max": p["max"],
+            "mean": f"CASE WHEN {n} > 0 THEN {s} / {n} END",
+            "var": f"CASE WHEN {n} > 1 THEN ({p['sumsq']} - {s} * {s} / {n}) / ({n} - 1) END",
+            "slope": (
+                f"CASE WHEN ({n} > 1) AND ({var_x} != 0) "
+                f"THEN ({p['sxy']} - {sx} * {s} / {n}) / {var_x} END"
+            ),
+            "earliest": p["earliest_v"],
+            "latest": p["latest_v"],
+            "has_values": f"{n} > 0",
+        }
+        out += [f"{text} AS {ident(f'{vc}_{k}')}" for k, text in outputs.items()]
+    return sqltext.run(partials, sqltext.select(out))
 
 
 def exact_unique_count(

@@ -92,11 +92,18 @@ def _day_dir(root: str, tier: str, day: dt.date) -> str:
     return os.path.join(root, "partials", f"tier={tier}", f"day={day.isoformat()}")
 
 
+def _visible(name: str) -> bool:
+    """Spark's rule for the names its file reader lists: a ``.``-prefixed
+    name is hidden, and a ``_``-prefixed one is metadata unless it is a
+    ``key=value`` partition directory."""
+    return not (name.startswith(".") or (name.startswith("_") and "=" not in name))
+
+
 def _data_files(path: str) -> list[str]:
-    """The parquet data files of the directory ``path``. Skips
-    ``_``/``.``-prefixed names — job markers, ``_SUCCESS``, checksum
-    files — as Spark's reader does."""
-    return [os.path.join(path, f) for f in sorted(os.listdir(path)) if not f.startswith(("_", "."))]
+    """The parquet data files of the directory ``path``: the names
+    Spark's reader lists (``_visible``), so job markers, ``_SUCCESS`` and
+    checksum files are skipped."""
+    return [os.path.join(path, f) for f in sorted(os.listdir(path)) if _visible(f)]
 
 
 def _parquet_rows(path: str) -> int:
@@ -504,8 +511,9 @@ class TierStore:
         touched by hundreds of micro-batches degrades every later scan
         (footer opens + tiny row groups). Values are untouched (asserted
         by count); the rewrite is partition-atomic like every publish,
-        and the ledger records it as source="compact" lineage. Returns
-        (files_before, files_after).
+        and the ledger records it as source="compact" lineage. The
+        partition's ``_job-*`` markers move with it, so a merge's replay
+        proof survives compaction. Returns (files_before, files_after).
 
         format="iceberg": the partition is rewritten through the same
         read -> coalesce -> overwritePartitions shape (snapshot-atomic);
@@ -533,6 +541,12 @@ class TierStore:
             raise RuntimeError(
                 f"compaction row mismatch {rows_before} -> {rows_after} for {tier}/{day}"
             )
+        # carry over the job markers: a merge that crashed between this
+        # day's swap and its ledger append has no other proof that its
+        # batch was combined, and its replay would combine it again
+        for name in os.listdir(out_dir):
+            if name.startswith("_job-"):
+                shutil.copyfile(os.path.join(out_dir, name), os.path.join(tmp, name))
         self._publish_unit(
             tmp, tier, day, "compact", f"compact-{uuidlib.uuid4().hex[:8]}",
             time.time() - t0, input_rows=rows_before,

@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans import rollup as R
-from ..plans.tiers import TierStore, _day_dir
+from ..plans.tiers import TierStore, _day_dir, _visible
 
 
 def merge_batch(
@@ -179,13 +179,6 @@ def stream_into_store(
 
 
 # ------------------------------------------------- snapshot-diff ingest
-
-def _visible(name: str) -> bool:
-    """Spark's rule for the names its file reader lists: a ``.``-prefixed
-    name is hidden, and a ``_``-prefixed one is metadata unless it is a
-    ``key=value`` partition directory."""
-    return not (name.startswith(".") or (name.startswith("_") and "=" not in name))
-
 
 def list_data_files(input_dir: str) -> list[str]:
     """All parquet data files under ``input_dir`` (recursing into

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import ident
+
 TIER_WINDOW = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}
 
 
@@ -56,7 +58,7 @@ def windowed_partials(
         F.col(entity_col), F.window(F.col(ts_col), width).alias("__w")
     )
     if full_stats:
-        exprs = [e for vc in value_cols for e in _partial_exprs(vc, F.col(ts_col))]
+        exprs = [F.expr(e) for vc in value_cols for e in _partial_exprs(vc, ident(ts_col))]
         out_cols = [f"{vc}__{s}" for vc in value_cols for s in PARTIAL_SUFFIXES]
         return grouped.agg(*exprs).select(
             entity_col,
