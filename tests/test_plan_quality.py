@@ -321,8 +321,8 @@ def test_fused_specs_share_one_join_and_agg(spark):
 
 def test_stepped_path_fuses_shared_frames(spark):
     """step_size chunking keeps frame identity: specs sharing a df fuse
-    inside each chunk (one temporal join per chunk, not one per spec),
-    and stepped output equals the unstepped output exactly."""
+    into one temporal join (not one per spec), and stepped output equals
+    the unstepped output exactly."""
     import datetime as dtm
 
     pred_frame = str_to_df(
@@ -358,9 +358,9 @@ def test_stepped_path_fuses_shared_frames(spark):
     ).df
     stepped = {r["prediction_time_uuid"]: r.asDict() for r in stepped_df.collect()}
     assert stepped == plain
-    # 2 chunks (39 days / 20-day steps) x (1 fused temporal join + 1
-    # assembly join); an unfused stepped plan would pay 3 joins per chunk
+    # 2 chunks (39 days / 20-day steps), yet one fused temporal join + 1
+    # assembly join, as unstepped: the chunk is a join predicate
     plan = stepped_df._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("Join") == 2 * 2, plan
+    assert plan.count("Join") == 2, plan
     # the fused join carries the UNION lookdistance range (40 days)
     assert plan.count("-3456000000000") >= 2, plan

@@ -252,17 +252,11 @@ def _tier_chain(M, ch, salt):
     return [p1m, p1h, p1d, M.finalize(p1h, cols), M.finalize(p1d, cols, include_bucket_ts=False)]
 
 
-@pytest.mark.parametrize("variant", ["pmod", "cast"])
+@pytest.mark.parametrize("variant", ["pmod"])  # the bucket floor: m - pmod(m, width)
 @pytest.mark.parametrize("salt", [None, 3], ids=["unsalted", "salted"])
 def test_rollup_kernel_matches_column_builders(channels, variant, salt):
-    if variant == "cast":
-        with pytest.warns(UserWarning):
-            R.set_floor_variant("cast")
-    try:
-        for got, want in zip(_tier_chain(R, channels, salt), _tier_chain(ref, channels, salt)):
-            _assert_frames_identical(got, want, n_keys=2)
-    finally:
-        R.set_floor_variant("pmod")
+    for got, want in zip(_tier_chain(R, channels, salt), _tier_chain(ref, channels, salt)):
+        _assert_frames_identical(got, want, n_keys=2)
 
 
 def test_rollup_kernel_quotes_column_names(channels):

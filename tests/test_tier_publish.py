@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import datetime as dt
 import os
-import uuid
 
 import pyarrow.parquet as pq
 import pytest
@@ -20,6 +19,7 @@ from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 from timeseriesflattener_spark.plans.tiers import TierStore, _day_dir, _parquet_rows
 from timeseriesflattener_spark.sources.transcripts import derive_channels, synthesize_transcripts
 from timeseriesflattener_spark.streaming.incremental import merge_batch
+from timeseriesflattener_spark.testing import jobs_started
 
 VALUE_COLS = ["text_len", "n_tokens"]
 
@@ -199,21 +199,6 @@ def test_compaction_that_drops_rows_raises_and_changes_nothing(
     assert not [d for d in os.listdir(os.path.dirname(ddir)) if ".compact-" in d]
 
 
-def _jobs_started(spark, fn):
-    """(fn's result, ids of the Spark jobs it started), from the status
-    tracker of a job group set around the call."""
-    sc = spark.sparkContext
-    group = f"probe-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_merge_writes_once_per_tier_and_store_reads_start_no_job(
     spark, channels, tmp_path, monkeypatch
 ):
@@ -231,7 +216,7 @@ def test_merge_writes_once_per_tier_and_store_reads_start_no_job(
         return real_write(self, path, *args, **kwargs)
 
     def spy_read(self, *paths, **kwargs):
-        df, jobs = _jobs_started(spark, lambda: real_read(self, *paths, **kwargs))
+        df, jobs = jobs_started(spark, lambda: real_read(self, *paths, **kwargs))
         reads.append((paths, jobs))
         return df
 
@@ -246,7 +231,7 @@ def test_merge_writes_once_per_tier_and_store_reads_start_no_job(
     assert [set(paths) for paths, _ in reads] == [base_dirs, base_dirs]
     assert [jobs for _, jobs in reads] == [[], []]
     for read in (lambda: store.read_tier("1h"), lambda: store.read_tier_day("1d", days[0])):
-        df, jobs = _jobs_started(spark, read)
+        df, jobs = jobs_started(spark, read)
         assert jobs == [], jobs
         assert df.columns[:2] == ["conv_id", "bucket_start"]
 

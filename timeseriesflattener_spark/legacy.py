@@ -28,7 +28,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .flattener import Flattener
+from .flattener import Flattener, _spec_feature_names
 from .frames import PredictionTimeFrame, StaticFrame, TimestampValueFrame, ValueFrame
 from .sources.io import FeatureCache
 from .operators.incident import add_incident_outcome
@@ -471,32 +471,13 @@ class TimeseriesFlattener:
 
     # ------------------------------------------------ cache plumbing
 
-    def _spec_out_cols(self, spec: ValueSpecification) -> list[str]:
-        """The v2-engine output column names a spec produces — the unit
-        the cache stores (per-spec frame keyed by prediction uuid)."""
-        if isinstance(spec, (PredictorSpec, OutcomeSpec, BooleanOutcomeSpec)):
-            return [
-                feature_col_name(spec.column_prefix, col, lp, agg, spec.fallback)
-                for col in spec.value_frame.value_col_names
-                for lp in spec.normalised_lookperiod
-                for agg in spec.aggregators
-            ]
-        if isinstance(spec, StaticSpec):
-            return [
-                static_feature_name(spec, col)
-                for col in spec.value_frame.value_col_names
-            ]
-        if isinstance(spec, TimeDeltaSpec):
-            return [timedelta_feature_name(spec)]
-        raise TypeError(f"unknown spec type {type(spec).__name__}")
-
     def _cache_key(self, spec: ValueSpecification, pred_rows: int) -> str:
         desc: dict = {
             "type": type(spec).__name__,
             "prefix": spec.column_prefix,
             "fallback": spec.fallback,
             "pred_rows": pred_rows,
-            "out_cols": self._spec_out_cols(spec),
+            "out_cols": _spec_feature_names(spec),
         }
         if isinstance(spec, (PredictorSpec, OutcomeSpec, BooleanOutcomeSpec)):
             desc["boundary"] = spec.boundary
@@ -658,7 +639,7 @@ class TimeseriesFlattener:
             ).df
             for spec, key in misses:
                 # backtick-quoted: names may contain dots (fallback_0.0)
-                cols = [F.col(f"`{c}`") for c in (uuid, *self._spec_out_cols(spec))]
+                cols = [F.col(f"`{c}`") for c in (uuid, *_spec_feature_names(spec))]
                 self.cache.put(key, df.select(*cols))
         else:
             df = pred.df

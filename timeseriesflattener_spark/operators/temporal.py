@@ -122,26 +122,16 @@ def max_lookdistance(spec: TemporalSpec) -> tuple[int, int]:
 
 
 def process_temporal_spec(
-    spec: TemporalSpec,
-    predictiontime_frame: PredictionTimeFrame,
-    push_range_into_join: bool = True,
+    spec: TemporalSpec, predictiontime_frame: PredictionTimeFrame
 ) -> DataFrame:
-    """Flatten one temporal spec -> DataFrame of (uuid, feature cols).
-
-    ``push_range_into_join=True`` adds the union-of-lookperiods range to
-    the join condition (safe: rows outside every lookperiod aggregate to
-    null/0 either way); disable only for plan-debugging. Automatically
-    disabled when any aggregator ``needs_full_history`` (e.g. the polars
-    n_unique compat ``unique_count_with_null``, whose null bucket comes
-    from exactly the rows the pushdown would prune).
-    """
-    return process_temporal_specs_fused([spec], predictiontime_frame, push_range_into_join)
+    """Flatten one temporal spec -> DataFrame of (uuid, feature cols)."""
+    return process_temporal_specs_fused([spec], predictiontime_frame)
 
 
 def process_temporal_specs_fused(
     specs: Sequence[TemporalSpec],
     predictiontime_frame: PredictionTimeFrame,
-    push_range_into_join: bool = True,
+    chunk: tuple[int, int] | None = None,
 ) -> DataFrame:
     """Flatten N temporal specs that share ONE value frame (same df
     object + id/ts/order column config) with a single range-constrained
@@ -150,12 +140,22 @@ def process_temporal_specs_fused(
     one per spec. Callers group by frame identity (``Flattener``); specs
     may differ in direction, boundary, lookperiods, aggregators, and
     fallbacks, since every aggregate expression carries its own window
-    predicate. The pushed-down join range is the union over all specs.
+    predicate.
+
+    The join condition carries the union ``[lo, hi]`` of all the specs'
+    lookperiods (safe: rows outside every lookperiod aggregate to
+    null/0 either way), unless an aggregator ``needs_full_history``
+    (e.g. the polars n_unique compat ``unique_count_with_null``, whose
+    null bucket comes from exactly the rows that range would prune).
+
+    ``chunk = (start, step)`` (microseconds) is ``step_size`` chunking:
+    a prediction time at ``p`` lies in the chunk starting at
+    ``c = start + (p - start) div step * step``, and joins only the
+    values in ``[c + lo, c + step + hi)`` — the chunk's reachable range
+    that the reference pre-filters each chunk's values to. It applies
+    also when the lookperiod range is not pushed, so it changes the
+    output only of ``needs_full_history`` aggregators.
     """
-    if any(
-        getattr(a, "needs_full_history", False) for s in specs for a in s.aggregators
-    ):
-        push_range_into_join = False
     pred = predictiontime_frame
     vf = specs[0].value_frame
 
@@ -177,12 +177,19 @@ def process_temporal_specs_fused(
         *[F.col(ident(c)) for c in value_cols],
     )
 
+    ranges = [max_lookdistance(s) for s in specs]
+    lo, hi = min(r[0] for r in ranges), max(r[1] for r in ranges)
     td = F.col("__value_micros") - F.col("__pred_micros")
     join_cond = pred_df[ident(pred.entity_id_col_name)] == value_df["__value_entity_id"]
-    if push_range_into_join:
-        ranges = [max_lookdistance(s) for s in specs]
-        lo, hi = min(r[0] for r in ranges), max(r[1] for r in ranges)
+    if not any(getattr(a, "needs_full_history", False) for s in specs for a in s.aggregators):
         join_cond = join_cond & (td >= F.lit(lo)) & (td <= F.lit(hi))
+    if chunk is not None:
+        start, step = chunk
+        chunk_lo = F.expr(f"({start}) + (__pred_micros - ({start})) div {step} * {step}")
+        value = F.col("__value_micros")
+        join_cond = (
+            join_cond & (value >= chunk_lo + F.lit(lo)) & (value < chunk_lo + F.lit(step + hi))
+        )
 
     joined = pred_df.join(value_df, on=join_cond, how="left").withColumn(TIMEDELTA_COL, td)
 

@@ -50,21 +50,17 @@ def validate_one_row_per_entity(spec: TimeDeltaSpec) -> None:
 
 
 def process_timedelta_spec(
-    spec: TimeDeltaSpec,
-    predictiontime_frame: PredictionTimeFrame,
-    broadcast: bool = True,
-    validate: bool = True,
+    spec: TimeDeltaSpec, predictiontime_frame: PredictionTimeFrame
 ) -> DataFrame:
-    if validate:
-        validate_one_row_per_entity(spec)
+    validate_one_row_per_entity(spec)
 
     pred = predictiontime_frame
-    event_df = spec.init_frame.df.select(
-        F.col(spec.init_frame.entity_id_col_name).alias("__event_entity"),
-        F.col(spec.init_frame.value_timestamp_col_name).alias("__event_time"),
+    event_df = F.broadcast(
+        spec.init_frame.df.select(
+            F.col(spec.init_frame.entity_id_col_name).alias("__event_entity"),
+            F.col(spec.init_frame.value_timestamp_col_name).alias("__event_time"),
+        )
     )
-    if broadcast:
-        event_df = F.broadcast(event_df)
 
     # truncate-toward-zero to whole days, then unit-convert (parity with
     # polars total_days(); long-cast of a double truncates toward zero).

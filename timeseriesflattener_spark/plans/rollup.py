@@ -77,35 +77,6 @@ def tier_micros(tier: str) -> int:
     return TIER_SECONDS[tier] * 1_000_000
 
 
-#: bucket-floor formulation of both ``floor_to_width`` (Column) and
-#: ``floor_sql`` (text); "pmod" is the only correct one. Mutated
-#: ONLY via set_floor_variant (the A/B bench harness) — the library
-#: itself never reads the ambient environment, so a leaked shell var
-#: can no longer silently switch a production job's bucketing.
-_FLOOR_VARIANT = "pmod"
-
-
-def set_floor_variant(variant: str) -> None:
-    """Bench-harness seam for the pmod-vs-cast A/B: bench.py passes its
-    ``TSF_BUCKET_FLOOR`` variable here; the measured A/B is recorded in
-    BENCH.md §2a. "cast" is the
-    pre-r3 truncating formulation, kept ONLY to keep the measured
-    comparison reproducible — it mis-buckets pre-epoch timestamps, so
-    selecting it warns loudly and must never reach a real job."""
-    if variant not in ("pmod", "cast"):
-        raise ValueError(f"unknown floor variant {variant!r}")
-    global _FLOOR_VARIANT
-    if variant == "cast":
-        import warnings
-
-        warnings.warn(
-            "bucket floor variant 'cast' selected: KNOWN-INCORRECT for "
-            "pre-epoch timestamps; A/B benchmarking only",
-            stacklevel=2,
-        )
-    _FLOOR_VARIANT = variant
-
-
 def floor_to_width(col: Column, width: int) -> Column:
     """Floor an integer micros column to a multiple of `width`.
 
@@ -113,15 +84,11 @@ def floor_to_width(col: Column, width: int) -> Column:
     pre-1970 (negative) timestamps where `(m / width).cast("long")`
     truncates toward zero, and never routes through double precision.
     """
-    if _FLOOR_VARIANT == "cast":  # pragma: no cover - bench A/B only
-        return (col / F.lit(width)).cast("long") * F.lit(width)
     return col - F.pmod(col, F.lit(width))
 
 
 def floor_sql(col: str, width: int) -> str:
     """SQL-text twin of :func:`floor_to_width`."""
-    if _FLOOR_VARIANT == "cast":
-        return f"(CAST({col} / {width} AS BIGINT) * {width})"
     return f"({col} - pmod({col}, {width}))"
 
 

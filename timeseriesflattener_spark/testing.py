@@ -1,10 +1,12 @@
 """Test helpers mirroring the reference's CSV-in-string fixtures
 (``testing/utils_for_testing.py:41-89``), built on pandas ->
-``spark.createDataFrame`` (Arrow path)."""
+``spark.createDataFrame`` (Arrow path), and a probe counting the Spark
+jobs a call starts."""
 
 from __future__ import annotations
 
 import io
+import uuid
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -34,3 +36,18 @@ def str_to_df(spark: SparkSession, string: str) -> DataFrame:
 
 def rows_as_dicts(df: DataFrame) -> list[dict]:
     return [row.asDict() for row in df.collect()]
+
+
+def jobs_started(spark: SparkSession, fn):
+    """(fn's result, ids of the Spark jobs it started), from the status
+    tracker of a job group set around the call."""
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
