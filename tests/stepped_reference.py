@@ -6,7 +6,10 @@ before the chunk became a predicate of the fused temporal join: one full
 flatten plan per chunk of prediction times, each over value frames
 pre-filtered to the chunk's reachable range, unioned vertically. It is
 kept here unchanged so the tests can compare the one-plan path against
-it value for value.
+it value for value. The static and time-delta side frames (keyed by the
+prediction-time uuid) and the per-spec frame builder are kept here too,
+as they were then, so the reference does not share the flattener's
+assembly.
 """
 
 from __future__ import annotations
@@ -20,21 +23,128 @@ from pyspark.sql import functions as F
 
 from timeseriesflattener_spark.flattener import (
     Flattener,
-    _build_feature_dfs,
     _frame_key,
     _spec_feature_names,
 )
 from timeseriesflattener_spark.frames import PredictionTimeFrame, ValueFrame
 from timeseriesflattener_spark.functions import sqltext
 from timeseriesflattener_spark.functions.sqltext import ident
-from timeseriesflattener_spark.operators.temporal import max_lookdistance
+from timeseriesflattener_spark.functions.timeutils import micros
+from timeseriesflattener_spark.operators.static import static_feature_name
+from timeseriesflattener_spark.operators.temporal import (
+    max_lookdistance,
+    process_temporal_specs_fused,
+)
+from timeseriesflattener_spark.operators.timedelta import (
+    timedelta_feature_name,
+    validate_one_row_per_entity,
+)
 from timeseriesflattener_spark.specs import (
+    MICROS_PER_DAY,
+    TIME_FORMAT_DIVISORS,
     BooleanOutcomeSpec,
     OutcomeSpec,
     PredictorSpec,
+    StaticSpec,
     TemporalSpec,
+    TimeDeltaSpec,
     ValueSpecification,
 )
+
+
+def process_static_spec(
+    spec: StaticSpec, predictiontime_frame: PredictionTimeFrame, broadcast: bool = True
+) -> DataFrame:
+    pred = predictiontime_frame
+    static_df = spec.value_frame.df
+    if broadcast:
+        static_df = F.broadcast(static_df)
+    renamed = [
+        F.col(c).alias(static_feature_name(spec, c)) for c in spec.value_frame.value_col_names
+    ]
+    return (
+        pred.df.select(pred.prediction_time_uuid_col_name, pred.entity_id_col_name)
+        .join(
+            static_df.withColumnRenamed(spec.value_frame.entity_id_col_name, "__static_entity"),
+            on=F.col(pred.entity_id_col_name) == F.col("__static_entity"),
+            how="left",
+        )
+        .select(F.col(pred.prediction_time_uuid_col_name), *renamed)
+    )
+
+
+def process_timedelta_spec(
+    spec: TimeDeltaSpec, predictiontime_frame: PredictionTimeFrame
+) -> DataFrame:
+    validate_one_row_per_entity(spec)
+
+    pred = predictiontime_frame
+    event_df = F.broadcast(
+        spec.init_frame.df.select(
+            F.col(spec.init_frame.entity_id_col_name).alias("__event_entity"),
+            F.col(spec.init_frame.value_timestamp_col_name).alias("__event_time"),
+        )
+    )
+
+    # truncate-toward-zero to whole days, then unit-convert (parity with
+    # polars total_days(); long-cast of a double truncates toward zero).
+    whole_days = (
+        (
+            micros(F.col(pred.timestamp_col_name)) - micros(F.col("__event_time"))
+        )
+        / F.lit(MICROS_PER_DAY)
+    ).cast("long")
+    value = whole_days.cast("double") / F.lit(float(TIME_FORMAT_DIVISORS[spec.time_format]))
+    if spec.fallback is not None:
+        value = F.coalesce(value, F.lit(spec.fallback).cast("double"))
+
+    return (
+        pred.df.select(
+            pred.prediction_time_uuid_col_name, pred.entity_id_col_name, pred.timestamp_col_name
+        )
+        .join(event_df, on=F.col(pred.entity_id_col_name) == F.col("__event_entity"), how="left")
+        .select(
+            F.col(pred.prediction_time_uuid_col_name),
+            value.alias(timedelta_feature_name(spec)),
+        )
+    )
+
+
+def _process_one(spec: ValueSpecification, pred: PredictionTimeFrame) -> DataFrame:
+    if isinstance(spec, StaticSpec):
+        return process_static_spec(spec, pred)
+    if isinstance(spec, TimeDeltaSpec):
+        return process_timedelta_spec(spec, pred)
+    raise TypeError(f"Unknown spec type {type(spec)}")
+
+
+def _build_feature_dfs(
+    specs: Sequence[ValueSpecification],
+    pred: PredictionTimeFrame,
+    chunk: tuple[int, int] | None = None,
+) -> list[DataFrame]:
+    """One DataFrame per spec-or-fused-group: temporal specs sharing a
+    value frame (see ``_frame_key``) collapse into ONE join + ONE fused
+    aggregation (``process_temporal_specs_fused``) — group-spec
+    workloads pay a shuffle per frame, not per spec. ``chunk`` is the
+    ``step_size`` chunking as ``(start, step)`` microseconds, passed to
+    every temporal group."""
+    groups: dict[tuple, list[TemporalSpec]] = {}
+    for spec in specs:
+        if isinstance(spec, (PredictorSpec, OutcomeSpec, BooleanOutcomeSpec)):
+            groups.setdefault(_frame_key(spec), []).append(spec)
+    emitted: set[tuple] = set()
+    feature_dfs: list[DataFrame] = []
+    for spec in specs:
+        if isinstance(spec, (PredictorSpec, OutcomeSpec, BooleanOutcomeSpec)):
+            key = _frame_key(spec)
+            if key in emitted:
+                continue
+            emitted.add(key)
+            feature_dfs.append(process_temporal_specs_fused(groups[key], pred, chunk))
+        else:
+            feature_dfs.append(_process_one(spec, pred))
+    return feature_dfs
 
 
 def _filtered_with_range(

@@ -199,6 +199,72 @@ def test_legacy_feature_cache(spark, tmp_path, monkeypatch):
     assert third[1]["pred_female"] == 1
 
 
+def _cached_flattener(spark, pred, cache_dir, values, sex, static_only=False):
+    """predictor, static, predictor — cached in ``cache_dir`` (None: no
+    cache); ``static_only`` queues the static spec alone."""
+    from timeseriesflattener_spark.sources.io import FeatureCache
+
+    cache = FeatureCache(spark, cache_dir) if cache_dir else None
+    fl = TimeseriesFlattener(prediction_times_df=pred, cache=cache)
+    predictors = [
+        PredictorSpec.from_primitives(
+            df=df,
+            entity_id_col_name="entity_id",
+            lookbehind_days=[days],
+            aggregators=[agg],
+            fallback=0,
+        )
+        for df, days, agg in (
+            (values, 5, "mean"),
+            (values.withColumnRenamed("value", "other"), 10, "sum"),
+        )
+    ]
+    if not static_only:
+        fl.add_spec(predictors[0])
+    fl.add_static_spec(sex, column_prefix="pred")
+    if not static_only:
+        fl.add_spec(predictors[1])
+    return fl
+
+
+def test_legacy_cache_miss_is_computed_once(spark, tmp_path):
+    """A cold cached get_df returns the entries just written: the
+    caller's action reads them back and runs no temporal aggregation
+    again (the fused flatten ran once per entry, inside its put)."""
+    from timeseriesflattener_spark.operators.temporal import TIMEDELTA_COL
+
+    pred = str_to_df(spark, "entity_id,timestamp\n1,2021-01-03\n2,2021-01-03")
+    values = str_to_df(spark, "entity_id,value,timestamp\n1,1,2021-01-01\n2,2,2021-01-02")
+    sex = str_to_df(spark, "entity_id,female\n1,1\n2,0")
+    cold = _cached_flattener(spark, pred, str(tmp_path / "c"), values, sex).get_df()
+    plan = cold._jdf.queryExecution().executedPlan().toString()
+    assert TIMEDELTA_COL not in plan, plan
+    key = "prediction_time_uuid"
+    plain = _cached_flattener(spark, pred, None, values, sex).get_df()
+    want = {r[key]: r for r in plain.collect()}
+    assert {r[key]: r for r in cold.collect()} == want
+
+
+def test_legacy_cache_column_order_ignores_cache_state(spark, tmp_path):
+    """Cold, warm and partly warm cached runs return the columns in spec
+    order, whichever specs the cache already held."""
+    pred = str_to_df(spark, "entity_id,timestamp\n1,2021-01-03\n2,2021-01-03")
+    values = str_to_df(spark, "entity_id,value,timestamp\n1,1,2021-01-01\n2,2,2021-01-02")
+    sex = str_to_df(spark, "entity_id,female\n1,1\n2,0")
+    full, part = str(tmp_path / "full"), str(tmp_path / "part")
+    cold = _cached_flattener(spark, pred, full, values, sex).get_df().columns
+    warm = _cached_flattener(spark, pred, full, values, sex).get_df().columns
+    _cached_flattener(spark, pred, part, values, sex, static_only=True).get_df()
+    partly = _cached_flattener(spark, pred, part, values, sex).get_df().columns
+    plain = _cached_flattener(spark, pred, None, values, sex).get_df().columns
+    assert cold == warm == partly == plain, (cold, warm, partly, plain)
+    assert cold[-3:] == [
+        "pred_value_within_5_days_mean_fallback_0",
+        "pred_female",
+        "pred_other_within_10_days_summed_fallback_0",
+    ]
+
+
 def test_legacy_compute_alias(spark):
     pred = str_to_df(spark, "entity_id,timestamp\n1,2021-01-03")
     fl = TimeseriesFlattener(prediction_times_df=pred)

@@ -13,6 +13,8 @@ from timeseriesflattener_spark import (
     PredictorSpec,
     StaticFrame,
     StaticSpec,
+    TimeDeltaSpec,
+    TimestampValueFrame,
     ValueFrame,
     strings_to_aggregators,
 )
@@ -62,13 +64,60 @@ def test_temporal_flatten_is_one_join_one_agg(spark):
 def test_static_join_is_broadcast(spark):
     pred_frame = str_to_df(spark, "entity_id,pred_timestamp\n1,2021-01-03")
     static_frame = str_to_df(spark, "entity_id,sex\n1,female")
-    from timeseriesflattener_spark.operators.static import process_static_spec
+    from timeseriesflattener_spark.operators.static import join_static_spec
 
     spec = StaticSpec(
         value_frame=StaticFrame(df=static_frame), column_prefix="pred", fallback=0
     )
-    plan = _plan(process_static_spec(spec, PredictionTimeFrame(df=pred_frame)))
+    plan = _plan(join_static_spec(pred_frame, spec, "entity_id"))
     assert "BroadcastHashJoin" in plan, plan
+
+
+def _shape(plan: str) -> dict[str, int]:
+    plan = plan.split("== Initial Plan ==")[0]
+    return {
+        "shuffle": plan.count("Exchange") - plan.count("BroadcastExchange"),
+        "smj": plan.count("SortMergeJoin"),
+        "bhj": plan.count("BroadcastHashJoin"),
+    }
+
+
+def test_entity_specs_add_only_broadcast_joins(spark):
+    """Static and time-delta features are per-entity lookups: adding one
+    of each to a one-temporal-spec flatten adds a broadcast hash join
+    each, and no shuffle exchange or sort-merge join (no uuid-keyed side
+    frame joined back onto the prediction times). Size-based broadcasts
+    are off, as for frames too large to broadcast, so only the joins the
+    library hints as broadcast are broadcast."""
+    from timeseriesflattener_spark import TimeDeltaSpec, TimestampValueFrame
+
+    pred_frame = str_to_df(
+        spark, "entity_id,pred_timestamp\n1,2021-01-03\n2,2021-01-05"
+    )
+    values = str_to_df(spark, "entity_id,value,timestamp\n1,1,2021-01-01\n2,2,2021-01-02")
+    static = str_to_df(spark, "entity_id,sex\n1,0\n2,1")
+    births = str_to_df(spark, "entity_id,timestamp\n1,2000-01-01\n2,1990-06-01")
+    temporal = PredictorSpec(
+        value_frame=ValueFrame(df=values),
+        lookbehind_distances=[dt.timedelta(days=30)],
+        aggregators=strings_to_aggregators(["mean"]),
+        fallback=0,
+    )
+    per_entity = [
+        StaticSpec(value_frame=StaticFrame(df=static), column_prefix="pred", fallback=0),
+        TimeDeltaSpec(
+            init_frame=TimestampValueFrame(df=births), output_name="age", fallback=0
+        ),
+    ]
+    fl = Flattener(predictiontime_frame=PredictionTimeFrame(df=pred_frame))
+    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        base = _shape(_plan(fl.aggregate_timeseries([temporal]).df))
+        wide = _shape(_plan(fl.aggregate_timeseries([temporal, *per_entity]).df))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
+    assert wide == {**base, "bhj": base["bhj"] + 2}, (base, wide)
 
 
 def test_tier_partials_are_hash_aggregated(spark):

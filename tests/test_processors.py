@@ -151,6 +151,32 @@ def test_static_spec_multiple_values(spark):
     assert row["pred_value_2_fallback_0"] == "b"
 
 
+def test_entity_feature_nullability(spark):
+    """A time-delta feature with a non-null fallback is coalesced, so it
+    is non-nullable; one without a fallback and every static feature
+    (the reference fills no static nulls) stay nullable."""
+    pred_frame = str_to_df(spark, "entity_id,pred_timestamp\n1,2021-01-01\n2,2021-01-01")
+    births = TimestampValueFrame(df=str_to_df(spark, "entity_id,timestamp\n1,2020-01-01"))
+    static_frame = str_to_df(spark, "entity_id,sex\n1,1")
+    result = Flattener(predictiontime_frame=PredictionTimeFrame(df=pred_frame)).aggregate_timeseries(
+        specs=[
+            TimeDeltaSpec(init_frame=births, output_name="age", fallback=0),
+            TimeDeltaSpec(init_frame=births, output_name="age_raw", fallback=None),
+            StaticSpec(
+                value_frame=StaticFrame(df=static_frame), column_prefix="pred", fallback=0
+            ),
+        ]
+    )
+    nullable = {f.name: f.nullable for f in result.df.schema.fields}
+    assert nullable["pred_age_days_fallback_0"] is False
+    assert nullable["pred_age_raw_days_fallback_None"] is True
+    assert nullable["pred_sex_fallback_0"] is True
+    rows = {r["entity_id"]: r for r in result.df.collect()}
+    assert rows[2]["pred_age_days_fallback_0"] == 0.0
+    assert rows[2]["pred_age_raw_days_fallback_None"] is None
+    assert rows[2]["pred_sex_fallback_0"] is None
+
+
 def test_sliding_window_golden(spark):
     """Ref ``temporal_test.py:294-342``: 6 pred times, 9 values,
     lookbehinds {10d, 365d}, step_size=365d — full golden output."""

@@ -11,6 +11,8 @@ from timeseriesflattener_spark.operators import dedup as D
 from timeseriesflattener_spark.operators import similarity as S
 from timeseriesflattener_spark.operators import text as T
 
+from .labelprop_reference import labelprop_clusters
+
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -289,24 +291,15 @@ def test_star_components_match_labelprop_on_chains(spark):
     pairs = spark.createDataFrame(chain + clique, "doc_a long, doc_b long")
     star = {
         (r["doc"], r["cluster"])
-        for r in D.duplicate_clusters(docs, pairs, algorithm="star", max_iterations=10).collect()
+        for r in D.duplicate_clusters(docs, pairs, max_iterations=10).collect()
     }
     lp = {
         (r["doc"], r["cluster"])
-        for r in D.duplicate_clusters(docs, pairs, algorithm="labelprop", max_iterations=100).collect()
+        for r in labelprop_clusters(docs, pairs, max_iterations=100).collect()
     }
     assert star == lp
     assert all(c == 0 for d, c in star if d < n)  # the chain collapses to 0
     assert all(c == n for d, c in star if d >= n)  # clique to its min
-
-
-def test_duplicate_clusters_unknown_algorithm(spark):
-    docs = spark.createDataFrame([(1,)], "doc_id long")
-    pairs = spark.createDataFrame([], "doc_a long, doc_b long")
-    import pytest as _pt
-
-    with _pt.raises(ValueError, match="algorithm"):
-        D.duplicate_clusters(docs, pairs, algorithm="nope")
 
 
 def test_repetition_stats_lines_golden(spark):

@@ -8,10 +8,12 @@ Differences from the reference (deliberate):
   across specs with worker processes (``main.py:109-134``); Spark
   parallelises across *partitions* within a single plan. ``n_workers``
   is accepted and ignored for API compatibility.
-- no positional horizontal concat (``utils.py:21-28``): processed spec
-  frames are joined on the prediction-time uuid. All temporal aggs are
-  shuffled by the same key, so the multi-way join is co-partitioned —
-  no extra exchange after the first.
+- no positional horizontal concat (``utils.py:21-28``): static and
+  time-delta features are per-entity lookups, broadcast-joined straight
+  onto the prediction frame on the entity; that frame is then the root
+  of a left join, on the prediction-time uuid, with each fused temporal
+  aggregation. The aggregations are shuffled by the uuid, so the
+  multi-way join is co-partitioned — no extra exchange after the first.
 - ``step_size`` (``processors/temporal.py:244-285``) exists in the
   reference to bound *memory*; Spark already streams partitions, so it
   is kept for output parity only. Stepped and unstepped flattens build
@@ -36,12 +38,12 @@ from .frames import PredictionTimeFrame
 from .functions import sqltext
 from .functions.sqltext import ident
 from .functions.timeutils import micros
-from .operators.static import process_static_spec, static_feature_name
+from .operators.static import join_static_spec, static_feature_name
 from .operators.temporal import (
     feature_col_name,
     process_temporal_specs_fused,
 )
-from .operators.timedelta import process_timedelta_spec, timedelta_feature_name
+from .operators.timedelta import join_timedelta_spec, timedelta_feature_name
 from .specs import (
     BooleanOutcomeSpec,
     OutcomeSpec,
@@ -98,14 +100,6 @@ class AggregatedFrame:
         return self.df.toPandas()
 
 
-def _process_one(spec: ValueSpecification, pred: PredictionTimeFrame) -> DataFrame:
-    if isinstance(spec, StaticSpec):
-        return process_static_spec(spec, pred)
-    if isinstance(spec, TimeDeltaSpec):
-        return process_timedelta_spec(spec, pred)
-    raise TypeError(f"Unknown spec type {type(spec)}")
-
-
 def _spec_feature_names(spec: ValueSpecification) -> list[str]:
     """Output feature column names of a spec, in its processor's order."""
     if isinstance(spec, (PredictorSpec, OutcomeSpec, BooleanOutcomeSpec)):
@@ -139,28 +133,35 @@ def _build_feature_dfs(
     pred: PredictionTimeFrame,
     chunk: tuple[int, int] | None = None,
 ) -> list[DataFrame]:
-    """One DataFrame per spec-or-fused-group: temporal specs sharing a
-    value frame (see ``_frame_key``) collapse into ONE join + ONE fused
-    aggregation (``process_temporal_specs_fused``) — group-spec
-    workloads pay a shuffle per frame, not per spec. ``chunk`` is the
-    ``step_size`` chunking as ``(start, step)`` microseconds, passed to
-    every temporal group."""
+    """One uuid-keyed DataFrame per fused temporal group, in order of
+    first appearance: temporal specs sharing a value frame (see
+    ``_frame_key``) collapse into ONE join + ONE fused aggregation
+    (``process_temporal_specs_fused``) — group-spec workloads pay a
+    shuffle per frame, not per spec. ``chunk`` is the ``step_size``
+    chunking as ``(start, step)`` microseconds, passed to every group."""
     groups: dict[tuple, list[TemporalSpec]] = {}
     for spec in specs:
         if isinstance(spec, (PredictorSpec, OutcomeSpec, BooleanOutcomeSpec)):
             groups.setdefault(_frame_key(spec), []).append(spec)
-    emitted: set[tuple] = set()
-    feature_dfs: list[DataFrame] = []
+    return [process_temporal_specs_fused(group, pred, chunk) for group in groups.values()]
+
+
+def _join_entity_specs(
+    specs: Sequence[ValueSpecification], pred: PredictionTimeFrame
+) -> DataFrame:
+    """``pred.df`` with the static and time-delta features of ``specs``:
+    per-entity lookups, each a broadcast left join on the entity."""
+    df = pred.df
     for spec in specs:
-        if isinstance(spec, (PredictorSpec, OutcomeSpec, BooleanOutcomeSpec)):
-            key = _frame_key(spec)
-            if key in emitted:
-                continue
-            emitted.add(key)
-            feature_dfs.append(process_temporal_specs_fused(groups[key], pred, chunk))
-        else:
-            feature_dfs.append(_process_one(spec, pred))
-    return feature_dfs
+        if isinstance(spec, StaticSpec):
+            df = join_static_spec(df, spec, pred.entity_id_col_name)
+        elif isinstance(spec, TimeDeltaSpec):
+            df = join_timedelta_spec(
+                df, spec, pred.entity_id_col_name, pred.timestamp_col_name
+            )
+        elif not isinstance(spec, (PredictorSpec, OutcomeSpec, BooleanOutcomeSpec)):
+            raise TypeError(f"Unknown spec type {type(spec)}")
+    return df
 
 
 def _chunked(
@@ -233,7 +234,7 @@ class Flattener:
         out = reduce(
             lambda acc, f: acc.join(f, on=pred.prediction_time_uuid_col_name, how="left"),
             _build_feature_dfs(specs, pred, chunk),
-            pred.df,
+            _join_entity_specs(specs, pred),
         )
         # spec-order column contract regardless of fusion grouping, as
         # one parsed select (quoted: feature names may contain dots,

@@ -54,7 +54,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from .timeutils import micros
 
-from ..plans.rollup import bucket_expr
+from ..plans.rollup import bucket_expr, tier_micros
 
 MAGIC = b"GORB"
 VERSION = 1
@@ -462,7 +462,7 @@ def decode_chunks(
         # filter reaches the parquet scan (PushedFilters), so untouched
         # chunks are never read, let alone decoded
         if tier is not None:
-            width = {"1m": 60, "1h": 3600, "1d": 86400}[tier] * 1_000_000
+            width = tier_micros(tier)
             chunks = chunks.filter(
                 (F.col("chunk_start") < F.lit(hi_us))
                 & (F.col("chunk_start") > F.lit(lo_us - width))

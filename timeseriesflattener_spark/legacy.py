@@ -617,32 +617,29 @@ class TimeseriesFlattener:
 
     def _compute_specs(self, pred: PredictionTimeFrame) -> DataFrame:
         """Flatten every queued spec; with a cache, load hits per spec
-        and compute only the misses (still one fused Flattener pass)."""
+        and compute only the misses, from one Flattener build whose
+        columns each miss's entry is written from."""
         uuid = pred.prediction_time_uuid_col_name
         if self.cache is None:
             return Flattener(predictiontime_frame=pred).aggregate_timeseries(
                 self._specs
             ).df
         pred_rows = pred.df.count()
-        hits: list[DataFrame] = []
-        misses: list[tuple[ValueSpecification, str]] = []
-        for spec in self._specs:
-            key = self._cache_key(spec, pred_rows)
-            cached = self.cache.get(key)
-            if cached is not None:
-                hits.append(cached)
-            else:
-                misses.append((spec, key))
+        keys = [self._cache_key(spec, pred_rows) for spec in self._specs]
+        frames = [self.cache.get(key) for key in keys]
+        misses = [i for i, f in enumerate(frames) if f is None]
         if misses:
-            df = Flattener(predictiontime_frame=pred).aggregate_timeseries(
-                [s for s, _ in misses]
+            fresh = Flattener(predictiontime_frame=pred).aggregate_timeseries(
+                [self._specs[i] for i in misses]
             ).df
-            for spec, key in misses:
+            for i in misses:
                 # backtick-quoted: names may contain dots (fallback_0.0)
-                cols = [F.col(f"`{c}`") for c in (uuid, *_spec_feature_names(spec))]
-                self.cache.put(key, df.select(*cols))
-        else:
-            df = pred.df
-        for cached in hits:
+                cols = [F.col(f"`{c}`") for c in (uuid, *_spec_feature_names(self._specs[i]))]
+                # join the entry read back: the caller's action recomputes nothing
+                frames[i] = self.cache.put(keys[i], fresh.select(*cols))
+        df = pred.df
+        for cached in frames:
             df = df.join(cached, uuid, "left")
-        return df
+        # the flattener's column order, whatever the cache held
+        names = (*pred.df.columns, *(n for spec in self._specs for n in _spec_feature_names(spec)))
+        return df.select(*[F.col(f"`{c}`") for c in names])

@@ -12,9 +12,9 @@ from .rolling import (
     value_histogram,
 )
 from .sessions import conversation_shape, session_stats, sessionize
-from .static import process_static_spec
+from .static import join_static_spec
 from .temporal import process_temporal_spec
-from .timedelta import process_timedelta_spec
+from .timedelta import join_timedelta_spec
 
 __all__ = [
     "apply_zorder_layout",
@@ -24,10 +24,10 @@ __all__ = [
     "counter_increase",
     "downsample_m4",
     "ewma",
+    "join_static_spec",
+    "join_timedelta_spec",
     "overlap_join",
-    "process_static_spec",
     "process_temporal_spec",
-    "process_timedelta_spec",
     "rolling_stats",
     "seasonal_baseline",
     "session_stats",

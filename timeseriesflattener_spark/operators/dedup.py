@@ -927,7 +927,6 @@ def duplicate_clusters(
     pairs: DataFrame,
     id_col: str = "doc_id",
     max_iterations: int = 20,
-    algorithm: str = "star",
 ) -> DataFrame:
     """Resolve near-dup PAIRS into CLUSTERS: (doc, cluster) where
     ``cluster`` is the minimum doc id in the pair graph's connected
@@ -935,58 +934,14 @@ def duplicate_clusters(
     dedup pipeline, where "keep one per cluster" needs components, not
     pairs (A~B, B~C must drop two docs, not one per pair).
 
-    ``algorithm="star"`` (default) runs alternating large-star/
-    small-star rounds (see ``star_connected_components``) and joins the
-    resulting star edges back onto the full doc set (singletons label
-    themselves). ``algorithm="labelprop"`` keeps the min-label
-    propagation loop: each round every node takes the min label among
-    itself and its neighbours, converged when no label changes —
-    simpler, O(diameter) rounds, and it drags the full O(docs) label
-    frame through every round, which is why star is the default at
-    scale. Both localCheckpoint per round — REQUIRED lineage
-    truncation, or the plan doubles every iteration.
+    Runs alternating large-star/small-star rounds (see
+    ``star_connected_components``) and joins the resulting star edges
+    back onto the full doc set (singletons label themselves).
     """
-    if algorithm == "star":
-        labels = star_connected_components(pairs, max_iterations)
-        return df.select(F.col(id_col).alias("doc")).join(
-            labels, "doc", "left"
-        ).select("doc", F.coalesce("cluster", F.col("doc")).alias("cluster"))
-    if algorithm != "labelprop":
-        raise ValueError(f"unknown algorithm {algorithm!r}")
-    e = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    edges = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
-    labels = df.select(
-        F.col(id_col).alias("doc"), F.col(id_col).alias("cluster")
-    ).localCheckpoint(eager=True)
-
-    for _ in range(max_iterations):
-        neighbor_min = (
-            edges.join(labels, edges["src"] == labels["doc"])
-            .groupBy("dst")
-            .agg(F.min("cluster").alias("__nmin"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels["doc"] == neighbor_min["dst"], "left")
-            .select(
-                "doc",
-                F.least(
-                    F.col("cluster"), F.coalesce(F.col("__nmin"), F.col("cluster"))
-                ).alias("cluster"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc")
-            .filter(F.col("n.cluster") != F.col("o.cluster"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
+    labels = star_connected_components(pairs, max_iterations)
+    return df.select(F.col(id_col).alias("doc")).join(
+        labels, "doc", "left"
+    ).select("doc", F.coalesce("cluster", F.col("doc")).alias("cluster"))
 
 
 def drop_near_duplicates(

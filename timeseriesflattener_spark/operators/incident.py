@@ -28,8 +28,6 @@ def add_incident_outcome(
     lookahead: dt.timedelta,
     output_col: str = "outc_incident",
     min_lookahead: dt.timedelta = dt.timedelta(0),
-    drop_after_outcome: bool = True,
-    broadcast: bool = True,
 ) -> DataFrame:
     """v1 incident-outcome semantics (``v1/flattened_dataset.py:563-605``),
     endpoint-exact:
@@ -44,21 +42,17 @@ def add_incident_outcome(
       the prediction instant counts when ``min = 0``).
     """
     pred = predictiontime_frame
-    out_df = outcome_frame.df.select(
-        F.col(outcome_frame.entity_id_col_name).alias("__outc_entity"),
-        micros(F.col(outcome_frame.value_timestamp_col_name)).alias("__outc_micros"),
+    out_df = F.broadcast(
+        outcome_frame.df.select(
+            F.col(outcome_frame.entity_id_col_name).alias("__outc_entity"),
+            micros(F.col(outcome_frame.value_timestamp_col_name)).alias("__outc_micros"),
+        )
     )
-    if broadcast:
-        out_df = F.broadcast(out_df)
 
     pred_micros = micros(F.col(pred.timestamp_col_name))
     joined = pred.df.join(
         out_df, on=F.col(pred.entity_id_col_name) == F.col("__outc_entity"), how="left"
-    )
-    if drop_after_outcome:
-        joined = joined.filter(
-            F.col("__outc_micros").isNull() | (pred_micros <= F.col("__outc_micros"))
-        )
+    ).filter(F.col("__outc_micros").isNull() | (pred_micros <= F.col("__outc_micros")))
     lo = F.lit(timedelta_to_micros(min_lookahead))
     hi = F.lit(timedelta_to_micros(lookahead))
     within = (

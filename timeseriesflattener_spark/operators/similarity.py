@@ -74,7 +74,6 @@ def cosine_topk(
     query_id: str = "vec_id",
     corpus_id: str = "vec_id",
     vec_col: str = "embedding",
-    broadcast_queries: bool = True,
     dim: int | None = 64,
 ) -> DataFrame:
     """Exact top-k neighbours per query (excluding self-matches).
@@ -84,13 +83,13 @@ def cosine_topk(
     and hoists each side's norm out of the pair loop: |Q|+|C| norm
     evaluations instead of 2x|Q|x|C| (bit-identical — the norm is the
     same expression over the same array, computed once per row)."""
-    q = queries.select(
-        F.col(query_id).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        l2_norm(F.col(vec_col), dim).alias("__qn"),
+    q = F.broadcast(
+        queries.select(
+            F.col(query_id).alias("query_id"),
+            F.col(vec_col).alias("__qv"),
+            l2_norm(F.col(vec_col), dim).alias("__qn"),
+        )
     )
-    if broadcast_queries:
-        q = F.broadcast(q)
     c = corpus.select(
         F.col(corpus_id).alias("neighbor_id"),
         F.col(vec_col).alias("__cv"),
@@ -215,7 +214,6 @@ def lsh_topk(
     bits: int = 8,
     tables: int = 8,
     seed: int = 42,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Approximate top-k: score only same-bucket collisions, exact
     cosine re-rank. Returns (query_id, neighbor_id, cos_sim, rank)."""
@@ -232,7 +230,7 @@ def lsh_topk(
         .distinct()
     )
     scored = (
-        cand.join(F.broadcast(q) if broadcast_queries else q, "query_id")
+        cand.join(F.broadcast(q), "query_id")
         .join(c, "neighbor_id")
         .withColumn("cos_sim", F.round(cosine(F.col("__qv"), F.col("__cv"), dim), 6))
     )
@@ -307,7 +305,6 @@ def ivf_topk(
     vec_col: str = "embedding",
     nlist: int = 32,
     nprobe: int = 4,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """IVF-flat approximate top-k: a coarse quantizer (spherical Voronoi
     cells around ``nlist`` deterministic pivots) partitions the corpus;
@@ -346,9 +343,7 @@ def ivf_topk(
     probe = F.transform(
         F.slice(F.array_sort(scored_cells), -nprobe, nprobe), lambda s: s["cell"]
     )
-    qprobed = qd.withColumn("cell", F.explode(probe)).drop("__dots")
-    if broadcast_queries:
-        qprobed = F.broadcast(qprobed)
+    qprobed = F.broadcast(qd.withColumn("cell", F.explode(probe)).drop("__dots"))
 
     scored = (
         qprobed.join(cbinned, "cell")

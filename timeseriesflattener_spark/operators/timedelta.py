@@ -10,7 +10,8 @@ Parity traps honoured:
 - <=1 row per entity is enforced (reference ``specs/timedelta.py:36-42``)
   — here as a distributed check at flatten time.
 
-Spark-first: single-event-per-entity side -> broadcast left join.
+Spark-first: the single event per entity is broadcast and left-joined
+straight onto the prediction frame on the entity (no uuid round trip).
 """
 
 from __future__ import annotations
@@ -19,10 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from ..functions.timeutils import micros
 
-from ..frames import PredictionTimeFrame
-from ..specs import TIME_FORMAT_DIVISORS, TimeDeltaSpec, fallback_str
-
-MICROS_PER_DAY = 86_400_000_000
+from ..specs import MICROS_PER_DAY, TIME_FORMAT_DIVISORS, TimeDeltaSpec, fallback_str
+from .static import broadcast_entity_join
 
 
 def timedelta_feature_name(spec: TimeDeltaSpec) -> str:
@@ -49,38 +48,29 @@ def validate_one_row_per_entity(spec: TimeDeltaSpec) -> None:
         )
 
 
-def process_timedelta_spec(
-    spec: TimeDeltaSpec, predictiontime_frame: PredictionTimeFrame
+def join_timedelta_spec(
+    df: DataFrame, spec: TimeDeltaSpec, entity_col: str, timestamp_col: str
 ) -> DataFrame:
+    """``df`` plus the ``timedelta_feature_name`` column: the time from
+    the entity's event to ``df``'s ``timestamp_col``."""
     validate_one_row_per_entity(spec)
 
-    pred = predictiontime_frame
-    event_df = F.broadcast(
-        spec.init_frame.df.select(
-            F.col(spec.init_frame.entity_id_col_name).alias("__event_entity"),
-            F.col(spec.init_frame.value_timestamp_col_name).alias("__event_time"),
-        )
+    tf = spec.init_frame
+    joined = broadcast_entity_join(
+        df,
+        tf.df,
+        tf.entity_id_col_name,
+        entity_col,
+        F.col(tf.value_timestamp_col_name).alias("__event_time"),
     )
 
     # truncate-toward-zero to whole days, then unit-convert (parity with
     # polars total_days(); long-cast of a double truncates toward zero).
     whole_days = (
-        (
-            micros(F.col(pred.timestamp_col_name)) - micros(F.col("__event_time"))
-        )
-        / F.lit(MICROS_PER_DAY)
+        (micros(F.col(timestamp_col)) - micros(F.col("__event_time"))) / F.lit(MICROS_PER_DAY)
     ).cast("long")
     value = whole_days.cast("double") / F.lit(float(TIME_FORMAT_DIVISORS[spec.time_format]))
     if spec.fallback is not None:
         value = F.coalesce(value, F.lit(spec.fallback).cast("double"))
 
-    return (
-        pred.df.select(
-            pred.prediction_time_uuid_col_name, pred.entity_id_col_name, pred.timestamp_col_name
-        )
-        .join(event_df, on=F.col(pred.entity_id_col_name) == F.col("__event_entity"), how="left")
-        .select(
-            F.col(pred.prediction_time_uuid_col_name),
-            value.alias(timedelta_feature_name(spec)),
-        )
-    )
+    return joined.withColumn(timedelta_feature_name(spec), value).drop("__event_time")

@@ -33,7 +33,6 @@ def flatten_aligned(
     lookback_buckets: int,
     tier: str,
     entity_col: str = "conv_id",
-    finalize: bool = True,
 ) -> DataFrame:
     """Sliding window of ``lookback_buckets`` buckets over tier partials.
 
@@ -66,6 +65,4 @@ def flatten_aligned(
     # anchor: keep only windows whose end bucket actually exists
     anchors = partials.select(entity_col, "bucket_start")
     windows = windows.join(anchors, on=[entity_col, "bucket_start"], how="leftsemi")
-    if not finalize:
-        return windows
     return R.finalize(windows, value_cols, entity_col=entity_col, include_bucket_ts=False)

@@ -59,12 +59,11 @@ from pyspark.sql import functions as F
 from ..functions import sqltext
 from ..functions.sqltext import ident
 from ..functions.timeutils import micros
+from ..specs import MICROS_PER_DAY
 
 TIER_SECONDS: dict[str, int] = {"1m": 60, "1h": 3600, "1d": 86400}
 #: rollup lineage: each tier is computed from the previous one
 TIER_ORDER: list[str] = ["1m", "1h", "1d"]
-
-MICROS_PER_DAY = 86_400_000_000
 
 #: stored partial-state columns per value column c, as f"{c}__{suffix}"
 PARTIAL_SUFFIXES: tuple[str, ...] = (
