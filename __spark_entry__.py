@@ -438,7 +438,8 @@ def q_stream_windowed_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     the state-store merge order."""
     import tempfile
 
-    from timeseriesflattener_spark.streaming.windowed import start_windowed_stream
+    from timeseriesflattener_spark.streaming import start_stream
+    from timeseriesflattener_spark.streaming.windowed import windowed_partials
 
     work = tempfile.mkdtemp(prefix="tsf-stream-win-")
     src = _events_as_conv(spark, sf_dir, cents=True)
@@ -453,15 +454,13 @@ def q_stream_windowed_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     src.unionByName(sentinel).repartition(4).write.parquet(f"{work}/input")
 
     def _run() -> None:
-        start_windowed_stream(
+        start_stream(
             spark,
             f"{work}/input",
             schema="conv_id string, ts timestamp, turn_idx long, value long",
-            out_path=f"{work}/out",
             checkpoint_dir=f"{work}/ckpt",
-            value_cols=["value"],
-            tier="1h",
-            watermark="1 hour",
+            transform=lambda s: windowed_partials(s, ["value"], "1h", watermark="1 hour"),
+            sink=f"{work}/out",
         ).awaitTermination()
 
     _run()
@@ -489,7 +488,8 @@ def q_stream_windowed_full_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same cents-exact arithmetic as rollup_1h)."""
     import tempfile
 
-    from timeseriesflattener_spark.streaming.windowed import start_windowed_stream
+    from timeseriesflattener_spark.streaming import start_stream
+    from timeseriesflattener_spark.streaming.windowed import windowed_partials
 
     work = tempfile.mkdtemp(prefix="tsf-stream-full-")
     src = _events_as_conv(spark, sf_dir, cents=True)
@@ -502,16 +502,15 @@ def q_stream_windowed_full_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     src.unionByName(sentinel).repartition(4).write.parquet(f"{work}/input")
 
     def _run() -> None:
-        start_windowed_stream(
+        start_stream(
             spark,
             f"{work}/input",
             schema="conv_id string, ts timestamp, turn_idx long, value long",
-            out_path=f"{work}/out",
             checkpoint_dir=f"{work}/ckpt",
-            value_cols=["value"],
-            tier="1h",
-            watermark="1 hour",
-            full_stats=True,
+            transform=lambda s: windowed_partials(
+                s, ["value"], "1h", watermark="1 hour", full_stats=True
+            ),
+            sink=f"{work}/out",
         ).awaitTermination()
 
     _run()
@@ -525,14 +524,15 @@ def q_stream_windowed_full_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_stream_sessionize_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked streaming sessionization (session_window under
-    readStream, streaming/windowed.py::start_session_stream): sessions
+    readStream, streaming/windowed.py::session_partials): sessions
     finalise once the watermark passes session_end + gap. Same sentinel
     + second-availableNow-pass flush as stream_windowed_1h. Oracle: the
     batch lag+cumsum session SQL reshaped to per-session stats — stream
     output == batch sessionization, exactly."""
     import tempfile
 
-    from timeseriesflattener_spark.streaming.windowed import start_session_stream
+    from timeseriesflattener_spark.streaming import start_stream
+    from timeseriesflattener_spark.streaming.windowed import session_partials
 
     work = tempfile.mkdtemp(prefix="tsf-stream-sess-")
     src = _events_as_conv(spark, sf_dir).select("conv_id", "ts", "turn_idx")
@@ -544,14 +544,13 @@ def q_stream_sessionize_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     src.unionByName(sentinel).repartition(4).write.parquet(f"{work}/input")
 
     def _run() -> None:
-        start_session_stream(
+        start_stream(
             spark,
             f"{work}/input",
             schema="conv_id string, ts timestamp, turn_idx long",
-            out_path=f"{work}/out",
             checkpoint_dir=f"{work}/ckpt",
-            gap="30 minutes",
-            watermark="1 hour",
+            transform=lambda s: session_partials(s, gap="30 minutes", watermark="1 hour"),
+            sink=f"{work}/out",
         ).awaitTermination()
 
     _run()
@@ -582,6 +581,7 @@ def q_stream_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import time as _time
 
+    from timeseriesflattener_spark.streaming import start_stream
     from timeseriesflattener_spark.streaming.windowed import stream_clean
 
     work = tempfile.mkdtemp(prefix="tsf-stream-clean-")
@@ -600,14 +600,13 @@ def q_stream_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     base.coalesce(1).write.parquet(f"{work}/input")
     _time.sleep(1.05)
     clones.coalesce(1).write.mode("append").parquet(f"{work}/input")
-    stream = (
-        spark.readStream.schema("doc_id long, text string, ts timestamp")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{work}/input")
-    )
-    (
-        stream_clean(
-            stream,
+    start_stream(
+        spark,
+        f"{work}/input",
+        schema="doc_id long, text string, ts timestamp",
+        checkpoint_dir=f"{work}/ckpt",
+        transform=lambda s: stream_clean(
+            s,
             watermark="1 hour",
             quality_kwargs=dict(
                 min_tokens=25,
@@ -615,14 +614,10 @@ def q_stream_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
                 min_stopword_ratio=0.02,
                 min_alpha_word_ratio=0.5,
             ),
-        )
-        .writeStream.format("parquet")
-        .option("path", f"{work}/out")
-        .option("checkpointLocation", f"{work}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+        ),
+        sink=f"{work}/out",
+        max_files_per_trigger=1,
+    ).awaitTermination()
     survivors = spark.read.parquet(f"{work}/out")
     return (
         survivors.select(
@@ -658,24 +653,20 @@ def q_stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     base.coalesce(1).write.parquet(f"{work}/input")
     _time.sleep(1.05)  # file-source ordering is by modification time
     clones.coalesce(1).write.mode("append").parquet(f"{work}/input")
+    from timeseriesflattener_spark.streaming import start_stream
     from timeseriesflattener_spark.streaming.windowed import (
         stream_drop_exact_duplicates,
     )
 
-    stream = (
-        spark.readStream.schema("doc_id long, text string, ts timestamp")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{work}/input")
-    )
-    (
-        stream_drop_exact_duplicates(stream, watermark="1 hour")
-        .writeStream.format("parquet")
-        .option("path", f"{work}/out")
-        .option("checkpointLocation", f"{work}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    start_stream(
+        spark,
+        f"{work}/input",
+        schema="doc_id long, text string, ts timestamp",
+        checkpoint_dir=f"{work}/ckpt",
+        transform=lambda s: stream_drop_exact_duplicates(s, watermark="1 hour"),
+        sink=f"{work}/out",
+        max_files_per_trigger=1,
+    ).awaitTermination()
     survivors = spark.read.parquet(f"{work}/out")
     return (
         survivors.select(
@@ -705,6 +696,7 @@ def q_stream_dedup_against(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import time as _time
 
+    from timeseriesflattener_spark.streaming import start_stream
     from timeseriesflattener_spark.streaming.windowed import stream_dedup_against
 
     work = tempfile.mkdtemp(prefix="tsf-stream-da-")
@@ -733,20 +725,15 @@ def q_stream_dedup_against(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch1.coalesce(1).write.parquet(f"{work}/input")
     _time.sleep(1.05)  # file-source ordering is by modification time
     batch2.coalesce(1).write.mode("append").parquet(f"{work}/input")
-    stream = (
-        spark.readStream.schema("doc_id long, text string, ts timestamp")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{work}/input")
-    )
-    (
-        stream_dedup_against(stream, ref, watermark="1 hour")
-        .writeStream.format("parquet")
-        .option("path", f"{work}/out")
-        .option("checkpointLocation", f"{work}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    start_stream(
+        spark,
+        f"{work}/input",
+        schema="doc_id long, text string, ts timestamp",
+        checkpoint_dir=f"{work}/ckpt",
+        transform=lambda s: stream_dedup_against(s, ref, watermark="1 hour"),
+        sink=f"{work}/out",
+        max_files_per_trigger=1,
+    ).awaitTermination()
     survivors = spark.read.parquet(f"{work}/out")
     return (
         survivors.select(
@@ -780,19 +767,24 @@ def q_stream_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ground truth in DuckDB."""
     import tempfile
 
-    from timeseriesflattener_spark.streaming.stateful import start_profile_stream
+    from timeseriesflattener_spark.streaming import start_stream
+    from timeseriesflattener_spark.streaming.stateful import (
+        append_with_batch_id,
+        running_profiles,
+    )
 
     work = tempfile.mkdtemp(prefix="tsf-stream-prof-")
     src = _events_as_conv(spark, sf_dir, cents=True).select(
         "conv_id", "ts", F.col("value").alias("v")
     )
     src.repartition(4).write.parquet(f"{work}/input")
-    start_profile_stream(
+    start_stream(
         spark,
         f"{work}/input",
         schema="conv_id string, ts timestamp, v long",
-        out_path=f"{work}/out",
         checkpoint_dir=f"{work}/ckpt",
+        transform=running_profiles,
+        sink=append_with_batch_id(f"{work}/out"),
         max_files_per_trigger=1,
     ).awaitTermination()
     sink = spark.read.parquet(f"{work}/out")
@@ -2034,7 +2026,8 @@ def q_stream_m4(spark: SparkSession, sf_dir: str) -> DataFrame:
     downsample_m4's oracle verbatim."""
     import tempfile
 
-    from timeseriesflattener_spark.streaming.windowed import start_m4_stream
+    from timeseriesflattener_spark.streaming import start_stream
+    from timeseriesflattener_spark.streaming.windowed import m4_partials
 
     work = tempfile.mkdtemp(prefix="tsf-stream-m4-")
     src = _events_cents(spark, sf_dir).select(
@@ -2048,16 +2041,16 @@ def q_stream_m4(spark: SparkSession, sf_dir: str) -> DataFrame:
     src.unionByName(sentinel).repartition(4).write.parquet(f"{work}/input")
 
     def _run() -> None:
-        start_m4_stream(
+        start_stream(
             spark,
             f"{work}/input",
             schema="user_id long, ts timestamp, cents long",
-            out_path=f"{work}/out",
             checkpoint_dir=f"{work}/ckpt",
-            bucket=dt.timedelta(hours=6),
-            entity_col="user_id",
-            value_col="cents",
-            watermark="1 hour",
+            transform=lambda s: m4_partials(
+                s, dt.timedelta(hours=6), entity_col="user_id",
+                value_col="cents", watermark="1 hour",
+            ),
+            sink=f"{work}/out",
         ).awaitTermination()
 
     _run()
@@ -2264,7 +2257,11 @@ def q_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from timeseriesflattener_spark.operators.events import counts_from_detail
-    from timeseriesflattener_spark.streaming.stateful import start_funnel_stream
+    from timeseriesflattener_spark.streaming import start_stream
+    from timeseriesflattener_spark.streaming.stateful import (
+        append_with_batch_id,
+        running_funnel,
+    )
 
     steps = ["view", "click", "purchase"]
     work = tempfile.mkdtemp(prefix="tsf-stream-funnel-")
@@ -2282,14 +2279,13 @@ def q_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         if hi:
             part = part.filter(F.col("ts") < F.lit(hi).cast("timestamp"))
         part.coalesce(1).write.mode("append").parquet(f"{work}/input")
-    start_funnel_stream(
+    start_stream(
         spark,
         f"{work}/input",
         schema="entity string, ts timestamp, event_type string",
-        out_path=f"{work}/out",
         checkpoint_dir=f"{work}/ckpt",
-        steps=steps,
-        within=dt.timedelta(days=3),
+        transform=lambda s: running_funnel(s, steps, within=dt.timedelta(days=3)),
+        sink=append_with_batch_id(f"{work}/out"),
         max_files_per_trigger=1,
     ).awaitTermination()
     sink = spark.read.parquet(f"{work}/out")
@@ -2359,7 +2355,11 @@ def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     — exact, because cents stay integral in float64."""
     import tempfile
 
-    from timeseriesflattener_spark.streaming.stateful import start_cusum_stream
+    from timeseriesflattener_spark.streaming import start_stream
+    from timeseriesflattener_spark.streaming.stateful import (
+        append_with_batch_id,
+        running_cusum,
+    )
 
     work = tempfile.mkdtemp(prefix="tsf-stream-cusum-")
     src = _t(spark, sf_dir, "events").select(
@@ -2375,14 +2375,16 @@ def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         if hi:
             part = part.filter(F.col("ts") < F.lit(hi).cast("timestamp"))
         part.coalesce(1).write.mode("append").parquet(f"{work}/input")
-    start_cusum_stream(
+    start_stream(
         spark,
         f"{work}/input",
         schema="entity string, ts timestamp, event_id long, cents long",
-        out_path=f"{work}/out",
         checkpoint_dir=f"{work}/ckpt",
-        target=500, slack=100, threshold=2000,
-        value_col="cents", order_col="event_id",
+        transform=lambda s: running_cusum(
+            s, target=500, slack=100, threshold=2000,
+            value_col="cents", order_col="event_id",
+        ),
+        sink=append_with_batch_id(f"{work}/out"),
         max_files_per_trigger=1,
     ).awaitTermination()
     sink = spark.read.parquet(f"{work}/out")
@@ -2681,7 +2683,11 @@ def q_stream_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents; `filled` == the batch twin's `is_gap`)."""
     import tempfile
 
-    from timeseriesflattener_spark.streaming.stateful import start_locf_stream
+    from timeseriesflattener_spark.streaming import start_stream
+    from timeseriesflattener_spark.streaming.stateful import (
+        append_with_batch_id,
+        running_locf,
+    )
 
     work = tempfile.mkdtemp(prefix="tsf-stream-locf-")
     src = _t(spark, sf_dir, "events").select(
@@ -2697,14 +2703,13 @@ def q_stream_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
         if hi:
             part = part.filter(F.col("ts") < F.lit(hi).cast("timestamp"))
         part.coalesce(1).write.mode("append").parquet(f"{work}/input")
-    start_locf_stream(
+    start_stream(
         spark,
         f"{work}/input",
         schema="entity string, ts timestamp, event_id long, cents long",
-        out_path=f"{work}/out",
         checkpoint_dir=f"{work}/ckpt",
-        bucket_micros=86_400_000_000,
-        order_col="event_id",
+        transform=lambda s: running_locf(s, 86_400_000_000, order_col="event_id"),
+        sink=append_with_batch_id(f"{work}/out"),
         max_files_per_trigger=1,
     ).awaitTermination()
     sink = spark.read.parquet(f"{work}/out")

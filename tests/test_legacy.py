@@ -496,3 +496,105 @@ def test_expand_group_spec_duplicate_fallbacks_deduped(spark):
     assert len(cols) == len(set(cols)), cols
     assert "pred_val_within_5_days_mean_fallback_0" in cols
     assert "pred_val_within_5_days_mean_fallback_2" in cols
+
+
+def test_legacy_cold_cache_runs_one_flatten_and_one_count(spark, tmp_path, monkeypatch):
+    """Three PredictorSpecs over one value frame, cold cache: the fused
+    flatten runs once for all three entries, and the frame is counted
+    once for the three fingerprints. The entity column passes through a
+    Python udf that counts its calls: every run of the temporal join
+    calls it the same number of times, and a count prunes it."""
+    from pyspark.sql import functions as F
+
+    from timeseriesflattener_spark.frames import ValueFrame
+    from timeseriesflattener_spark.sources.io import FeatureCache
+
+    pred = str_to_df(spark, "entity_id,timestamp\n1,2021-01-03\n2,2021-01-03")
+    raw = str_to_df(
+        spark,
+        """entity_id,a,b,c,timestamp
+        1,1,10,100,2021-01-01
+        2,2,20,200,2021-01-02
+        1,3,30,300,2021-01-02""",
+    )
+    calls = spark.sparkContext.accumulator(0)
+
+    def seen(v):
+        calls.add(1)
+        return v
+
+    wide = raw.withColumn("entity_id", F.udf(seen, "long")(F.col("entity_id")))
+    counted = []
+    real_count = type(wide).count
+
+    def count(self):
+        counted.append(self)
+        return real_count(self)
+
+    monkeypatch.setattr(type(wide), "count", count)
+
+    def flattener(cache):
+        fl = TimeseriesFlattener(prediction_times_df=pred, cache=cache)
+        for col, days, agg in (("a", 5, "mean"), ("b", 10, "sum"), ("c", 20, "max")):
+            fl.add_spec(
+                PredictorSpec(
+                    value_frame=ValueFrame(df=wide, value_cols=[col]),
+                    lookbehind_distances=[dt.timedelta(days=days)],
+                    aggregators=strings_to_aggregators([agg]),
+                    fallback=0,
+                )
+            )
+        return fl
+
+    key = "prediction_time_uuid"
+    want = {r[key]: r for r in flattener(None).get_df().collect()}
+    one_pass = calls.value  # the uncached flatten: one join, one aggregation
+    assert one_pass > 0
+    counted.clear()
+    cold = flattener(FeatureCache(spark, str(tmp_path / "c"))).get_df()
+    assert sum(df is wide for df in counted) == 1
+    assert calls.value == 2 * one_pass
+    assert {r[key]: r for r in cold.collect()} == want
+
+
+def test_failed_cache_put_leaves_no_entry(spark, tmp_path, monkeypatch):
+    """A put whose write fails publishes nothing: ``get`` misses, and the
+    next cached get_df recomputes the spec instead of failing on a
+    half-written entry."""
+    import os
+
+    from pyspark.sql import functions as F
+    import pytest
+
+    from timeseriesflattener_spark.sources.io import FeatureCache
+
+    pred = str_to_df(spark, "entity_id,timestamp\n1,2021-01-03\n2,2021-01-03")
+    values = str_to_df(spark, "entity_id,value,timestamp\n1,1,2021-01-01\n2,2,2021-01-02")
+    sex = str_to_df(spark, "entity_id,female\n1,1\n2,0")
+    cache_dir = str(tmp_path / "c")
+    cache = FeatureCache(spark, cache_dir)
+    # not a local relation: the error must raise in the write job, not
+    # while the plan is optimised
+    bad = spark.range(3).withColumn("boom", F.raise_error(F.lit("write failed")).cast("string"))
+    key = FeatureCache.fingerprint({"spec": "failing"}, input_rows=2)
+    with pytest.raises(Exception, match="write failed"):
+        cache.put(key, bad)
+    assert cache.get(key) is None
+    assert os.listdir(cache_dir) == []
+
+    real_put = FeatureCache.put
+    failures = [True]
+
+    def put(self, key, df):
+        if failures:  # the first put of the run fails
+            failures.pop()
+            df = df.withColumn("boom", F.raise_error(F.lit("write failed")).cast("string"))
+        return real_put(self, key, df)
+
+    monkeypatch.setattr(FeatureCache, "put", put)
+    with pytest.raises(Exception, match="write failed"):
+        _cached_flattener(spark, pred, cache_dir, values, sex).get_df()
+    got = _cached_flattener(spark, pred, cache_dir, values, sex).get_df()
+    plain = _cached_flattener(spark, pred, None, values, sex).get_df()
+    k = "prediction_time_uuid"
+    assert {r[k]: r for r in got.collect()} == {r[k]: r for r in plain.collect()}

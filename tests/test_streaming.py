@@ -77,6 +77,38 @@ def test_structured_streaming_availablenow(spark, channels, tmp_path):
     assert _points(store, "1h") == _points(ref, "1h")
 
 
+def test_two_streams_into_one_store_equal_one_shot(spark, channels, tmp_path):
+    """Batch ids restart at 0 for every checkpoint. Even turns stream
+    from one directory and checkpoint, odd turns from another, into one
+    store: the second stream's batch 0 must merge, not pass for a replay
+    of the first stream's batch 0. Re-running the second stream's batch
+    0 after its commit is lost (a crash between merge and commit) stays
+    a no-op."""
+    store = TierStore(spark, str(tmp_path / "two"), VALUE_COLS)
+    for parity in (0, 1):
+        in_dir = str(tmp_path / f"in{parity}")
+        channels.filter(F.col("turn_idx") % 2 == parity).write.parquet(in_dir)
+        stream_into_store(
+            spark, in_dir, store, schema=CHANNEL_SCHEMA,
+            checkpoint_dir=str(tmp_path / f"ckpt{parity}"),
+        ).awaitTermination(300)
+
+    ref = TierStore(spark, str(tmp_path / "ref"), VALUE_COLS)
+    ref.materialize(channels)
+    days = ref._raw_days(channels)
+    want = _stored_partials(ref, days)
+    assert _stored_partials(store, days) == want
+
+    for name in ("0", ".0.crc"):  # the commit and its checksum file
+        os.remove(str(tmp_path / "ckpt1" / "commits" / name))
+    stream_into_store(
+        spark, str(tmp_path / "in1"), store, schema=CHANNEL_SCHEMA,
+        checkpoint_dir=str(tmp_path / "ckpt1"),
+    ).awaitTermination(300)
+    assert os.path.isfile(str(tmp_path / "ckpt1" / "commits" / "0"))  # batch 0 ran again
+    assert _stored_partials(store, days) == want
+
+
 def _count_sums(store, tier):
     """(count, sum) per bucket — the stats that DETECT double-counting
     (means are invariant when identical rows merge twice)."""

@@ -5,29 +5,64 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from timeseriesflattener_spark.streaming.stateful import start_profile_stream
+from timeseriesflattener_spark.streaming import start_stream
+from timeseriesflattener_spark.streaming.stateful import (
+    append_with_batch_id,
+    running_cusum,
+    running_funnel,
+    running_locf,
+    running_profiles,
+)
 
 SCHEMA = "conv_id string, ts timestamp, v double"
+T0 = dt.datetime(2024, 1, 1)
+PROFILE_FILES = [
+    [("a", T0 + dt.timedelta(minutes=i), float(i)) for i in range(5)] + [("b", T0, 10.0)],
+    [("a", T0 + dt.timedelta(hours=1, minutes=i), float(100 + i)) for i in range(3)],
+    [("c", T0, -1.0), ("b", T0 + dt.timedelta(days=1), 20.0)],
+]
+FUNNEL_SCHEMA = "entity string, ts timestamp, event_type string"
+FUNNEL_FILES = [
+    [("a", T0, "view"), ("b", T0 + dt.timedelta(minutes=1), "click")],
+    [
+        ("a", T0 + dt.timedelta(hours=1), "click"),
+        ("a", T0 + dt.timedelta(hours=2), "purchase"),
+        ("b", T0 + dt.timedelta(hours=1), "view"),
+    ],
+]
+CUSUM_SCHEMA = "entity string, ts timestamp, value double"
+CUSUM_FILES = [
+    [("a", T0, 10.0), ("a", T0 + dt.timedelta(minutes=1), 1.0)],
+    [
+        ("a", T0 + dt.timedelta(minutes=2), 8.0),
+        ("a", T0 + dt.timedelta(minutes=3), 9.0),
+        ("b", T0 + dt.timedelta(minutes=3), 2.0),
+    ],
+]
+LOCF_SCHEMA = "entity string, ts timestamp, cents long"
+LOCF_FILES = [
+    [
+        ("a", T0, 10),
+        ("a", T0 + dt.timedelta(hours=2), 11),  # same day: last wins
+        ("b", T0, 7),
+    ],
+    [("a", T0 + dt.timedelta(days=3), 30)],
+]
 
 
 def test_stateful_profiles_equal_batch(spark, tmp_path):
-    t0 = dt.datetime(2024, 1, 1)
-    files = [
-        [("a", t0 + dt.timedelta(minutes=i), float(i)) for i in range(5)]
-        + [("b", t0, 10.0)],
-        [("a", t0 + dt.timedelta(hours=1, minutes=i), float(100 + i)) for i in range(3)],
-        [("c", t0, -1.0), ("b", t0 + dt.timedelta(days=1), 20.0)],
-    ]
     in_dir = str(tmp_path / "in")
-    for rows in files:
+    for rows in PROFILE_FILES:
         spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode("append").parquet(in_dir)
 
     out_dir = str(tmp_path / "out")
-    q = start_profile_stream(
-        spark, in_dir, SCHEMA, out_dir, str(tmp_path / "ckpt"), max_files_per_trigger=1
+    q = start_stream(
+        spark, in_dir, SCHEMA, str(tmp_path / "ckpt"), running_profiles,
+        append_with_batch_id(out_dir), max_files_per_trigger=1,
     )
     q.awaitTermination(300)
 
@@ -65,30 +100,20 @@ def test_stateful_funnel_state_crosses_batches(spark, tmp_path):
     operator on the concatenated input (the in-order ingest contract:
     files are time-split, appended oldest-first)."""
     from timeseriesflattener_spark.operators.events import funnel
-    from timeseriesflattener_spark.streaming.stateful import (
-        start_funnel_stream,
-    )
 
-    t0 = dt.datetime(2024, 1, 1)
-    schema = "entity string, ts timestamp, event_type string"
-    files = [
-        [("a", t0, "view"), ("b", t0 + dt.timedelta(minutes=1), "click")],
-        [
-            ("a", t0 + dt.timedelta(hours=1), "click"),
-            ("a", t0 + dt.timedelta(hours=2), "purchase"),
-            ("b", t0 + dt.timedelta(hours=1), "view"),
-        ],
-    ]
+    schema = FUNNEL_SCHEMA
     in_dir = str(tmp_path / "in")
-    for rows in files:
+    for rows in FUNNEL_FILES:
         spark.createDataFrame(rows, schema).coalesce(1).write.mode(
             "append"
         ).parquet(in_dir)
     out_dir = str(tmp_path / "out")
-    q = start_funnel_stream(
-        spark, in_dir, schema, out_dir, str(tmp_path / "ckpt"),
-        steps=["view", "click", "purchase"],
-        within=dt.timedelta(days=1),
+    q = start_stream(
+        spark, in_dir, schema, str(tmp_path / "ckpt"),
+        lambda s: running_funnel(
+            s, ["view", "click", "purchase"], within=dt.timedelta(days=1)
+        ),
+        append_with_batch_id(out_dir),
         max_files_per_trigger=1,
     )
     q.awaitTermination(300)
@@ -115,7 +140,7 @@ def test_stateful_funnel_state_crosses_batches(spark, tmp_path):
     }
     assert final == batch
     assert final["a"][0] == 3 and final["b"][0] == 1
-    assert final["a"][2] == t0 + dt.timedelta(hours=2)
+    assert final["a"][2] == T0 + dt.timedelta(hours=2)
 
 
 def test_stateful_cusum_state_crosses_batches(spark, tmp_path):
@@ -124,29 +149,18 @@ def test_stateful_cusum_state_crosses_batches(spark, tmp_path):
     the final 5 requires the clamp at batch-1's end to carry over.
     Matches the batch operator on the concatenated input exactly."""
     from timeseriesflattener_spark.operators.rolling import cusum
-    from timeseriesflattener_spark.streaming.stateful import (
-        start_cusum_stream,
-    )
 
-    t0 = dt.datetime(2024, 1, 1)
-    schema = "entity string, ts timestamp, value double"
-    files = [
-        [("a", t0, 10.0), ("a", t0 + dt.timedelta(minutes=1), 1.0)],
-        [
-            ("a", t0 + dt.timedelta(minutes=2), 8.0),
-            ("a", t0 + dt.timedelta(minutes=3), 9.0),
-            ("b", t0 + dt.timedelta(minutes=3), 2.0),
-        ],
-    ]
+    schema = CUSUM_SCHEMA
     in_dir = str(tmp_path / "in")
-    for rows in files:
+    for rows in CUSUM_FILES:
         spark.createDataFrame(rows, schema).coalesce(1).write.mode(
             "append"
         ).parquet(in_dir)
     out_dir = str(tmp_path / "out")
-    q = start_cusum_stream(
-        spark, in_dir, schema, out_dir, str(tmp_path / "ckpt"),
-        target=5, slack=1, threshold=4,
+    q = start_stream(
+        spark, in_dir, schema, str(tmp_path / "ckpt"),
+        lambda s: running_cusum(s, target=5, slack=1, threshold=4),
+        append_with_batch_id(out_dir),
         max_files_per_trigger=1,
     )
     q.awaitTermination(300)
@@ -187,9 +201,6 @@ def test_stateful_cusum_tie_break_by_order_col(spark, tmp_path):
     from 0 with target=5/slack=1, [-5 then +3] ends at 3 while
     [+3 then -5] ends at 0."""
     from timeseriesflattener_spark.operators.rolling import cusum
-    from timeseriesflattener_spark.streaming.stateful import (
-        start_cusum_stream,
-    )
 
     t0 = dt.datetime(2024, 1, 1)
     schema = "entity string, ts timestamp, event_id long, value double"
@@ -198,9 +209,12 @@ def test_stateful_cusum_tie_break_by_order_col(spark, tmp_path):
     in_dir = str(tmp_path / "in")
     spark.createDataFrame(rows, schema).coalesce(1).write.parquet(in_dir)
     out_dir = str(tmp_path / "out")
-    q = start_cusum_stream(
-        spark, in_dir, schema, out_dir, str(tmp_path / "ckpt"),
-        target=5, slack=1, threshold=100, order_col="event_id",
+    q = start_stream(
+        spark, in_dir, schema, str(tmp_path / "ckpt"),
+        lambda s: running_cusum(
+            s, target=5, slack=1, threshold=100, order_col="event_id"
+        ),
+        append_with_batch_id(out_dir),
     )
     q.awaitTermination(300)
     final = spark.read.parquet(out_dir).collect()[0]
@@ -218,28 +232,19 @@ def test_stateful_locf_carries_across_batches(spark, tmp_path):
     spans the batch boundary, so days 1-2 must be filled FROM STATE
     (carry 10) in batch 2. Multiple same-day events take the LAST by
     ts; single-observation entity 'b' emits exactly one unfilled row."""
-    from timeseriesflattener_spark.streaming.stateful import start_locf_stream
-
     day = 86_400_000_000
-    t0 = dt.datetime(2024, 1, 1)
-    schema = "entity string, ts timestamp, cents long"
-    files = [
-        [
-            ("a", t0, 10),
-            ("a", t0 + dt.timedelta(hours=2), 11),  # same day: last wins
-            ("b", t0, 7),
-        ],
-        [("a", t0 + dt.timedelta(days=3), 30)],
-    ]
+    schema = LOCF_SCHEMA
     in_dir = str(tmp_path / "in")
-    for rows in files:
+    for rows in LOCF_FILES:
         spark.createDataFrame(rows, schema).coalesce(1).write.mode(
             "append"
         ).parquet(in_dir)
     out_dir = str(tmp_path / "out")
-    q = start_locf_stream(
-        spark, in_dir, schema, out_dir, str(tmp_path / "ckpt"),
-        bucket_micros=day, max_files_per_trigger=1,
+    q = start_stream(
+        spark, in_dir, schema, str(tmp_path / "ckpt"),
+        lambda s: running_locf(s, bucket_micros=day),
+        append_with_batch_id(out_dir),
+        max_files_per_trigger=1,
     )
     q.awaitTermination(300)
     out = spark.read.parquet(out_dir)
@@ -254,3 +259,73 @@ def test_stateful_locf_carries_across_batches(spark, tmp_path):
     assert rows[("a", base + 3 * day)] == (30, False, 1)
     assert rows[("b", base)] == (7, False, 0)
     assert len(rows) == 5  # nothing re-emitted, no spurious buckets
+
+
+
+# twin -> (schema, input files in arrival order, transform, state key);
+# the files are the fixtures of the uninterrupted tests above
+RESTART_CASES = {
+    "profiles": (SCHEMA, PROFILE_FILES, running_profiles, ["conv_id"]),
+    "funnel": (
+        FUNNEL_SCHEMA,
+        FUNNEL_FILES,
+        lambda s: running_funnel(
+            s, ["view", "click", "purchase"], within=dt.timedelta(days=1)
+        ),
+        ["entity"],
+    ),
+    "cusum": (
+        CUSUM_SCHEMA,
+        CUSUM_FILES,
+        lambda s: running_cusum(s, target=5, slack=1, threshold=4),
+        ["entity"],
+    ),
+    "locf": (
+        LOCF_SCHEMA,
+        LOCF_FILES,
+        lambda s: running_locf(s, bucket_micros=86_400_000_000),
+        ["entity", "bucket_start_us"],
+    ),
+}
+
+
+@pytest.mark.parametrize("twin", sorted(RESTART_CASES))
+def test_restart_on_same_checkpoint_equals_uninterrupted_run(spark, tmp_path, twin):
+    """Stop after the first files, add the rest, restart on the same
+    checkpoint: the state carried in the checkpoint makes the current
+    (max-batch_id) row per key equal the uninterrupted run's. The tests
+    above tie the uninterrupted run to the batch twin."""
+    schema, files, transform, keys = RESTART_CASES[twin]
+
+    def append(in_dir, batches):
+        for rows in batches:
+            spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+                "append"
+            ).parquet(in_dir)
+
+    def run(name):
+        start_stream(
+            spark, str(tmp_path / f"{name}_in"), schema, str(tmp_path / f"{name}_ckpt"),
+            transform, append_with_batch_id(str(tmp_path / f"{name}_out")),
+            max_files_per_trigger=1,
+        ).awaitTermination(300)
+
+    def current(name):
+        out = spark.read.parquet(str(tmp_path / f"{name}_out"))
+        w = Window.partitionBy(*keys).orderBy(F.desc("batch_id"))
+        latest = out.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
+        return sorted((tuple(r) for r in latest.drop("rn").collect()), key=repr)
+
+    append(str(tmp_path / "whole_in"), files)
+    run("whole")
+    half = len(files) // 2
+    append(str(tmp_path / "split_in"), files[:half])
+    run("split")
+    append(str(tmp_path / "split_in"), files[half:])
+    run("split")
+    assert current("split") == current("whole")
+    # one batch per file, numbered on across the restart
+    split = spark.read.parquet(str(tmp_path / "split_out"))
+    assert {r[0] for r in split.select("batch_id").distinct().collect()} == set(
+        range(len(files))
+    )

@@ -9,7 +9,8 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from timeseriesflattener_spark.streaming.windowed import start_windowed_stream, windowed_partials
+from timeseriesflattener_spark.streaming import start_stream
+from timeseriesflattener_spark.streaming.windowed import windowed_partials
 
 SCHEMA = "conv_id string, ts timestamp, v double"
 
@@ -30,15 +31,13 @@ def test_watermarked_stream_finalises_closed_windows(spark, tmp_path):
         df.coalesce(1).write.mode("append").parquet(in_dir)
 
     out_dir = str(tmp_path / "out")
-    q = start_windowed_stream(
+    q = start_stream(
         spark,
         in_dir,
         SCHEMA,
-        out_dir,
         str(tmp_path / "ckpt"),
-        value_cols=["v"],
-        tier="1h",
-        watermark="30 minutes",
+        lambda s: windowed_partials(s, ["v"], "1h", watermark="30 minutes"),
+        out_dir,
         max_files_per_trigger=1,  # one file per micro-batch -> watermark advances between batches
     )
     q.awaitTermination(300)
@@ -82,7 +81,7 @@ def test_streaming_session_windows_finalise_and_match_batch(spark, tmp_path):
     value-exact vs the batch session_window_stats result, sessions only
     finalise once the watermark passes, and nothing emits twice."""
     from timeseriesflattener_spark.operators.sessions import session_window_stats
-    from timeseriesflattener_spark.streaming.windowed import start_session_stream
+    from timeseriesflattener_spark.streaming.windowed import session_partials
 
     t0 = dt.datetime(2024, 1, 1)
     # conv "a": two sessions split by a 2h silence; arrival over 3 files
@@ -97,14 +96,13 @@ def test_streaming_session_windows_finalise_and_match_batch(spark, tmp_path):
         spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode("append").parquet(in_dir)
 
     out_dir = str(tmp_path / "sess_out")
-    q = start_session_stream(
+    q = start_stream(
         spark,
         in_dir,
         SCHEMA,
-        out_dir,
         str(tmp_path / "sess_ckpt"),
-        gap="30 minutes",
-        watermark="30 minutes",
+        lambda s: session_partials(s, gap="30 minutes", watermark="30 minutes"),
+        out_dir,
         max_files_per_trigger=1,
     )
     q.awaitTermination(300)
@@ -155,19 +153,11 @@ def test_stream_drop_exact_duplicates_across_batches(spark, tmp_path):
         spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(in_dir)
 
     out_dir = str(tmp_path / "dd_out")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    q = (
-        stream_drop_exact_duplicates(stream, watermark="1 hour")
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", str(tmp_path / "dd_ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    q = start_stream(
+        spark, in_dir, schema, str(tmp_path / "dd_ckpt"),
+        lambda s: stream_drop_exact_duplicates(s, watermark="1 hour"),
+        out_dir,
+        max_files_per_trigger=1,
     )
     q.awaitTermination(300)
     kept = {r["doc_id"] for r in spark.read.parquet(out_dir).collect()}
@@ -207,22 +197,13 @@ def test_stream_dedup_against_static_ref(spark, tmp_path):
         _time.sleep(1.05)  # file source orders batches by mtime
 
     def run(out_name, **kwargs):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
         out_dir = str(tmp_path / out_name)
-        (
-            stream_dedup_against(stream, watermark="1 hour", **kwargs)
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", str(tmp_path / (out_name + "_ckpt")))
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination(300)
-        )
+        start_stream(
+            spark, in_dir, schema, str(tmp_path / (out_name + "_ckpt")),
+            lambda s: stream_dedup_against(s, watermark="1 hour", **kwargs),
+            out_dir,
+            max_files_per_trigger=1,
+        ).awaitTermination(300)
         return {r["doc_id"] for r in spark.read.parquet(out_dir).collect()}
 
     assert run("da_out", ref_df=ref) == {2, 5}
@@ -254,17 +235,16 @@ def test_full_stats_stream_feeds_finalize(spark, tmp_path):
         spark.createDataFrame(day, SCHEMA).coalesce(1).write.mode("append").parquet(in_dir)
 
     out_dir = str(tmp_path / "out")
-    q = start_windowed_stream(
+    q = start_stream(
         spark,
         in_dir,
         SCHEMA,
-        out_dir,
         str(tmp_path / "ckpt"),
-        value_cols=["v"],
-        tier="1h",
-        watermark="30 minutes",
+        lambda s: windowed_partials(
+            s, ["v"], "1h", watermark="30 minutes", full_stats=True
+        ),
+        out_dir,
         max_files_per_trigger=1,
-        full_stats=True,
     )
     q.awaitTermination(300)
 
@@ -484,21 +464,13 @@ def test_stream_clean_matches_batch(spark, tmp_path):
     time.sleep(1.05)  # distinct mtimes -> deterministic batch order
     clones.coalesce(1).write.mode("append").parquet(in_dir)
 
-    stream = (
-        spark.readStream.schema("doc_id long, text string, ts timestamp")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
     out_dir = str(tmp_path / "out")
-    (
-        stream_clean(stream, quality_kwargs=dict(min_tokens=25))
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    start_stream(
+        spark, in_dir, "doc_id long, text string, ts timestamp", str(tmp_path / "ckpt"),
+        lambda s: stream_clean(s, quality_kwargs=dict(min_tokens=25)),
+        out_dir,
+        max_files_per_trigger=1,
+    ).awaitTermination()
     survivors = spark.read.parquet(out_dir)
     # no clone survives (its fingerprint was seen in batch 1 — IF the
     # original passed quality; clones of failing docs also fail quality)
@@ -525,14 +497,14 @@ def test_stream_clean_matches_batch(spark, tmp_path):
 
 
 def test_stream_m4_matches_batch_across_micro_batches(spark, tmp_path):
-    """start_m4_stream with maxFilesPerTrigger=1 (one micro-batch per
+    """m4_partials with maxFilesPerTrigger=1 (one micro-batch per
     file): a bucket fed from BOTH batches must still equal the batch
     downsample_m4 exactly — struct min/max state merges across batches
     with no order sensitivity."""
     import pytest
 
     from timeseriesflattener_spark.operators.rolling import downsample_m4
-    from timeseriesflattener_spark.streaming.windowed import start_m4_stream
+    from timeseriesflattener_spark.streaming.windowed import m4_partials
 
     t0 = dt.datetime(2024, 1, 1)
     schema = "user_id long, ts timestamp, value double"
@@ -546,15 +518,15 @@ def test_stream_m4_matches_batch_across_micro_batches(spark, tmp_path):
     for rows in (f1, f2):
         spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(in_dir)
 
-    start_m4_stream(
+    start_stream(
         spark,
         in_dir,
         schema,
-        str(tmp_path / "m4out"),
         str(tmp_path / "m4ckpt"),
-        bucket=dt.timedelta(hours=1),
-        entity_col="user_id",
-        watermark="10 minutes",
+        lambda s: m4_partials(
+            s, dt.timedelta(hours=1), entity_col="user_id", watermark="10 minutes"
+        ),
+        str(tmp_path / "m4out"),
         max_files_per_trigger=1,
     ).awaitTermination()
 
@@ -586,7 +558,8 @@ def test_stream_m4_matches_batch_across_micro_batches(spark, tmp_path):
     assert float(h0["first_val"]) == 5.0 and float(h0["last_val"]) == 1.0
 
     with pytest.raises(ValueError, match="whole-second"):
-        start_m4_stream(
-            spark, in_dir, schema, str(tmp_path / "x"), str(tmp_path / "y"),
-            bucket=dt.timedelta(microseconds=500),
+        start_stream(
+            spark, in_dir, schema, str(tmp_path / "y"),
+            lambda s: m4_partials(s, dt.timedelta(microseconds=500)),
+            str(tmp_path / "x"),
         )

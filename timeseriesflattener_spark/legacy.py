@@ -471,7 +471,12 @@ class TimeseriesFlattener:
 
     # ------------------------------------------------ cache plumbing
 
-    def _cache_key(self, spec: ValueSpecification, pred_rows: int) -> str:
+    def _cache_key(
+        self, spec: ValueSpecification, pred_rows: int, input_rows: dict[int, int]
+    ) -> str:
+        """The spec's cache fingerprint. ``input_rows`` memoises the row
+        count of each input frame by ``id``, so specs sharing one frame
+        count it once."""
         desc: dict = {
             "type": type(spec).__name__,
             "prefix": spec.column_prefix,
@@ -486,13 +491,14 @@ class TimeseriesFlattener:
                 (lp.first_micros, lp.last_micros) for lp in spec.normalised_lookperiod
             ]
             desc["aggregators"] = [a.name for a in spec.aggregators]
-            input_rows = spec.value_frame.df.count()
-        elif isinstance(spec, StaticSpec):
-            input_rows = spec.value_frame.df.count()
-        else:  # TimeDeltaSpec
+        if isinstance(spec, TimeDeltaSpec):
             desc["time_format"] = spec.time_format
-            input_rows = spec.init_frame.df.count()
-        return FeatureCache.fingerprint(desc, input_rows)
+            frame = spec.init_frame.df
+        else:
+            frame = spec.value_frame.df
+        if id(frame) not in input_rows:
+            input_rows[id(frame)] = frame.count()
+        return FeatureCache.fingerprint(desc, input_rows[id(frame)])
 
     # ------------------------------------------------ compute
 
@@ -625,18 +631,24 @@ class TimeseriesFlattener:
                 self._specs
             ).df
         pred_rows = pred.df.count()
-        keys = [self._cache_key(spec, pred_rows) for spec in self._specs]
+        input_rows: dict[int, int] = {}
+        keys = [self._cache_key(spec, pred_rows, input_rows) for spec in self._specs]
         frames = [self.cache.get(key) for key in keys]
         misses = [i for i, f in enumerate(frames) if f is None]
         if misses:
+            # persisted: the first put runs the fused flatten, the others
+            # read its columns from the cache instead of re-running it
             fresh = Flattener(predictiontime_frame=pred).aggregate_timeseries(
                 [self._specs[i] for i in misses]
-            ).df
-            for i in misses:
-                # backtick-quoted: names may contain dots (fallback_0.0)
-                cols = [F.col(f"`{c}`") for c in (uuid, *_spec_feature_names(self._specs[i]))]
-                # join the entry read back: the caller's action recomputes nothing
-                frames[i] = self.cache.put(keys[i], fresh.select(*cols))
+            ).df.persist()
+            try:
+                for i in misses:
+                    # backtick-quoted: names may contain dots (fallback_0.0)
+                    cols = [F.col(f"`{c}`") for c in (uuid, *_spec_feature_names(self._specs[i]))]
+                    # join the entry read back: the caller's action recomputes nothing
+                    frames[i] = self.cache.put(keys[i], fresh.select(*cols))
+            finally:
+                fresh.unpersist()
         df = pred.df
         for cached in frames:
             df = df.join(cached, uuid, "left")

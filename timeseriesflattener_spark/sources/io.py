@@ -14,6 +14,8 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import shutil
+import uuid
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -110,8 +112,19 @@ class FeatureCache:
         return None
 
     def put(self, key: str, df: DataFrame) -> DataFrame:
+        """Write ``df`` as the entry for ``key`` and return it read back.
+        The write goes to a sibling staging directory that is swapped in
+        with ``os.replace``, so a failed or interrupted write never
+        leaves a directory that ``get`` would take for a hit."""
         path = self._path(key)
-        df.write.mode("overwrite").parquet(path)
+        staged = f"{path}.staging-{uuid.uuid4().hex}"
+        try:
+            df.write.parquet(staged)
+            if os.path.isdir(path):
+                shutil.rmtree(path)
+            os.replace(staged, path)
+        finally:
+            shutil.rmtree(staged, ignore_errors=True)
         return self.spark.read.parquet(path)
 
 

@@ -27,11 +27,12 @@ Two entry points:
   a publish and the streaming checkpoint commit. The base combine step is
   not naturally idempotent (replaying it would double-count sums), so
   ``merge_batch`` ledgers every publish under ``job_id =
-  "stream-{batch_id}"`` and skips (tier, day) units already ledgered
-  for that batch_id — replays become no-ops, giving effectively-once
-  results. Late data within a day merges naturally (combine is
-  order-independent); a watermark is unnecessary because state lives in
-  the store, not in streaming memory.
+  "stream-{key}-{batch_id}"`` (``key`` from the checkpoint directory)
+  and skips (tier, day) units already ledgered for that job — replays
+  become no-ops, giving effectively-once results. Late data within a
+  day merges naturally (combine is order-independent); a watermark is
+  unnecessary because state lives in the store, not in streaming
+  memory.
 """
 
 from __future__ import annotations
@@ -43,6 +44,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import start_stream
 from ..plans import rollup as R
 from ..plans.tiers import TierStore, _day_dir, _visible
 
@@ -160,22 +162,21 @@ def stream_into_store(
     """Structured Streaming: watch ``input_path`` for new parquet files
     of raw turns and merge each micro-batch into the tier store.
     ``max_files_per_trigger`` bounds micro-batch size (availableNow
-    otherwise drains everything already present in ONE batch)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
+    otherwise drains everything already present in ONE batch).
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        merge_batch(store, batch_df, batch_id=batch_id)
+    Batch ids restart at 0 for every checkpoint, so the merge's replay
+    key is the batch id under a key of ``checkpoint_dir``: a replay on
+    the same checkpoint finds its units done, while a second stream (or
+    a fresh checkpoint) into the same store is merged, not skipped."""
+    stream_key = _batch_token([os.path.abspath(checkpoint_dir)])
 
-    writer = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
+    def _merge(batch_df: DataFrame, batch_id: int) -> None:
+        merge_batch(store, batch_df, batch_id=f"{stream_key}-{batch_id}")
+
+    return start_stream(
+        spark, input_path, schema, checkpoint_dir, transform=lambda s: s, sink=_merge,
+        max_files_per_trigger=max_files_per_trigger, available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ------------------------------------------------- snapshot-diff ingest

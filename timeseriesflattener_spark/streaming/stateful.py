@@ -12,16 +12,20 @@ the per-GROUP state bookkeeping.
 
 Emission is ``update`` mode: every micro-batch emits the refreshed
 profile of each conversation it touched; the LATEST row per
-conversation is the current profile. Use foreachBatch or an
-update-capable sink downstream.
+conversation is the current profile. The same holds for the funnel,
+CUSUM and LOCF twins below. Run one with ``streaming.start_stream(...,
+transform=lambda s: running_funnel(s, steps), sink=append_with_batch_id(
+out_path))``: each update batch lands in ``out_path`` stamped with its
+``batch_id``, and the max-``batch_id`` row per key is the current state.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Tuple
+from typing import Any, Callable, Iterator, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 PROFILE_SCHEMA = (
@@ -74,24 +78,17 @@ def running_profiles(stream_df: DataFrame) -> DataFrame:
     )
 
 
-def start_profile_stream(
-    spark,
-    input_path: str,
-    schema: str,
-    out_path: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-):
-    """readStream -> stateful profiles -> foreachBatch parquet appends
-    (each update batch lands with its batch_id; the max-batch_id row per
-    conversation is the current profile)."""
-    return _start_update_stream(
-        spark, input_path, schema, running_profiles,
-        out_path, checkpoint_dir,
-        max_files_per_trigger=max_files_per_trigger,
-        available_now=available_now,
-    )
+def append_with_batch_id(out_path: str) -> Callable[[DataFrame, int], None]:
+    """foreachBatch sink for the update-mode twins: append each
+    micro-batch to the parquet directory ``out_path`` with a
+    ``batch_id`` column. Consumers keep the max-``batch_id`` row per
+    key; a batch replayed after a crash appends the same rows under the
+    same ``batch_id``, which that recipe absorbs."""
+
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(out_path)
+
+    return _sink
 
 
 def _funnel_schemas(steps: list[str], entity_col: str) -> tuple[str, str]:
@@ -201,70 +198,6 @@ def running_funnel(
     )
 
 
-def start_funnel_stream(
-    spark,
-    input_path: str,
-    schema: str,
-    out_path: str,
-    checkpoint_dir: str,
-    steps: list[str],
-    within=None,
-    entity_col: str = "entity",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-):
-    """readStream -> stateful funnel -> foreachBatch parquet appends
-    (max-batch_id row per entity is the current progress)."""
-    return _start_update_stream(
-        spark, input_path, schema,
-        lambda s: running_funnel(
-            s, steps, within=within, entity_col=entity_col,
-            ts_col=ts_col, type_col=type_col,
-        ),
-        out_path, checkpoint_dir,
-        max_files_per_trigger=max_files_per_trigger,
-        available_now=available_now,
-    )
-
-
-def _start_update_stream(
-    spark,
-    input_path: str,
-    schema: str,
-    transform,
-    out_path: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-):
-    """Shared scaffolding for every update-mode stateful stream here:
-    readStream -> ``transform(stream_df)`` -> foreachBatch parquet
-    appends stamped with batch_id (the max-batch_id row per key is the
-    current state)."""
-    from pyspark.sql import functions as F
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    out = transform(reader.parquet(input_path))
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(out_path)
-
-    writer = (
-        out.writeStream.outputMode("update")
-        .foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def running_cusum(
     stream_df: DataFrame,
     target: float,
@@ -343,35 +276,6 @@ def running_cusum(
         stateStructType=state_schema,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def start_cusum_stream(
-    spark,
-    input_path: str,
-    schema: str,
-    out_path: str,
-    checkpoint_dir: str,
-    target: float,
-    slack: float,
-    threshold: float,
-    entity_col: str = "entity",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    order_col: str | None = None,
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-):
-    """readStream -> stateful CUSUM -> foreachBatch parquet appends."""
-    return _start_update_stream(
-        spark, input_path, schema,
-        lambda s: running_cusum(
-            s, target, slack, threshold, entity_col=entity_col,
-            ts_col=ts_col, value_col=value_col, order_col=order_col,
-        ),
-        out_path, checkpoint_dir,
-        max_files_per_trigger=max_files_per_trigger,
-        available_now=available_now,
     )
 
 
@@ -461,34 +365,4 @@ def running_locf(
         stateStructType=state_schema,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def start_locf_stream(
-    spark,
-    input_path: str,
-    schema: str,
-    out_path: str,
-    checkpoint_dir: str,
-    bucket_micros: int,
-    entity_col: str = "entity",
-    ts_col: str = "ts",
-    value_col: str = "cents",
-    order_col: str | None = None,
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-):
-    """readStream -> stateful LOCF gap-fill -> foreachBatch parquet
-    appends (max-batch_id row per (entity, bucket) is current)."""
-    return _start_update_stream(
-        spark,
-        input_path,
-        schema,
-        lambda s: running_locf(
-            s, bucket_micros, entity_col, ts_col, value_col, order_col
-        ),
-        out_path,
-        checkpoint_dir,
-        max_files_per_trigger,
-        available_now,
     )

@@ -12,6 +12,11 @@ foreachBatch merge path (``incremental.py``):
   is bounded by the watermark delay. Best for serving freshness with a
   bounded lateness contract; data later than the watermark is DROPPED
   (by design — that is the contract).
+
+Run one with ``streaming.start_stream(..., transform=lambda s:
+windowed_partials(s, ...), sink=out_path)``: the path sink is
+append-mode parquet, so each watermark-finalised window lands in it
+exactly once and can be served or rolled up without revision handling.
 """
 
 from __future__ import annotations
@@ -110,76 +115,6 @@ def session_partials(
         )
         .select(entity_col, "session_start", "session_end", "duration_micros", "n_events")
     )
-
-
-def start_session_stream(
-    spark,
-    input_path: str,
-    schema: str,
-    out_path: str,
-    checkpoint_dir: str,
-    gap: str = "30 minutes",
-    entity_col: str = "conv_id",
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-):
-    """readStream(parquet dir) -> watermarked session windows ->
-    append-mode parquet sink of finalised sessions."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
-    out = session_partials(stream, gap, entity_col, ts_col, watermark)
-    writer = (
-        out.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def start_windowed_stream(
-    spark,
-    input_path: str,
-    schema: str,
-    out_path: str,
-    checkpoint_dir: str,
-    value_cols: list[str],
-    tier: str = "1m",
-    entity_col: str = "conv_id",
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-    full_stats: bool = False,
-):
-    """readStream(parquet dir) -> watermarked windowed partials ->
-    append-mode parquet sink. Append + watermark = each bucket lands in
-    the sink exactly once, finalised; the sink is safe to serve/roll up
-    without revision handling. ``full_stats=True`` writes the full
-    rollup partial-state schema (finalize/rollup-ready; see
-    ``windowed_partials``)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
-    out = windowed_partials(
-        stream, value_cols, tier, entity_col, ts_col, watermark, full_stats
-    )
-    writer = (
-        out.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_clean(
@@ -318,36 +253,3 @@ def m4_partials(
         .withColumn("bucket_start", F.col("__w.start"))
     )
     return m4_finalize(grouped)
-
-
-def start_m4_stream(
-    spark,
-    input_path: str,
-    schema: str,
-    out_path: str,
-    checkpoint_dir: str,
-    bucket,
-    entity_col: str = "conv_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    watermark: str = "1 hour",
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-):
-    """readStream(parquet dir) -> watermarked M4 partials -> append-mode
-    parquet sink; each bucket finalises exactly once (see
-    ``m4_partials``)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
-    out = m4_partials(stream, bucket, entity_col, ts_col, value_col, watermark)
-    writer = (
-        out.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
