@@ -28,9 +28,13 @@ min/max/earliest/latest are exact doubles and stay unrounded.
 
 from __future__ import annotations
 
+import atexit
 import datetime as dt
+import functools
 import os
+import shutil
 import sys
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -61,6 +65,21 @@ from timeseriesflattener_spark.plans.gapfill import fill_gaps  # noqa: E402
 
 PRED_DATES = ["2024-01-15 00:00:00", "2024-02-01 00:00:00"]
 D7, D30 = dt.timedelta(days=7), dt.timedelta(days=30)
+
+
+@functools.cache
+def _scratch_root() -> str:
+    root = tempfile.mkdtemp(prefix="tsf-entry-")
+    atexit.register(shutil.rmtree, root, True)
+    return root
+
+
+def _scratch_dir(prefix: str) -> str:
+    """A fresh directory for one query's stream input, checkpoint and
+    output. Every query's directory lives under one root per process,
+    removed at interpreter exit: the returned frames read these files
+    lazily, so nothing can be removed before the process is done."""
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root())
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -401,12 +420,10 @@ def q_stream_rollup_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     actually exercised), then the stored 1h partials are finalized.
     Oracle: the batch rollup SQL over the same slice — stream output ==
     batch semantics, exactly."""
-    import tempfile
-
     from timeseriesflattener_spark.plans.tiers import TierStore
     from timeseriesflattener_spark.streaming.incremental import stream_into_store
 
-    work = tempfile.mkdtemp(prefix="tsf-stream-tiers-")
+    work = _scratch_dir("tsf-stream-tiers-")
     src = _events_as_conv(spark, sf_dir, cents=True).filter(
         F.col("ts") < F.lit(_STREAM_CUTOFF).cast("timestamp")
     )
@@ -436,12 +453,10 @@ def q_stream_windowed_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow); the sentinel's own window stays unflushed and is
     filtered out. Values are exact cent longs — no float drift across
     the state-store merge order."""
-    import tempfile
-
     from timeseriesflattener_spark.streaming import start_stream
     from timeseriesflattener_spark.streaming.windowed import windowed_partials
 
-    work = tempfile.mkdtemp(prefix="tsf-stream-win-")
+    work = _scratch_dir("tsf-stream-win-")
     src = _events_as_conv(spark, sf_dir, cents=True)
     sentinel = spark.createDataFrame(
         [("__sentinel",)], "conv_id string"
@@ -486,12 +501,10 @@ def q_stream_windowed_full_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full aggregator set (mean/var/slope/earliest/latest/...) — and
     must equal the BATCH rollup oracle on the same events, exactly
     (same cents-exact arithmetic as rollup_1h)."""
-    import tempfile
-
     from timeseriesflattener_spark.streaming import start_stream
     from timeseriesflattener_spark.streaming.windowed import windowed_partials
 
-    work = tempfile.mkdtemp(prefix="tsf-stream-full-")
+    work = _scratch_dir("tsf-stream-full-")
     src = _events_as_conv(spark, sf_dir, cents=True)
     sentinel = spark.createDataFrame([("__sentinel",)], "conv_id string").select(
         "conv_id",
@@ -529,12 +542,10 @@ def q_stream_sessionize_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     + second-availableNow-pass flush as stream_windowed_1h. Oracle: the
     batch lag+cumsum session SQL reshaped to per-session stats — stream
     output == batch sessionization, exactly."""
-    import tempfile
-
     from timeseriesflattener_spark.streaming import start_stream
     from timeseriesflattener_spark.streaming.windowed import session_partials
 
-    work = tempfile.mkdtemp(prefix="tsf-stream-sess-")
+    work = _scratch_dir("tsf-stream-sess-")
     src = _events_as_conv(spark, sf_dir).select("conv_id", "ts", "turn_idx")
     sentinel = spark.createDataFrame([("__sentinel",)], "conv_id string").select(
         "conv_id",
@@ -578,13 +589,12 @@ def q_stream_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming ``quality_pass_expr`` decides at least one doc under the
     gate (VERDICT r4 #7): a broken rule lets its probe survive and the
     oracle fingerprint set flips."""
-    import tempfile
     import time as _time
 
     from timeseriesflattener_spark.streaming import start_stream
     from timeseriesflattener_spark.streaming.windowed import stream_clean
 
-    work = tempfile.mkdtemp(prefix="tsf-stream-clean-")
+    work = _scratch_dir("tsf-stream-clean-")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     injected = spark.createDataFrame(
         _STREAM_QUALITY_INJECT, "doc_id long, text string"
@@ -639,10 +649,9 @@ def q_stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch 2. Output per fingerprint: n_survivors (1 proves exactly-once
     emission) and clone_survived (FALSE proves cross-batch state); the
     oracle emits the constants from the batch corpus."""
-    import tempfile
     import time as _time
 
-    work = tempfile.mkdtemp(prefix="tsf-stream-dedup-")
+    work = _scratch_dir("tsf-stream-dedup-")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     base = docs.withColumn("ts", F.lit("2024-01-01 00:00:00").cast("timestamp"))
     clones = docs.filter(F.col("doc_id") < 50).select(
@@ -693,13 +702,12 @@ def q_stream_dedup_against(spark: SparkSession, sf_dir: str) -> DataFrame:
     clone_survived; the oracle emits the constants from the batch
     corpus (robust to natural dups: distinct odd fingerprints not in
     the even set)."""
-    import tempfile
     import time as _time
 
     from timeseriesflattener_spark.streaming import start_stream
     from timeseriesflattener_spark.streaming.windowed import stream_dedup_against
 
-    work = tempfile.mkdtemp(prefix="tsf-stream-da-")
+    work = _scratch_dir("tsf-stream-da-")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     ref = docs.filter(F.col("doc_id") % 2 == 0)
     t1, t2 = "2024-01-01 00:00:00", "2024-01-01 00:10:00"
@@ -765,15 +773,13 @@ def q_stream_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch it appears in; the max-batch_id row per conv is the final
     one). Values in the exact cents domain; oracle = the batch groupBy
     ground truth in DuckDB."""
-    import tempfile
-
     from timeseriesflattener_spark.streaming import start_stream
     from timeseriesflattener_spark.streaming.stateful import (
         append_with_batch_id,
         running_profiles,
     )
 
-    work = tempfile.mkdtemp(prefix="tsf-stream-prof-")
+    work = _scratch_dir("tsf-stream-prof-")
     src = _events_as_conv(spark, sf_dir, cents=True).select(
         "conv_id", "ts", F.col("value").alias("v")
     )
@@ -1527,8 +1533,6 @@ def q_legacy_cache_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     run 1 (exceptAll both ways). ``cache_hit_ok`` carries that proof;
     the oracle reproduces the feature values from raw events and emits
     TRUE."""
-    import tempfile
-
     from timeseriesflattener_spark.legacy import (
         NamedDataframe,
         PredictorGroupSpec,
@@ -1536,7 +1540,7 @@ def q_legacy_cache_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from timeseriesflattener_spark.sources.io import FeatureCache
 
-    cache_dir = tempfile.mkdtemp(prefix="tsf-feature-cache-")
+    cache_dir = _scratch_dir("tsf-feature-cache-")
     events = _t(spark, sf_dir, "events")
     pred_df = events.select(F.col("user_id").alias("entity_id")).distinct().select(
         "entity_id",
@@ -2024,12 +2028,10 @@ def q_stream_m4(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact ops — no float summation, so the sink is bit-identical to the
     batch operator), append-mode parquet sink, sentinel-flushed. Shares
     downsample_m4's oracle verbatim."""
-    import tempfile
-
     from timeseriesflattener_spark.streaming import start_stream
     from timeseriesflattener_spark.streaming.windowed import m4_partials
 
-    work = tempfile.mkdtemp(prefix="tsf-stream-m4-")
+    work = _scratch_dir("tsf-stream-m4-")
     src = _events_cents(spark, sf_dir).select(
         "user_id", F.col("ts").cast("timestamp").alias("ts"), "cents"
     )
@@ -2254,8 +2256,6 @@ def q_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     genuinely carries over. Final = max-batch_id row per entity,
     reduced by the SAME counts_from_detail the batch operator uses;
     shares funnel_steps' sequential-min CTE oracle verbatim."""
-    import tempfile
-
     from timeseriesflattener_spark.operators.events import counts_from_detail
     from timeseriesflattener_spark.streaming import start_stream
     from timeseriesflattener_spark.streaming.stateful import (
@@ -2264,7 +2264,7 @@ def q_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     steps = ["view", "click", "purchase"]
-    work = tempfile.mkdtemp(prefix="tsf-stream-funnel-")
+    work = _scratch_dir("tsf-stream-funnel-")
     src = _t(spark, sf_dir, "events").select(
         F.col("user_id").cast("string").alias("entity"), "ts", "event_type"
     )
@@ -2353,15 +2353,13 @@ def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     time-split files (in-order ingest contract); the final max-batch_id
     row per entity must equal the batch identity's LAST row per entity
     — exact, because cents stay integral in float64."""
-    import tempfile
-
     from timeseriesflattener_spark.streaming import start_stream
     from timeseriesflattener_spark.streaming.stateful import (
         append_with_batch_id,
         running_cusum,
     )
 
-    work = tempfile.mkdtemp(prefix="tsf-stream-cusum-")
+    work = _scratch_dir("tsf-stream-cusum-")
     src = _t(spark, sf_dir, "events").select(
         F.col("user_id").cast("string").alias("entity"), "ts", "event_id",
         F.round(F.col("value") * 100, 0).cast("long").alias("cents"),
@@ -2681,15 +2679,13 @@ def q_stream_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     identity — the oracle replays it as generate_series + last_value
     IGNORE NULLS over the per-day LAST observation (exact integer
     cents; `filled` == the batch twin's `is_gap`)."""
-    import tempfile
-
     from timeseriesflattener_spark.streaming import start_stream
     from timeseriesflattener_spark.streaming.stateful import (
         append_with_batch_id,
         running_locf,
     )
 
-    work = tempfile.mkdtemp(prefix="tsf-stream-locf-")
+    work = _scratch_dir("tsf-stream-locf-")
     src = _t(spark, sf_dir, "events").select(
         F.col("user_id").cast("string").alias("entity"), "ts", "event_id",
         F.round(F.col("value") * 100, 0).cast("long").alias("cents"),

@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 from timeseriesflattener_spark.operators import dedup as D
 from timeseriesflattener_spark.operators import similarity as S
 from timeseriesflattener_spark.operators import text as T
+from timeseriesflattener_spark import session
+from timeseriesflattener_spark.session import frame_mark, release_frames
 
 from .labelprop_reference import labelprop_clusters
 
@@ -268,14 +270,13 @@ def test_cap_hot_shingles_no_window_skew(spark, docs):
 
 
 def test_release_shingle_caches(spark, docs):
-    D.release_shingle_caches()  # drain any prior state
+    release_frames()  # drain any prior state
     pairs = D.minhash_dedup_pairs(docs.limit(30), threshold=0.9)
     pairs.count()
-    assert len(D._SHINGLE_CACHES) == 1
-    cached = D._SHINGLE_CACHES[0]
+    assert frame_mark() == 1
+    (cached,) = session._thread_frames()
     assert cached.storageLevel.useMemory
-    released = D.release_shingle_caches()
-    assert released == 1 and not D._SHINGLE_CACHES
+    assert release_frames() == 1 and frame_mark() == 0
     assert not cached.storageLevel.useMemory
 
 
@@ -1529,15 +1530,12 @@ def test_pack_documents_string_ids(spark):
 
 
 def test_release_pipeline_caches(spark, docs):
-    from timeseriesflattener_spark.operators.pipeline import (
-        curriculum_schedule,
-        release_pipeline_caches,
-    )
+    from timeseriesflattener_spark.operators.pipeline import curriculum_schedule
 
-    release_pipeline_caches()  # start clean
+    release_frames()  # start clean
     curriculum_schedule(docs).count()
-    assert release_pipeline_caches() >= 1
-    assert release_pipeline_caches() == 0
+    assert release_frames() >= 1
+    assert release_frames() == 0
 
 
 def test_bloom_filter_words_no_false_negatives(spark):
@@ -1613,7 +1611,6 @@ def test_kmeans_matches_python_lloyd(spark, embs):
     cluster carry) replayed in pure Python over the same vectors."""
     from timeseriesflattener_spark.operators.similarity import (
         kmeans_fit,
-        release_kmeans_caches,
         semantic_clusters,
     )
 
@@ -1652,14 +1649,11 @@ def test_kmeans_matches_python_lloyd(spark, embs):
         for r in semantic_clusters(sub, k=k, n_iter=n_iter, scale=scale).collect()
     }
     assert got == expect
-    release_kmeans_caches()
+    release_frames()
 
 
 def test_kmeans_partition_invariant(spark, embs):
-    from timeseriesflattener_spark.operators.similarity import (
-        release_kmeans_caches,
-        semantic_clusters,
-    )
+    from timeseriesflattener_spark.operators.similarity import semantic_clusters
 
     a = sorted(
         tuple(r) for r in semantic_clusters(embs, k=8, n_iter=2).collect()
@@ -1669,31 +1663,25 @@ def test_kmeans_partition_invariant(spark, embs):
         for r in semantic_clusters(embs.repartition(13), k=8, n_iter=2).collect()
     )
     assert a == b
-    release_kmeans_caches()
+    release_frames()
 
 
 def test_kmeans_assignment_plan_is_map_side(spark, embs):
     """The final assignment is pure projection over literal centroids —
     NO join, NO exchange (the scale contract: at 100 TB the assignment
     never shuffles vectors)."""
-    from timeseriesflattener_spark.operators.similarity import (
-        release_kmeans_caches,
-        semantic_clusters,
-    )
+    from timeseriesflattener_spark.operators.similarity import semantic_clusters
 
     out = semantic_clusters(embs, k=4, n_iter=1)
     plan = out._jdf.queryExecution().executedPlan().toString().split(
         "== Initial Plan =="
     )[0]
     assert "Join" not in plan and "Exchange" not in plan, plan
-    release_kmeans_caches()
+    release_frames()
 
 
 def test_semantic_dedup_reps_and_flags(spark, embs):
-    from timeseriesflattener_spark.operators.similarity import (
-        release_kmeans_caches,
-        semantic_dedup,
-    )
+    from timeseriesflattener_spark.operators.similarity import semantic_dedup
 
     rows = semantic_dedup(embs, k=8, n_iter=2, threshold_sq=10**9).collect()
     by_cluster = {}
@@ -1707,7 +1695,7 @@ def test_semantic_dedup_reps_and_flags(spark, embs):
                 assert m["rep_dist_sq"] == 0 and not m["is_dup"]
             else:
                 assert m["is_dup"] == (m["rep_dist_sq"] <= 10**9)
-    release_kmeans_caches()
+    release_frames()
 
 
 def test_kmeans_validation(spark, embs):
@@ -1724,7 +1712,6 @@ def test_kmeans_validation(spark, embs):
 def test_drop_semantic_duplicates_keeps_reps(spark, embs):
     from timeseriesflattener_spark.operators.similarity import (
         drop_semantic_duplicates,
-        release_kmeans_caches,
         semantic_dedup,
     )
 
@@ -1739,4 +1726,4 @@ def test_drop_semantic_duplicates_keeps_reps(spark, embs):
     assert kept.columns == embs.columns  # full schema preserved
     reps = {r["rep_id"] for r in flags}
     assert reps <= kept_ids  # representatives always survive
-    release_kmeans_caches()
+    release_frames()

@@ -26,7 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-from pyspark.storagelevel import StorageLevel
+
+from ..session import persist_frame
 
 
 def normalized_text(text: Column) -> Column:
@@ -41,30 +42,6 @@ def normalized_text(text: Column) -> Column:
     whitespace was \\n/\\t/\\r — SQL trim strips only spaces — so
     "\\nfoo" and "foo" failed to dedup together."""
     return F.trim(F.regexp_replace(F.lower(text), r"[ \t\r\n\f]+", " "))
-
-
-# Persisted shingle frames created by dedup calls. The functions here are
-# lazy (the consuming action runs in the caller), so they cannot unpersist
-# their own cache — without a release hook, repeated dedup calls in a
-# long-lived session accumulate cached blocks and squeeze executor storage
-# memory. Pipeline drivers call ``release_shingle_caches()`` after the
-# action that consumes a dedup result.
-_SHINGLE_CACHES: list[DataFrame] = []
-
-
-def release_shingle_caches() -> int:
-    """Unpersist every shingle frame cached by prior dedup calls in this
-    session; returns how many were released. Safe to call at any time —
-    an unpersisted plan silently recomputes."""
-    released = 0
-    while _SHINGLE_CACHES:
-        frame = _SHINGLE_CACHES.pop()
-        try:
-            frame.unpersist()
-            released += 1
-        except Exception:
-            pass
-    return released
 
 
 # ----------------------------------------------------------- exact
@@ -219,8 +196,8 @@ def _hashed_exploded(
         .select("doc", F.explode(arr).alias("__h"))
     )
     if persist:
-        ex = ex.persist(StorageLevel.MEMORY_AND_DISK)
-        _SHINGLE_CACHES.append(ex)
+        # released by the caller's release_frames() after its action
+        ex = persist_frame(ex)
         # (r8 measured note: an eager ex.count() here — to stop AQE's
         # concurrent stage materialization racing the cache and
         # re-running the text scan per branch — was tried and REJECTED:
@@ -454,49 +431,21 @@ def contamination_pairs_bloom(
 # -------------------------------------------------------- minhash
 
 
-def minhash_signature_table(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    k: int = 3,
-) -> DataFrame:
+def _signatures_from_exploded(ex: DataFrame, num_hashes: int) -> DataFrame:
     """MinHash signatures as (doc, s0..s{n-1}) — per permutation i, min
     over shingles of xxhash64(shingle, i).
 
-    Shape matters: shingles are exploded ONCE and the 64 permutation
+    Shape matters: shingles are exploded ONCE and the permutation
     minima run as plain aggregate expressions in one codegen'd hash
     aggregation. (The obvious alternative — 64 ``array_min(transform())``
     higher-order expressions — re-evaluates the shingle construction per
     permutation in interpreted mode: measured >100x slower at 5k docs.)
     """
-    return _signatures_from_exploded(
-        _hashed_exploded(df, text_col, id_col, k, persist=False), num_hashes
-    )
-
-
-def _signatures_from_exploded(ex: DataFrame, num_hashes: int) -> DataFrame:
     # the shingle string was hashed once; permutations re-hash the 8-byte long
     aggs = [
         F.min(F.xxhash64("__h", F.lit(i))).alias(f"s{i}") for i in range(num_hashes)
     ]
     return ex.groupBy("doc").agg(*aggs)
-
-
-def minhash_lsh_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    bands: int = 16,
-    k: int = 3,
-) -> DataFrame:
-    """Candidate near-dup pairs: docs sharing >= 1 LSH band bucket.
-    rows/doc = ``bands`` (not all-pairs); the band bucket-join is the
-    only shuffle that matters and its key space is huge (band, hash of
-    row slice), so no hot keys. Returns (doc_a, doc_b, n_bands_shared)."""
-    sig = minhash_signature_table(df, text_col, id_col, num_hashes, k)
-    return _candidates_from_signatures(sig, num_hashes, bands)
 
 
 def _banded(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
@@ -724,7 +673,7 @@ def simhash_table(
     sum over shingles of (bit j of xxhash64(shingle) ? +1 : -1).
 
     Explode-once + 64 conditional-sum aggregates in one codegen'd hash
-    aggregation (same rationale as ``minhash_signature_table``), then a
+    aggregation (same rationale as ``_signatures_from_exploded``), then a
     single projection assembles the bits. Returns (doc, sim)."""
     ex = _hashed_exploded(df, text_col, id_col, k, persist=False)
     aggs = [
@@ -863,29 +812,17 @@ def star_connected_components(
     )
     prev = _star_edge_fingerprint(edges)
     converged = False
-    # Scale-adaptive round sizing (r8, guide §2.2/§6): each round runs
-    # ~6 shuffle stages over the CURRENT edge set, whose live size we
-    # get for free from the fingerprint. Sizing the round's shuffle
-    # partitions from that count (~2M 16-byte edge rows per partition,
-    # i.e. ~64 MB pre-shuffle) instead of the session-wide constant
-    # collapses the per-stage scheduling floor when the graph has
-    # contracted to thousands of edges, and GROWS the partition count
-    # past the session default on a genuinely huge graph. Restored in
-    # the finally block; fixpoint logic is unchanged.
-    spark = pairs.sparkSession
-    key = "spark.sql.shuffle.partitions"
-    orig = spark.conf.get(key)
-    try:
-        for _ in range(max_iterations):
-            spark.conf.set(key, str(max(1, min((prev[0] + 1) // 2_000_000 + 1, 200_000))))
-            edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
-            cur = _star_edge_fingerprint(edges)
-            if cur == prev:
-                converged = True
-                break
-            prev = cur
-    finally:
-        spark.conf.set(key, orig)
+    # Each round runs ~6 shuffle stages over the CURRENT edge set, which
+    # contracts geometrically; AQE coalescing sizes those stages from
+    # the bytes actually shuffled, so a contracted graph pays no
+    # per-partition scheduling floor.
+    for _ in range(max_iterations):
+        edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
+        cur = _star_edge_fingerprint(edges)
+        if cur == prev:
+            converged = True
+            break
+        prev = cur
     if not converged:
         # Exhausted the round budget (or, astronomically unlikely, the
         # xor fingerprint collided and we kept iterating past the true

@@ -24,9 +24,10 @@ exactly once (eager ``localCheckpoint`` of the 8-byte id frames), so
 neither the returned audit nor a later ``drop_unclean`` re-runs the
 quality scan / dedup windows — later stages recover text by semi-join
 of the raw corpus against the checkpointed ids (one cheap base re-scan
-instead of an operator recompute). The dedup shingle caches are
-released before returning (``release_shingle_caches``) — everything
-that needed them has been materialised by then.
+instead of an operator recompute). The frames the dedup stages persist
+are released before returning (``release_frames`` from the mark taken
+on entry, so frames the caller persisted earlier stay cached) —
+everything that needed them has been materialised by then.
 """
 
 from __future__ import annotations
@@ -37,13 +38,13 @@ import json
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import frame_mark, persist_frame, release_frames
 from .dedup import (
     drop_contaminated,
     drop_exact_duplicates,
     duplicate_clusters,
     minhash_dedup_pairs,
     ngram_jaccard_pairs,
-    release_shingle_caches,
 )
 from .text import quality_filter
 
@@ -165,6 +166,7 @@ def clean_corpus(
     itself is not fingerprinted — reuse a dir only for the same
     corpus.) The audit itself is identical either way."""
     spark = df.sparkSession
+    mark = frame_mark()
 
     if near_dup not in ("minhash", "jaccard"):
         raise ValueError(f"unknown near_dup strategy {near_dup!r}")
@@ -266,8 +268,8 @@ def clean_corpus(
         s4_ids = ids_of(make_s4, "contaminated")
     else:
         s4_ids = s3_ids
-    # every consumer of the shingle caches has materialised by now
-    release_shingle_caches()
+    # every consumer of the shingle frames has materialised by now
+    release_frames(since=mark)
 
     def flag(surv_ids: DataFrame, name: str) -> DataFrame:
         return surv_ids.select(F.col(id_col), F.lit(True).alias(name))
@@ -524,28 +526,6 @@ def pack_contexts(
     return packed.select(*cols)
 
 
-# Persisted narrow frames created by pipeline calls (same contract as
-# dedup._SHINGLE_CACHES: the functions are lazy, so they cannot unpersist
-# their own cache — drivers call release_pipeline_caches() after the
-# consuming action).
-_PIPELINE_CACHES: list[DataFrame] = []
-
-
-def release_pipeline_caches() -> int:
-    """Unpersist every frame cached by prior pipeline calls in this
-    session; returns how many were released. Safe any time — an
-    unpersisted plan silently recomputes."""
-    released = 0
-    while _PIPELINE_CACHES:
-        frame = _PIPELINE_CACHES.pop()
-        try:
-            frame.unpersist()
-            released += 1
-        except Exception:
-            pass
-    return released
-
-
 def curriculum_schedule(
     df: DataFrame,
     text_col: str = "text",
@@ -570,7 +550,6 @@ def curriculum_schedule(
     oracle states it exactly that way — at a max task size of
     corpus/(#bins * 256) instead of one machine holding a total sort."""
     from pyspark.sql import Window
-    from pyspark.storagelevel import StorageLevel
 
     from .text import quality_bins
 
@@ -578,11 +557,10 @@ def curriculum_schedule(
     # the plan below consumes it through THREE un-shared branches (rank
     # window, bucket totals, per-bin sizes) — persist the NARROW
     # (id, bin) frame so the text is scanned once, not three times
-    # (release via release_pipeline_caches)
-    base = df.select(
-        F.col(id_col), quality_bins(F.col(text_col), edges).alias("bin")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _PIPELINE_CACHES.append(base)
+    # (released by the caller's release_frames())
+    base = persist_frame(
+        df.select(F.col(id_col), quality_bins(F.col(text_col), edges).alias("bin"))
+    )
     key = F.concat(F.lit(salt), F.col(id_col).cast("string"))
     out = (
         base.withColumn("__h", F.md5(key))

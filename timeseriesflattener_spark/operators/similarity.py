@@ -28,6 +28,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import persist_frame
+
 
 def dot(a: Column, b: Column, dim: int | None = None) -> Column:
     """Dot product of two array columns.
@@ -150,18 +152,6 @@ def _dots_expr(vec: Column, mat_lit: Column) -> Column:
             lambda acc, v: acc + v,
         ),
     )
-
-
-def lsh_bucket_expr(vec: Column, planes: np.ndarray) -> Column:
-    """Sign-LSH bucket key for one table: packed bits of sign(v . h_j)."""
-    dots = _dots_expr(vec, _matrix_lit(planes))
-    key = F.lit(0).cast("long")
-    for j in range(len(planes)):
-        d = F.get(dots, j)
-        key = key.bitwiseOR(
-            F.when(d > 0, F.lit(1 << j).cast("long")).otherwise(F.lit(0).cast("long"))
-        )
-    return key
 
 
 def _bucketed(df: DataFrame, id_alias: str, vec_col: str, planes: np.ndarray) -> DataFrame:
@@ -363,19 +353,6 @@ def ivf_topk(
 
 # ------------------------------------------------ semantic clustering
 
-#: persisted int-embedding frames awaiting release (kmeans scans the
-#: input n_iter+2 times; same registry pattern as dedup._SHINGLE_CACHES)
-_KMEANS_CACHES: list[DataFrame] = []
-
-
-def release_kmeans_caches() -> None:
-    while _KMEANS_CACHES:
-        try:
-            _KMEANS_CACHES.pop().unpersist()
-        except Exception:
-            pass
-
-
 def int_embedding(vec: Column, scale: int = 10_000) -> Column:
     """Snap a float embedding onto an exact integer grid:
     ``floor(x * scale + 0.5)`` per component (round-half-up, engine-proof:
@@ -469,14 +446,13 @@ def kmeans_fit(
 
 def _int_frame(df: DataFrame, id_col: str, vec_col: str, scale: int) -> DataFrame:
     """(__id, __q) int-grid projection, persisted (scanned n_iter+2
-    times across fit + final assignment)."""
-    from pyspark import StorageLevel
-
-    q = df.select(
-        F.col(id_col).alias("__id"), int_embedding(F.col(vec_col), scale).alias("__q")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _KMEANS_CACHES.append(q)
-    return q
+    times across fit + final assignment; released by the caller's
+    ``release_frames()``)."""
+    return persist_frame(
+        df.select(
+            F.col(id_col).alias("__id"), int_embedding(F.col(vec_col), scale).alias("__q")
+        )
+    )
 
 
 def _fit_on(q: DataFrame, k: int, n_iter: int) -> list[list[int]]:
@@ -494,35 +470,26 @@ def _fit_on(q: DataFrame, k: int, n_iter: int) -> list[list[int]]:
     dim = len(init[0]["__q"])
     centroids = [list(r["__q"]) for r in init]
     # the update aggregate's post-combine shuffle carries at most
-    # k x map-partitions tiny rows — size its reduce side from k, not
-    # the session-wide constant (r8, same rationale as the star-CC
-    # rounds; restored in finally)
-    spark = q.sparkSession
-    conf_key = "spark.sql.shuffle.partitions"
-    orig = spark.conf.get(conf_key)
-    try:
-        spark.conf.set(conf_key, str(max(1, min(k, 200))))
-        for _ in range(n_iter):
-            a = _assign_struct(F.col("__q"), centroids)
-            sums = (
-                q.select(a["j"].alias("__c"), "__q")
-                .groupBy("__c")
-                .agg(
-                    F.count("*").alias("__n"),
-                    *[
-                        F.sum(F.element_at("__q", i + 1)).alias(f"__s{i}")
-                        for i in range(dim)
-                    ],
-                )
-                .collect()
+    # k x map-partitions tiny rows; AQE coalescing sizes its reduce side
+    for _ in range(n_iter):
+        a = _assign_struct(F.col("__q"), centroids)
+        sums = (
+            q.select(a["j"].alias("__c"), "__q")
+            .groupBy("__c")
+            .agg(
+                F.count("*").alias("__n"),
+                *[
+                    F.sum(F.element_at("__q", i + 1)).alias(f"__s{i}")
+                    for i in range(dim)
+                ],
             )
-            nxt = [list(c) for c in centroids]  # empty clusters carry over
-            for r in sums:
-                j, n = int(r["__c"]), int(r["__n"])
-                nxt[j] = [(2 * int(r[f"__s{i}"]) + n) // (2 * n) for i in range(dim)]
-            centroids = nxt
-    finally:
-        spark.conf.set(conf_key, orig)
+            .collect()
+        )
+        nxt = [list(c) for c in centroids]  # empty clusters carry over
+        for r in sums:
+            j, n = int(r["__c"]), int(r["__n"])
+            nxt[j] = [(2 * int(r[f"__s{i}"]) + n) // (2 * n) for i in range(dim)]
+        centroids = nxt
     return centroids
 
 
@@ -574,25 +541,17 @@ def semantic_dedup(
     assigned = q.select(
         F.col("__id").alias(id_col), "__q", a["j"].alias("cluster")
     )
-    spark = df.sparkSession
-    conf_key = "spark.sql.shuffle.partitions"
-    orig = spark.conf.get(conf_key)
-    try:
-        # k-group aggregate: size the reduce side from k (see _fit_on)
-        spark.conf.set(conf_key, str(max(1, min(k, 200))))
-        reps = {
-            int(r["cluster"]): (int(r["rep_id"]), list(r["__q"]))
-            for r in assigned.groupBy("cluster")
-            .agg(F.min_by(F.struct(id_col, "__q"), F.col(id_col)).alias("__rep"))
-            .select(
-                "cluster",
-                F.col("__rep")[id_col].alias("rep_id"),
-                F.col("__rep.__q").alias("__q"),
-            )
-            .collect()
-        }
-    finally:
-        spark.conf.set(conf_key, orig)
+    reps = {
+        int(r["cluster"]): (int(r["rep_id"]), list(r["__q"]))
+        for r in assigned.groupBy("cluster")
+        .agg(F.min_by(F.struct(id_col, "__q"), F.col(id_col)).alias("__rep"))
+        .select(
+            "cluster",
+            F.col("__rep")[id_col].alias("rep_id"),
+            F.col("__rep.__q").alias("__q"),
+        )
+        .collect()
+    }
     rep_id = F.lit(None).cast("long")
     rep_d = F.lit(None).cast("long")
     for j in sorted(reps, reverse=True):

@@ -171,16 +171,6 @@ def quality_bins(text: Column, edges: Sequence[float] = (0.4, 0.7, 0.9)) -> Colu
     return b
 
 
-def lang_scores(text: Column) -> list[Column]:
-    """One marker-hit-count column per language."""
-    toks = tokens(F.lower(text))
-    cols = []
-    for lang, markers in LANG_MARKERS.items():
-        arr = F.array(*[F.lit(w) for w in markers])
-        cols.append(F.size(F.array_intersect(toks, arr)).alias(f"score_{lang}"))
-    return cols
-
-
 def lang_id(text: Column) -> Column:
     """argmax language by distinct marker hits; 'und' when no marker
     matches. Ties resolve in LANG_MARKERS order (en, es, fr, de)."""

@@ -242,9 +242,3 @@ def exact_unique_count(
         F.count_distinct(F.col(vc)).alias(f"{vc}_unique_count") for vc in value_cols
     ]
     return bucketed.groupBy(entity_col, "bucket_start").agg(*exprs)
-
-
-def retention_filter(partials: DataFrame, cutoff_micros: int) -> DataFrame:
-    """Keep only buckets at/after the cutoff — the delete step of a
-    retention policy (fine tiers age out first; see plans.tiers)."""
-    return partials.filter(F.col("bucket_start") >= F.lit(cutoff_micros))

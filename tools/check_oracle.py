@@ -75,14 +75,12 @@ def main():
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
-    from timeseriesflattener_spark.operators.dedup import release_shingle_caches
-    from timeseriesflattener_spark.operators.pipeline import release_pipeline_caches
-    from timeseriesflattener_spark.operators.similarity import release_kmeans_caches
+    from timeseriesflattener_spark.session import release_frames
 
     for name, fn in queries.items():
         if only and name not in only:
             continue
-        release_shingle_caches(); release_pipeline_caches(); release_kmeans_caches()
+        release_frames()
         try:
             sdf = fn(spark, sf_dir)
             srows = [r.asDict() for r in sdf.collect()]
