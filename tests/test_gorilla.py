@@ -4,12 +4,14 @@ encode/decode roundtrip + compression sanity (SURVEY.md §5 strategy (c))."""
 from __future__ import annotations
 
 import math
+import os
 
 import numpy as np
 import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from timeseriesflattener_spark.functions.gorilla import (
     _decode_blobs,
@@ -23,6 +25,7 @@ from timeseriesflattener_spark.sources.transcripts import (
     derive_channels,
     synthesize_transcripts,
 )
+from timeseriesflattener_spark.testing import jobs_started
 
 from . import gorilla_reference as ref
 
@@ -290,3 +293,94 @@ def test_decode_column_pruning(spark, tmp_path):
 
     with _pytest.raises(ValueError, match="unknown decode columns"):
         decode_chunks(chunks, columns=["nope"])
+
+
+# --------------------------------------------- stage sizing and carry path
+
+_HOUR_US = 3_600_000_000
+
+
+def _points_frame(spark, n_convs: int):
+    """(conv_id, turn_idx, ts, value) rows: conversation i holds
+    i % 13 + 1 points over three hours, with repeated timestamps
+    (ordered by turn_idx), NaN and -0.0. Returns the frame and each
+    (conv_id, chunk_start) group's points as (ts µs, value) in encode
+    order."""
+    rng = np.random.default_rng(7)
+    rows, groups = [], {}
+    for i in range(n_convs):
+        conv = f"c{i:03d}"
+        ts = np.sort(1_700_000_000_000_000 + rng.integers(0, 3 * _HOUR_US, i % 13 + 1))
+        ts[1::4] = ts[::4][: len(ts[1::4])]  # ties, broken by turn_idx
+        ts.sort()
+        vals = rng.choice([np.nan, -0.0, 1.5, 2.0, rng.standard_normal()], len(ts))
+        for k, (t, v) in enumerate(zip(ts, vals)):
+            rows.append((conv, k, int(t), float(v)))
+            groups.setdefault((conv, int(t) // _HOUR_US * _HOUR_US), []).append((int(t), float(v)))
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, ts_us long, value double"
+    ).select("conv_id", "turn_idx", F.timestamp_micros("ts_us").alias("ts"), "value")
+    return df, groups
+
+
+def _chunk_rows(chunks) -> list[tuple]:
+    return sorted(
+        (r["conv_id"], r["chunk_start"], r["n_points"], r["raw_bytes"], bytes(r["chunk"]))
+        for r in chunks.collect()
+    )
+
+
+def test_small_encode_runs_one_python_task(spark, tmp_path):
+    """AQE sizes the encode shuffle: a small input encodes in one Python
+    task and writes one archive file, and decoding that archive runs one
+    task."""
+    df, groups = _points_frame(spark, 20)
+    path = str(tmp_path / "archive")
+
+    def last_stage_tasks(jobs: list[int]) -> int:
+        tracker = spark.sparkContext.statusTracker()
+        stage = max(s for j in jobs for s in tracker.getJobInfo(j).stageIds)
+        return tracker.getStageInfo(stage).numTasks
+
+    _, jobs = jobs_started(spark, lambda: encode_chunks(df, "value", tier="1h").write.parquet(path))
+    files = [f for f in os.listdir(path) if f.endswith(".parquet")]
+    assert len(files) == 1, files
+    assert last_stage_tasks(jobs) == 1
+
+    chunks = spark.read.parquet(path)
+    assert chunks.count() == len(groups)
+    _, jobs = jobs_started(spark, lambda: decode_chunks(chunks).write.format("noop").mode("overwrite").save())
+    assert last_stage_tasks(jobs) == 1
+
+
+def test_encode_chunks_identical_across_batches_and_partitions(spark):
+    """The batch carry path: groups split across Arrow batches
+    (maxRecordsPerBatch=3) and spread over every shuffle partition
+    (coalescing off) encode to the same chunk rows as the default run,
+    and each chunk equals the reference encode of its group."""
+    df, groups = _points_frame(spark, 40)
+    runs = {
+        "default": {},
+        "split batches": {"spark.sql.execution.arrow.maxRecordsPerBatch": "3"},
+        "no coalescing": {"spark.sql.adaptive.coalescePartitions.enabled": "false"},
+    }
+    got = {}
+    for name, conf in runs.items():
+        old = {k: spark.conf.get(k) for k in conf}
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        try:
+            got[name] = _chunk_rows(encode_chunks(df, "value", tier="1h"))
+        finally:
+            for k, v in old.items():
+                spark.conf.set(k, v)
+    assert got["split batches"] == got["default"]
+    assert got["no coalescing"] == got["default"]
+
+    want = []
+    for (conv, start), pts in groups.items():
+        ts = np.array([t for t, _ in pts], dtype=np.int64)
+        vals = np.array([v for _, v in pts], dtype=np.float64)
+        want.append((conv, start, len(pts), 16 * len(pts), ref.encode_series(ts, vals)))
+    assert got["default"] == sorted(want)
+    assert max(n for _, _, n, _, _ in want) > 3  # some group spans batches

@@ -350,7 +350,6 @@ def encode_chunks(
     entity_col: str = "conv_id",
     ts_col: str = "ts",
     order_col: str | None = "turn_idx",
-    target_partitions: int | None = None,
 ) -> DataFrame:
     """(entity, ts, value) rows -> one Gorilla chunk row per
     (entity, tier bucket).
@@ -362,13 +361,16 @@ def encode_chunks(
     serializer overhead — measured ~7x slower with small chunks
     (40k groups x 2.5 points: 16s vs 2s).
 
-    ``target_partitions`` sizes the encode shuffle. Default = the
-    cluster's defaultParallelism, NOT spark.sql.shuffle.partitions:
-    every partition pays a Python-worker handshake + Arrow stream
-    setup, so oversplitting a Pandas-UDF stage costs real time
-    (96 vs 32 partitions on the same 100k rows measured 5.3s vs 2.2s).
-    At cluster scale pass an explicit value sized so partitions stay
-    within executor memory (~1-5M points each).
+    The shuffle has no partition count: AQE coalescing sizes the
+    encode stage (on in every ``session.get_spark`` session), so each
+    Python task gets ~1 MB or more of input, up to the session's
+    parallelism. Every Python task pays a fixed 0.13-0.17 s of worker
+    CPU before it reads a row — PySpark's per-task
+    ``importlib.invalidate_caches()`` makes each zipimporter re-read
+    ``pyspark.zip`` — against 0.02-0.04 s of Gorilla kernels per
+    task, so a small input encodes in one task and writes one file
+    (measured on a 4-CPU host). Chunks are grouped and sorted as
+    before, so every chunk row is the same whatever the split.
     """
     bucketed = df.select(
         F.col(entity_col).alias("conv_id"),
@@ -378,10 +380,7 @@ def encode_chunks(
         *([F.col(order_col).alias("__ord")] if order_col else []),
     )
     sort_cols = ["conv_id", "chunk_start", "__ts_micros"] + (["__ord"] if order_col else [])
-    n_parts = target_partitions or df.sparkSession.sparkContext.defaultParallelism
-    arranged = bucketed.repartition(n_parts, "conv_id", "chunk_start").sortWithinPartitions(
-        *sort_cols
-    )
+    arranged = bucketed.repartition("conv_id", "chunk_start").sortWithinPartitions(*sort_cols)
 
     def enc_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         carry: pd.DataFrame | None = None

@@ -605,7 +605,9 @@ def pack_documents(
     ``sortWithinPartitions`` arranging each shard's docs contiguously
     in md5 order and a per-shard carry dict across Arrow batches (the
     Gorilla-encode pattern — measured far cheaper than per-group
-    applyInPandas). Parallelism therefore equals ``n_shards``: at
+    applyInPandas). Parallelism is therefore at most ``n_shards``, and
+    AQE coalescing merges small shards into one Python task (each task
+    pays a fixed Python-worker cost, as in ``encode_chunks``): at
     100 TB you pick n_shards for bounded shard size anyway, and each
     task is one linear pass. Determinism: the md5 order is
     partition-layout-free and the scan is order-defined, so output is
@@ -622,10 +624,8 @@ def pack_documents(
     out = _with_hash_order(
         df.select(F.col(id_col), toks.alias("__t")), id_col, salt, n_shards
     )
-    sc = out.sparkSession.sparkContext
-    nparts = max(1, min(n_shards, sc.defaultParallelism))
     arranged = (
-        out.repartition(nparts, "shard")
+        out.repartition("shard")
         .sortWithinPartitions("shard", "__h")
         .select(id_col, "shard", "__t")
     )
